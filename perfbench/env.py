@@ -3,10 +3,11 @@ Python workers, temp files and outputs all stay inside the checkout.
 
 Settings (also listed in perfbench/README.md):
 
-- ``local[CORES]`` with CORES = min(4, nproc), shuffle partitions = CORES;
+- ``local[CORES]`` with CORES = min(2, nproc), shuffle partitions = CORES;
 - driver heap fixed at HEAP with ``-Xms`` = ``-Xmx`` and pre-touched, G1
   GC, so resident memory does not depend on when the collector runs
-  (the engine default is a lazily committed 32g heap);
+  (the engine default is a lazily committed 32g heap); 2 parallel GC
+  threads, 1 concurrent GC thread, 2 JIT compiler threads;
 - the engine's Python-worker allocator tuning switched off
   (``SPARK_GRAFT_NO_ALLOC_TUNING``): with it, every worker keeps its
   high-water heap, so worker memory would reflect which batches each
@@ -26,10 +27,16 @@ import time
 
 from procs import ProcTree, descendants
 
-CORES = min(4, os.cpu_count() or 1)
+# Two task threads on a 4-vCPU host: a deep-crawl round already keeps
+# ~2.7 cores busy at local[2] (JIT threads compile ~100 fresh code-
+# generated classes a round), so more task threads only queue behind the
+# JIT and the GC and make the round time follow the host's load.
+CORES = min(2, os.cpu_count() or 1)
 HEAP = "2g"
 JAVA_OPTS = (
     f"-Xms{HEAP} -XX:+AlwaysPreTouch -XX:+UseG1GC -XX:-UsePerfData "
+    # GC and JIT thread counts pinned rather than sized from nproc
+    "-XX:ParallelGCThreads=2 -XX:ConcGCThreads=1 -XX:CICompilerCount=2 "
     # kept from the engine's session defaults (session.get_spark)
     "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=128"
 )

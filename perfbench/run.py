@@ -2,7 +2,7 @@
 
 Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload wide_round --seed 1 --seconds 16 --trace 0
+    python3 perfbench/run.py --workload wide_round --seed 1 --seconds 6 --trace 0
 
 Prints detail lines starting with ``#`` (world size, settings, window
 steadiness, every metric with its unit), then as the last line one JSON

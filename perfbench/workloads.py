@@ -38,7 +38,12 @@ DEEP_WORLD = {"docs_per_source": 100, "skew": 10, "budget_base": 20,
 # plateau test to stop at the same point in every run.
 WIDE_WARM_REPS = 2      # warm-up rounds, each on a throwaway store
 DEEP_WARM_ROUNDS = 2    # the crawl's own rounds 0 (only the 24 seeds) and 1
-MIN_OPS = 2             # a window holds at least this many operations
+# A window holds at least this many operations, and the rates are their
+# median: one operation slowed by a burst of load elsewhere on the host
+# does not move the result.  Deep rounds are mostly job scheduling and
+# code generation, whose wall time follows the host's load most closely.
+WIDE_MIN_OPS = 2
+DEEP_MIN_OPS = 4
 
 
 def crawl_config():
@@ -103,6 +108,7 @@ class CrawlWorkload:
 
     name = ""
     world_params: dict = {}
+    min_ops = 1
 
     def __init__(self, env: BenchEnv, seed: int, trace: bool):
         self.env = env
@@ -165,7 +171,7 @@ class CrawlWorkload:
     def run_window(self, seconds: float) -> None:
         env, procs = self.env, self.env.procs
         elapsed, i = 0.0, 0
-        while elapsed < seconds or i < MIN_OPS:
+        while elapsed < seconds or i < self.min_ops:
             eng, r = self.prepare(i)
             op = {"i": i, "round": r, "ok": False, "store": eng.catalog.root}
             if self.trace:
@@ -209,12 +215,17 @@ class CrawlWorkload:
 
     def end_to_end(self) -> dict:
         walls = [o["wall_s"] for o in self.ops]
-        total = sum(walls)
         done = [o for o in self.ops if "m" in o]
+
+        def rate(key: str) -> float:
+            if not done:
+                return 0.0
+            return statistics.median(o["m"][key] / o["wall_s"] for o in done)
+
         return {
             "setup_s": sum(self.setup_parts.values()),
-            "urls_per_s": sum(o["m"]["selected"] for o in done) / total,
-            "pages_per_s": sum(o["m"]["pages"] for o in done) / total,
+            "urls_per_s": rate("selected"),
+            "pages_per_s": rate("pages"),
             "round_p50_s": statistics.median(walls),
             "peak_rss_mb": self.env.procs.peak_mb["total"],
             "ok_ratio": sum(o["ok"] for o in self.ops) / len(self.ops),
@@ -226,6 +237,8 @@ class CrawlWorkload:
         return {
             "ops": len(walls),
             "op_walls_s": [round(w, 3) for w in walls],
+            "op_selected": [o.get("m", {}).get("selected") for o in self.ops],
+            "op_cpu_s": [round(sum(o["cpu"].values()), 2) for o in self.ops],
             "first_over_median": walls[0] / med,
             "warmup_walls_s": [round(w, 3) for w in self.warm_walls],
             "peak_rss_mb": {
@@ -321,6 +334,7 @@ class WideRound(CrawlWorkload):
 
     name = "wide_round"
     world_params = WIDE_WORLD
+    min_ops = WIDE_MIN_OPS
 
     def setup(self) -> None:
         t = time.perf_counter()
@@ -435,6 +449,7 @@ class DeepCrawl(CrawlWorkload):
 
     name = "deep_crawl"
     world_params = DEEP_WORLD
+    min_ops = DEEP_MIN_OPS
 
     def setup(self) -> None:
         t = time.perf_counter()
