@@ -24,19 +24,24 @@ from pyspark.sql import functions as F
 
 
 def canonicalize_url(url: Column) -> Column:
-    """Canonical URL as a single codegen-able expression chain."""
-    u = F.trim(url)
-    # drop fragment
-    u = F.regexp_replace(u, r"#.*$", "")
+    """Canonical URL as a single codegen-able expression chain.
+
+    Idempotent for any input string (property-tested): no step leaves
+    work for a later pass.  The fragment goes first, so the trim also
+    removes spaces before a ``#``; port and slash rules never strip next
+    to a space, so they cannot expose a new trailing one; ``(?s)`` and
+    ``\\z`` keep a newline from hiding the end of the input."""
+    # drop fragment (everything from the first '#', newlines included)
+    u = F.trim(F.regexp_replace(url, r"(?s)#.*", ""))
     # lowercase scheme://host[:port] part only (keep path case)
     head = F.regexp_extract(u, r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/]*)", 1)
     tail = F.substring(u, F.length(head) + F.lit(1), F.lit(2_000_000))
     u = F.concat(F.lower(head), tail)
     # strip default ports
-    u = F.regexp_replace(u, r"^(https://[^/:]+):443(/|$)", r"$1$2")
-    u = F.regexp_replace(u, r"^(http://[^/:]+):80(/|$)", r"$1$2")
+    u = F.regexp_replace(u, r"^(https://[^/: ]+):443(/|\z)", r"$1$2")
+    u = F.regexp_replace(u, r"^(http://[^/: ]+):80(/|\z)", r"$1$2")
     # drop trailing slash on non-root paths (“…/a/” == “…/a”)
-    u = F.regexp_replace(u, r"([^/])/$", r"$1")
+    u = F.regexp_replace(u, r"([^/ ])/\z", r"$1")
     return u
 
 

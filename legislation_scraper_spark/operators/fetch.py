@@ -451,16 +451,16 @@ def parse_retry_after(value: "F.Column", now: "F.Column") -> "F.Column":
     ``E``-symbols only for FORMATTING, not parsing (documented pattern
     restriction), and the day name is redundant with the date anyway.
     Unparseable values yield NULL (callers fall back to their fixed
-    backoff) rather than failing the round.  Delta-seconds are bounded
-    to 10 digits: a hostile 20-digit value matches ``^[0-9]+$`` but
-    overflows the long cast, which THROWS under ANSI mode (Spark 4
-    default) — try_cast keeps the documented NULL-on-unparseable
-    contract for oversized deltas too.
+    backoff) rather than failing the round.  Delta-seconds are any run
+    of digits, leading zeros included (``"0005"`` is 5 s).  A value too
+    large for a long, or one that fits but overflows when added to
+    ``now``, would THROW on a plain cast or ``+`` under ANSI mode
+    (Spark 4 default); try_cast and try_add turn both into NULL.
     """
-    delta_form = value.rlike("^[0-9]{1,10}$")
+    delta_form = value.rlike("^[0-9]+$")
     fixdate = F.try_to_timestamp(
         F.substring(value, 6, 24), F.lit("dd MMM yyyy HH:mm:ss 'GMT'")
     )
     return F.when(
-        delta_form, now.cast("long") + value.try_cast("long")
+        delta_form, F.try_add(now.cast("long"), value.try_cast("long"))
     ).otherwise(fixdate.cast("long"))

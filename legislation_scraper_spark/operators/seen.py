@@ -6,9 +6,10 @@ build_dataset.py:204).  At 10^10 frontier URLs that is not an option:
 the seen set must be probed every crawl round.
 
 Two-tier design (north rule: "partitioned bloom/cuckoo-filter URL-seen
-set keyed by canonicalized URL hash"):
+set keyed by canonicalized URL hash"; this module implements the Bloom
+variant):
 
-1. **Partitioned Bloom pre-filter** — the seen table is sharded by
+1. **Partitioned Bloom pre-filter** — keys are sharded by
    ``pmod(url_hash, n_shards)``; each shard materializes a Bloom bitmap
    (numpy, built in ``applyInPandas`` — one pass, no driver rows).
    Candidates probe only their shard's bitmap.  A Bloom *miss* proves
@@ -18,8 +19,12 @@ set keyed by canonicalized URL hash"):
    bulk of the anti-join's probe side.
 2. **Exact anti-join backstop** — Bloom *hits* (possible false
    positives) are verified with a ``left_anti`` join against the exact
-   seen table on ``(shard, url_hash, url)``.  Correctness never depends
-   on the filter (tests/test_seen.py property-checks this).
+   seen log on ``canon_url``.  Correctness never depends on the filter
+   (tests/test_urls_seen.py property-checks this).
+
+The crawl engine's exact log is its ``crawl_log`` (every attempted URL,
+bucketed by ``canon_url``); the Bloom bitmaps are derived state over the
+same rows, appended per round as deltas.
 
 Scale notes: shard bitmaps are sized from expected keys/shard and the
 target FPP; at 10^10 URLs with 4096 shards and 1% FPP each shard bitmap
@@ -158,12 +163,14 @@ def bloom_probe(
 
 
 class SeenSet:
-    """Exact seen table + probabilistic pre-filter, snapshot-backed.
+    """Exact seen log + Bloom pre-filter, snapshot-backed.
 
-    ``filter_kind``: "bloom" (default — smallest bitmaps) or "cuckoo"
-    (operators/cuckoo.py — deletable fingerprints, lower FPP, ~2× the
-    bytes/key).  Both give the same contract: a pre-filter MISS proves
-    the URL is new; HITS verify against the exact table.
+    ``table`` is the exact side: any log carrying ``(canon_url,
+    url_hash, shard)``.  The crawl engine passes its ``crawl_log`` (one
+    row per attempt, bucketed by ``canon_url``), so the seen set is a
+    projection of the attempts log rather than a table of its own.  A
+    pre-filter MISS proves the URL is new; HITS verify against the
+    exact log.
     """
 
     def __init__(
@@ -171,24 +178,17 @@ class SeenSet:
         table,
         n_shards: int = 64,
         fpp: float = 0.01,
-        filter_kind: str = "bloom",
         filters_table=None,
         keys_per_shard: int = 65536,
     ):
-        self.table = table  # tables.Table with (shard, url_hash, canon_url)
+        self.table = table
         self.n_shards = n_shards
         self.fpp = fpp
-        self.filter_kind = filter_kind
         # incremental filter state (SURVEY.md §4 "incremental partitioned
-        # filter"): per-add DELTA filters appended to ``filters_table``
-        # and folded at probe time — the probe never rescans the full
-        # seen table.  Requires FIXED geometry across batches, sized by
+        # filter"): per-batch DELTA bitmaps appended to ``filters_table``
+        # and OR-merged at probe time — the probe never rescans the
+        # exact log.  Requires FIXED geometry across batches, sized by
         # ``keys_per_shard`` capacity (resize = rebuild maintenance).
-        # Bloom deltas OR-merge bitwise; cuckoo deltas merge by
-        # fingerprint re-insertion (cuckoo.merge_tables — alt() is an
-        # involution so (bucket, fp) is a valid candidate pair), with a
-        # saturated-shard NULL marker degrading that shard to the exact
-        # anti-join rather than ever producing a false negative.
         self.filters_table = filters_table
         self.keys_per_shard = keys_per_shard
 
@@ -199,35 +199,35 @@ class SeenSet:
         return self.table.read()
 
     def add(self, urls: DataFrame, url_col: str = "url") -> None:
-        """Record URLs as seen (idempotent via downstream anti-joins).
-
-        Also appends this batch's DELTA bitmaps to the filter-state
-        table (when configured): probes then OR-merge small blobs
-        instead of rescanning the full seen table every round."""
-        keyed = with_url_key(urls.select(url_col), url_col, self.n_shards)
-        rows = keyed.select("shard", "url_hash", "canon_url").distinct()
-        if self.filters_table is not None:
-            # the distinct-keyed rows feed TWO writes (seen rows + delta
-            # filter blobs); persist so the dedup shuffle runs once
-            rows = rows.persist()
-        self.table.append(rows)
-        if self.filters_table is not None:
-            if self.filter_kind == "cuckoo":
-                from .cuckoo import build_cuckoo_delta_shards, n_buckets_for
-
-                delta = build_cuckoo_delta_shards(
-                    rows, n_buckets_for(self.keys_per_shard)
-                )
-            else:
-                delta = build_bloom_shards(
-                    rows, self._params(), self.n_shards
-                )
-            self.filters_table.append(delta)
+        """Record raw URLs as seen (idempotent via downstream
+        anti-joins): key them, append the distinct keys to the exact
+        table, then their delta bitmaps via :meth:`add_filters`."""
+        rows = (
+            with_url_key(urls.select(url_col), url_col, self.n_shards)
+            .select("shard", "url_hash", "canon_url")
+            .distinct()
+            .persist()  # feeds the exact append AND the delta bitmaps
+        )
+        try:
+            self.table.append(rows)
+            self.add_filters(rows)
+        finally:
             rows.unpersist()
 
+    def add_filters(self, keyed: DataFrame) -> None:
+        """Append the delta bitmaps of already-keyed rows (``shard``,
+        ``url_hash``) to the filter log, when there is one.  The engine
+        calls this on the round's attempted rows directly — their keys
+        come from ``frontier_log``, so no re-keying or dedup shuffle is
+        needed (duplicate keys set the same bits)."""
+        if self.filters_table is not None:
+            self.filters_table.append(
+                build_bloom_shards(keyed, self._params(), self.n_shards)
+            )
+
     def merged_filters(self) -> DataFrame | None:
-        """One folded filter per shard from the delta log (bloom:
-        bitwise OR; cuckoo: fingerprint re-insertion)."""
+        """One bitwise-OR-folded Bloom bitmap per shard from the delta
+        log."""
         log = (
             self.filters_table.read()
             if self.filters_table is not None
@@ -235,10 +235,6 @@ class SeenSet:
         )
         if log is None:
             return None
-        if self.filter_kind == "cuckoo":
-            from .cuckoo import merge_cuckoo_shards
-
-            return merge_cuckoo_shards(log)
 
         def merge(pdf: pd.DataFrame) -> pd.DataFrame:
             acc = np.zeros(0, dtype=np.uint8)
@@ -270,32 +266,27 @@ class SeenSet:
             self.filters_table.overwrite(merged)
 
     def filter_unseen(
-        self, candidates: DataFrame, url_col: str = "url"
+        self, cand: DataFrame, url_col: str = "canon_url"
     ) -> DataFrame:
-        """Rows of ``candidates`` whose URL is not in the seen set.
+        """Rows of ``cand`` whose URL is not in the seen set.
 
-        Bloom pre-filter first (provably-new rows bypass the join),
-        exact left_anti verification for the maybe-seen remainder.
+        ``cand`` must carry ``(canon_url, url_hash, shard)`` from
+        :func:`with_url_key` with this set's ``n_shards`` (frontier rows
+        do): a shard computed for another shard count would probe the
+        wrong bitmap.  Keys are never recomputed here; ``url_col`` only
+        keeps callers that still pass ``"canon_url"`` working.
+
+        Bloom pre-filter first (provably-new rows bypass the join), then
+        an exact ``left_anti`` on ``canon_url`` — the canonical URL
+        determines the other two keys — for the maybe-seen remainder.
+        With a bucketed exact log the join reads it without an
+        Exchange; only the candidates shuffle.
         """
-        cand = with_url_key(candidates, url_col, self.n_shards)
         seen = self.df()
         if seen is None:
             return cand
-        merged = (
-            self.merged_filters() if self.filters_table is not None else None
-        )
-        if self.filter_kind == "cuckoo":
-            from .cuckoo import build_cuckoo_shards, cuckoo_probe
-
-            # incremental path when a delta log exists (probe cost
-            # independent of total seen); stateless rebuild otherwise
-            shards = (
-                merged
-                if merged is not None
-                else build_cuckoo_shards(seen, self.n_shards)
-            )
-            probed = cuckoo_probe(cand, shards)
-        elif merged is not None:
+        merged = self.merged_filters()
+        if merged is not None:
             # incremental path: OR-merge the persisted delta bitmaps —
             # no rescan of the exact seen table to build filters
             probed = bloom_probe(cand, merged, self._params())
@@ -317,8 +308,6 @@ class SeenSet:
         surely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
         verified_new = maybe.join(
-            seen.select("shard", "url_hash", "canon_url"),
-            ["shard", "url_hash", "canon_url"],
-            "left_anti",
+            seen.select("canon_url"), "canon_url", "left_anti"
         )
         return surely_new.unionByName(verified_new)

@@ -6,21 +6,30 @@ database/saver.py:63-87) with a Spark-first incremental-batch loop
 (SURVEY.md §3 "Spark rebuild lifecycle"):
 
   round r:
-    pending    = frontier_log ⟂ seen          (bloom pre-filter + anti-join)
+    pending    = frontier_log ⟂ crawl_log   (bloom pre-filter + anti-join)
     selected   = robots ⋈ pending → window rank ≤ budget → salted repartition
-    results    = fetch(selected)               (mapInPandas transport)
-    pages     += extract_doc(fetched docs)     (Arrow UDF, byte-parity)
-    frontier  += extract_links(fetched search) (new URLs, depth+1)
-    errors    += failures (fetch + parse)
-    seen      += every attempted URL
-    crawl_log += (round, host, host_rank, url) (ordering contract)
-    catalog.save_checkpoint(r, {table: version})   ← atomic multi-table commit
+    results    = fetch(selected)            (mapInPandas transport)
+    pages        += extract_doc(fetched docs)     (Arrow UDF, byte-parity)
+    frontier_log += extract_links(fetched search) (new URLs, depth+1)
+    fetch_errors += failures (fetch + parse)
+    crawl_log    += every attempted URL: round, host, host_rank, keys,
+                    outcome (ordering contract AND exact seen set)
+    seen_filters += Bloom delta bitmaps of the same rows
+    catalog.save_checkpoint(r + 1, {every owned table: version})
+                                        ← atomic multi-table commit
 
 Tables are append-only logs; "state" (FIXTURES.md §3 pending/fetched/
-error) is derived: pending = discovered ∖ attempted.  This is the
+error) is derived: pending = discovered ∖ attempted, and a URL's
+fetched/error state is its ``crawl_log.fetched``.  This is the
 merge-on-read pattern — no per-round rewrite of a 10^10-row frontier,
 just appends plus the anti-join at read time (Iceberg MERGE/compaction
-would periodically fold the log at scale).
+would periodically fold the log at scale).  ``frontier_log`` and
+``crawl_log`` are both bucketed by ``canon_url``, so pending()'s dedup
+and its exact anti-join read them without an Exchange.
+
+Every checkpoint records the version of EVERY table the engine owns
+(0 for a table still empty), so resume rolls back a torn commit to any
+of them, whichever sink it came from.
 
 Shuffle budget per round (SURVEY.md §4): the seen anti-join, the
 politeness window rank, and the salted repartition — three shuffles,
@@ -83,11 +92,10 @@ class CrawlConfig:
     # must stay fixed across delta batches for OR-merge); resize is a
     # rebuild-maintenance action
     filter_keys_per_shard: int = 65536
-    # store the frontier log bucketed by canon_url (Iceberg
-    # bucket-transform analogue): pending()'s per-round dedup groupBy
-    # then runs with NO Exchange over the log (tables.BucketedLog;
-    # asserted in tests/test_plans.py)
-    bucket_frontier: bool = True
+    # buckets of the canon_url-bucketed logs (frontier_log, crawl_log;
+    # Iceberg bucket-transform analogue): pending()'s per-round dedup
+    # groupBy and its exact anti-join then run with NO Exchange over
+    # either log (tables.BucketedLog; asserted in tests/test_plans.py)
     frontier_buckets: int = 32
     # snapshot-expiry maintenance (tables.Catalog.expire_all): every
     # N rounds, drop manifests/data below the keep horizon while
@@ -162,17 +170,17 @@ class CrawlEngine:
         self.seeds = seeds
         self.robots = robots
         self.cfg = config or CrawlConfig()
-        self.frontier = (
-            catalog.bucketed_log(
-                "frontier_log", "canon_url", self.cfg.frontier_buckets
-            )
-            if self.cfg.bucket_frontier
-            else catalog.table("frontier_log")
+        self.frontier = catalog.bucketed_log(
+            "frontier_log", "canon_url", self.cfg.frontier_buckets
         )
         self.pages = catalog.table("pages")
         self.errors = catalog.table("fetch_errors")
-        self.visited = catalog.table("visited")
-        self.crawl_log = catalog.table("crawl_log")
+        # one row per attempt: the ordering contract, the visit record
+        # and the exact side of the seen set, stored once
+        self.crawl_log = catalog.bucketed_log(
+            "crawl_log", "canon_url", self.cfg.frontier_buckets
+        )
+        self.visited = self.crawl_log  # the visit record; perfbench reads it
         self.host_edges = (
             catalog.table("host_edges")
             if self.cfg.record_host_edges
@@ -188,13 +196,29 @@ class CrawlEngine:
             else None
         )
         self.seen = SeenSet(
-            catalog.table("seen"),
+            self.crawl_log,
             self.cfg.n_shards,
             self.cfg.bloom_fpp,
             # incremental filter state: per-round delta bitmaps, OR-merged
             # at probe — the probe cost no longer scales with total seen
             filters_table=catalog.table("seen_filters"),
             keys_per_shard=self.cfg.filter_keys_per_shard,
+        )
+
+    def owned_tables(self) -> dict:
+        """Every table the engine writes, by name — the checkpoint's
+        version map covers all of them."""
+        owned = [
+            self.frontier, self.pages, self.errors, self.crawl_log,
+            self.seen.filters_table, self.host_edges, self.url_state,
+        ]
+        return {t.name: t for t in owned if t is not None}
+
+    def _checkpoint(self, tag: int, metrics: dict | None = None) -> None:
+        self.catalog.save_checkpoint(
+            tag,
+            {n: t.current_version() for n, t in self.owned_tables().items()},
+            metrics,
         )
 
     # -- lifecycle ------------------------------------------------------------
@@ -222,8 +246,8 @@ class CrawlEngine:
             F.lit(0).alias("depth"),
             F.lit(0).alias("discovered_round"),
         )
-        v = self.frontier.append(f)
-        self.catalog.save_checkpoint(0, {"frontier_log": v})
+        self.frontier.append(f)
+        self._checkpoint(0)
 
     def resume(self) -> int:
         """Roll all tables back to the last complete round; return it."""
@@ -241,7 +265,7 @@ class CrawlEngine:
         best = self._best_frontier()
         if best is None:
             return None
-        return self.seen.filter_unseen(best, "canon_url")
+        return self.seen.filter_unseen(best)
 
     def _best_frontier(self) -> DataFrame | None:
         """One row per canonical URL in the frontier log (earliest
@@ -542,7 +566,7 @@ class CrawlEngine:
         The trigger threshold is per-table: a bucketed log legitimately
         holds one file per bucket per commit, so its fan-in budget is
         buckets × 12, not 12."""
-        tables = [self.frontier, self.seen.table, self.visited]
+        tables = [self.frontier, self.crawl_log]
         if self.url_state is not None:
             tables.append(self.url_state)
         for t in tables:
@@ -627,278 +651,262 @@ class CrawlEngine:
         # MEMORY_AND_DISK persist (not localCheckpoint): lineage stays
         # intact, so an executor loss on a real cluster recomputes the
         # partition instead of failing the job.
-        raw = fetch(
-            selected, self.pages_raw, self.cfg.policy, self.cfg.transport
-        )
-        is_search = F.col("canon_url").contains(self.cfg.search_marker)
-        # ONE pass over the fetch output: a single combined parse UDF
-        # (docs + search pages) so the body bytes cross the Python
-        # boundary exactly once per round; cache WITHOUT the body —
-        # the cached working set is metadata + text, not raw html.
-        parse_page = make_parse_page(self.cfg.search_marker)
-        # content digest for the url_state validator tier — computed in
-        # the SAME pass that parses (body bytes are in hand; md5 is
-        # codegen), so tracking costs no extra scan of the fetch output
-        state_cols = (
-            [F.when(F.col("fetched"), F.md5(F.col("body"))).alias("digest")]
-            if self.url_state is not None
-            else []
-        )
-        parsed = raw.select(
-            *[c for c in raw.columns if c != "body"],
-            *state_cols,
-            F.when(
-                F.col("fetched"), parse_page("canon_url", "body")
-            ).alias("p"),
-        ).select(
-            "*", F.col("p.rec").alias("rec"), F.col("p.l").alias("l")
-        ).drop("p").cache()
-        # one aggregation pass for every round metric (vs one job each)
-        is_page = (
-            F.col("fetched") & ~is_search & ~F.coalesce("rec.is_error", F.lit(True))
-        )
-        is_err = ~F.col("fetched") | (
-            F.col("fetched") & ~is_search & F.coalesce("rec.is_error", F.lit(True))
-        )
-        counts = parsed.agg(
-            F.count("*").alias("n_sel"),
-            F.sum(F.col("fetched").cast("long")).alias("n_fetched"),
-            F.sum(is_page.cast("long")).alias("n_pages"),
-            F.sum(is_err.cast("long")).alias("n_err"),
-        ).collect()[0]
-        n_sel = counts["n_sel"]
-        t = _mark("schedule_fetch", t)
-        if n_sel == 0:
-            parsed.unpersist()
-            selected.unpersist()
-            return metrics
+        parsed = None
+        try:
+            raw = fetch(
+                selected, self.pages_raw, self.cfg.policy, self.cfg.transport
+            )
+            is_search = F.col("canon_url").contains(self.cfg.search_marker)
+            # ONE pass over the fetch output: a single combined parse UDF
+            # (docs + search pages) so the body bytes cross the Python
+            # boundary exactly once per round; cache WITHOUT the body —
+            # the cached working set is metadata + text, not raw html.
+            parse_page = make_parse_page(self.cfg.search_marker)
+            # content digest for the url_state validator tier — computed in
+            # the SAME pass that parses (body bytes are in hand; md5 is
+            # codegen), so tracking costs no extra scan of the fetch output
+            state_cols = (
+                [F.when(F.col("fetched"), F.md5(F.col("body"))).alias("digest")]
+                if self.url_state is not None
+                else []
+            )
+            parsed = raw.select(
+                *[c for c in raw.columns if c != "body"],
+                *state_cols,
+                F.when(
+                    F.col("fetched"), parse_page("canon_url", "body")
+                ).alias("p"),
+            ).select(
+                "*", F.col("p.rec").alias("rec"), F.col("p.l").alias("l")
+            ).drop("p").cache()
+            # one aggregation pass for every round metric (vs one job each)
+            is_page = (
+                F.col("fetched") & ~is_search & ~F.coalesce("rec.is_error", F.lit(True))
+            )
+            is_err = ~F.col("fetched") | (
+                F.col("fetched") & ~is_search & F.coalesce("rec.is_error", F.lit(True))
+            )
+            counts = parsed.agg(
+                F.count("*").alias("n_sel"),
+                F.sum(F.col("fetched").cast("long")).alias("n_fetched"),
+                F.sum(is_page.cast("long")).alias("n_pages"),
+                F.sum(is_err.cast("long")).alias("n_err"),
+            ).collect()[0]
+            n_sel = counts["n_sel"]
+            t = _mark("schedule_fetch", t)
+            if n_sel == 0:
+                return metrics
 
-        versions: dict[str, int] = {}
-        results = parsed  # attempted rows (all outcomes)
-        fetched = parsed.filter(F.col("fetched"))
+            results = parsed  # attempted rows (all outcomes)
+            fetched = parsed.filter(F.col("fetched"))
 
-        # --- extracted documents → pages (+ parse errors) ---
-        doc_rec = fetched.filter(~is_search)
-        good = doc_rec.filter(~F.col("rec.is_error"))
-        n_pages = int(counts["n_pages"] or 0)
-        pages_df = good.select(
-            F.col("canon_url").alias("document_url"),
-            "source",
-            F.col("rec.title").alias("title"),
-            F.col("rec.year").alias("year"),
-            F.col("rec.type").alias("type"),
-            F.col("rec.situation").alias("situation"),
-            F.col("rec.summary").alias("summary"),
-            F.col("rec.text").alias("text_markdown"),
-            # J2 enrichment payload (ficha metadata arrays + overflow map)
-            F.col("rec.themes").alias("themes"),
-            F.col("rec.keywords").alias("keywords"),
-            F.col("rec.extras").alias("extras"),
-            F.lit(r).alias("fetched_round"),
-        ).withColumns(
-            {
-                # ASCII partition twins (saver.py:119-125 parity; non-ASCII
-                # partition dirs break on non-UTF-8 JVM file encodings)
-                "type_slug": ascii_slug(F.col("type")),
-                "situation_slug": ascii_slug(F.col("situation")),
-            }
-        )
-        t = _mark("extract", t)
+            # --- extracted documents → pages (+ parse errors) ---
+            doc_rec = fetched.filter(~is_search)
+            good = doc_rec.filter(~F.col("rec.is_error"))
+            n_pages = int(counts["n_pages"] or 0)
+            pages_df = good.select(
+                F.col("canon_url").alias("document_url"),
+                "source",
+                F.col("rec.title").alias("title"),
+                F.col("rec.year").alias("year"),
+                F.col("rec.type").alias("type"),
+                F.col("rec.situation").alias("situation"),
+                F.col("rec.summary").alias("summary"),
+                F.col("rec.text").alias("text_markdown"),
+                # J2 enrichment payload (ficha metadata arrays + overflow map)
+                F.col("rec.themes").alias("themes"),
+                F.col("rec.keywords").alias("keywords"),
+                F.col("rec.extras").alias("extras"),
+                F.lit(r).alias("fetched_round"),
+            ).withColumns(
+                {
+                    # ASCII partition twins (saver.py:119-125 parity; non-ASCII
+                    # partition dirs break on non-UTF-8 JVM file encodings)
+                    "type_slug": ascii_slug(F.col("type")),
+                    "situation_slug": ascii_slug(F.col("situation")),
+                }
+            )
+            t = _mark("extract", t)
 
-        err_df = results.filter(~F.col("fetched")).select(
-            "canon_url", "host", "source",
-            F.lit(r).alias("round"), "status", "attempts",
-            F.col("fetch_error").alias("error"),
-        ).unionByName(
-            doc_rec.filter(F.col("rec.is_error")).select(
+            err_df = results.filter(~F.col("fetched")).select(
                 "canon_url", "host", "source",
                 F.lit(r).alias("round"), "status", "attempts",
-                F.lit("parse error / empty document").alias("error"),
+                F.col("fetch_error").alias("error"),
+            ).unionByName(
+                doc_rec.filter(F.col("rec.is_error")).select(
+                    "canon_url", "host", "source",
+                    F.lit(r).alias("round"), "status", "attempts",
+                    F.lit("parse error / empty document").alias("error"),
+                )
             )
-        )
-        n_err = int(counts["n_err"] or 0)
+            n_err = int(counts["n_err"] or 0)
 
-        links = (
-            fetched.filter(is_search)
-            .select(
-                "host", "source", "priority", "depth", "discovered_round",
-                F.explode(
-                    F.concat(
-                        F.col("l.doc_links"),
-                        F.when(
-                            F.col("l.next_link").isNotNull(),
-                            F.array(F.col("l.next_link")),
-                        ).otherwise(F.array().cast("array<string>")),
-                    )
-                ).alias("url"),
-            )
-        )
-        if self.cfg.scope_rules:
-            from ..sources.cdx import scope_filter
-
-            rules_df = self.spark.createDataFrame(
-                list(self.cfg.scope_rules),
-                "surt_prefix string, allow boolean",
-            )
             links = (
-                scope_filter(
-                    links,
-                    rules_df,
-                    url_col="url",
-                    default_allow=self.cfg.scope_default_allow,
+                fetched.filter(is_search)
+                .select(
+                    "host", "source", "priority", "depth", "discovered_round",
+                    F.explode(
+                        F.concat(
+                            F.col("l.doc_links"),
+                            F.when(
+                                F.col("l.next_link").isNotNull(),
+                                F.array(F.col("l.next_link")),
+                            ).otherwise(F.array().cast("array<string>")),
+                        )
+                    ).alias("url"),
                 )
-                .filter(F.col("allowed"))
-                .drop("surt", "allowed")
             )
-        new_front = with_url_key(
-            links.select(
-                "url",
-                # the CHILD's own host, not the linking page's — a
-                # cross-host link scheduled under the parent's host
-                # would evade the target host's politeness budget
-                # (links.host stays the parent host for the src side
-                # of host_edges below)
-                url_host(F.col("url")).alias("host"),
-                "source", "priority",
-                (F.col("depth") + 1).alias("depth"),
-                F.lit(r + 1).alias("discovered_round"),
-            ),
-            "url",
-            self.cfg.n_shards,
-        ).select(*FRONTIER_COLS).distinct()
+            if self.cfg.scope_rules:
+                from ..sources.cdx import scope_filter
 
-        # --- all round outputs write CONCURRENTLY ---------------------------
-        # Every sink below reads only the materialized `parsed` cache and
-        # writes its OWN table (separate snapshot dirs), so the six jobs
-        # are independent; submitting them from driver threads overlaps
-        # their fixed job-submission/stage latency (Spark runs concurrent
-        # jobs from one session; FIFO still fills free task slots).  On a
-        # cluster this is the same pattern as concurrent writes to
-        # independent Iceberg tables.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _co(df):
-            # bound files-per-commit (see CrawlConfig.sink_coalesce)
-            return (
-                df.coalesce(self.cfg.sink_coalesce)
-                if self.cfg.sink_coalesce
-                else df
-            )
-
-        def w_pages():
-            if n_pages:
-                versions["pages"] = self.pages.append(
-                    _co(pages_df),
-                    partition_cols=list(self.cfg.pages_partition_cols),
-                    metrics={"round": r},
+                rules_df = self.spark.createDataFrame(
+                    list(self.cfg.scope_rules),
+                    "surt_prefix string, allow boolean",
                 )
-
-        def w_errors():
-            if n_err:
-                versions["fetch_errors"] = self.errors.append(_co(err_df))
-
-        def w_links() -> int:
-            # single pass: append, then read the new-URL count from the
-            # commit's manifest lineage (computed from parquet footers
-            # during the append) — a separate count() job re-ran the
-            # whole distinct shuffle
-            v = self.frontier.append(new_front)
-            # manifest lineage records THIS commit's rows only
-            n = int(sum(self.frontier.snapshot(v).lineage.values()))
-            versions["frontier_log"] = v
-            return n
-
-        def w_seen():
-            self.seen.add(results.select("canon_url"), "canon_url")
-            versions["seen"] = self.seen.table.current_version()
-            if self.seen.filters_table is not None:
-                versions["seen_filters"] = (
-                    self.seen.filters_table.current_version()
-                )
-
-        def w_visited():
-            versions["visited"] = self.visited.append(
-                _co(
-                    results.select(
-                        "canon_url", "host", "source",
-                        F.lit(r).alias("round"), "status", "attempts",
-                        F.when(F.col("fetched"), F.lit("fetched"))
-                        .otherwise(F.lit("error"))
-                        .alias("state"),
+                links = (
+                    scope_filter(
+                        links,
+                        rules_df,
+                        url_col="url",
+                        default_allow=self.cfg.scope_default_allow,
                     )
+                    .filter(F.col("allowed"))
+                    .drop("surt", "allowed")
                 )
-            )
+            new_front = with_url_key(
+                links.select(
+                    "url",
+                    # the CHILD's own host, not the linking page's — a
+                    # cross-host link scheduled under the parent's host
+                    # would evade the target host's politeness budget
+                    # (links.host stays the parent host for the src side
+                    # of host_edges below)
+                    url_host(F.col("url")).alias("host"),
+                    "source", "priority",
+                    (F.col("depth") + 1).alias("depth"),
+                    F.lit(r + 1).alias("discovered_round"),
+                ),
+                "url",
+                self.cfg.n_shards,
+            ).select(*FRONTIER_COLS).distinct()
 
-        def w_log():
-            versions["crawl_log"] = self.crawl_log.append(
-                _co(
+            # --- all round outputs write CONCURRENTLY -----------------------
+            # Every sink below reads only the materialized `parsed` cache and
+            # writes its OWN table (separate snapshot dirs), so the five jobs
+            # are independent; submitting them from driver threads overlaps
+            # their fixed job-submission/stage latency (Spark runs concurrent
+            # jobs from one session; FIFO still fills free task slots).  On a
+            # cluster this is the same pattern as concurrent writes to
+            # independent Iceberg tables.
+            from concurrent.futures import ThreadPoolExecutor
+
+            def _co(df):
+                # bound files-per-commit (see CrawlConfig.sink_coalesce)
+                return (
+                    df.coalesce(self.cfg.sink_coalesce)
+                    if self.cfg.sink_coalesce
+                    else df
+                )
+
+            def w_pages():
+                if n_pages:
+                    self.pages.append(
+                        _co(pages_df),
+                        partition_cols=list(self.cfg.pages_partition_cols),
+                        metrics={"round": r},
+                    )
+
+            def w_errors():
+                if n_err:
+                    self.errors.append(_co(err_df))
+
+            def w_links() -> int:
+                # single pass: append, then read the new-URL count from the
+                # commit's manifest lineage (computed from parquet footers
+                # during the append) — a separate count() job re-ran the
+                # whole distinct shuffle
+                v = self.frontier.append(new_front)
+                # manifest lineage records THIS commit's rows only
+                return int(sum(self.frontier.snapshot(v).lineage.values()))
+
+            def w_log():
+                # the round's attempts, once: ordering contract, visit
+                # record and exact seen set (keys carried from frontier_log;
+                # the bucketed append aligns rows to canon_url buckets)
+                self.crawl_log.append(
                     results.select(
                         F.lit(r).alias("round"), "host", "host_rank",
-                        "canon_url", "priority", "fetched",
+                        "canon_url", "priority", "fetched", "source",
+                        "status", "attempts", "url_hash", "shard",
                     )
                 )
-            )
 
-        def w_edges():
-            # host-level link graph: src = linking page's host, dst =
-            # target URL's host, pre-aggregated to edge counts (the
-            # trust_scores() input).  Post-scope links — the graph the
-            # crawl actually follows.
-            versions["host_edges"] = self.host_edges.append(
-                links.select(
-                    F.col("host").alias("src_host"),
-                    url_host(F.col("url")).alias("dst_host"),
+            def w_filters():
+                # Bloom delta bitmaps over the same cached rows (no re-key,
+                # no dedup: a round attempts each canon_url once)
+                self.seen.add_filters(results.select("shard", "url_hash"))
+
+            def w_edges():
+                # host-level link graph: src = linking page's host, dst =
+                # target URL's host, pre-aggregated to edge counts (the
+                # trust_scores() input).  Post-scope links — the graph the
+                # crawl actually follows.
+                self.host_edges.append(
+                    links.select(
+                        F.col("host").alias("src_host"),
+                        url_host(F.col("url")).alias("dst_host"),
+                    )
+                    .groupBy("src_host", "dst_host")
+                    .agg(F.count("*").alias("n"))
+                    .withColumn("round", F.lit(r))
                 )
-                .groupBy("src_host", "dst_host")
-                .agg(F.count("*").alias("n"))
-                .withColumn("round", F.lit(r))
-            )
 
-        def w_state():
-            # latest-record upsert keyed on canon_url: bucket-pruned
-            # rewrite (tables.BucketedLog.merge_upsert) — only the
-            # round's touched buckets move, never the full state log.
-            # etag = the content digest (a strong validator, which is
-            # what the sandbox web serves); last_modified = capture ts.
-            st = (
-                results.filter(F.col("fetched"))
-                .select(
-                    "canon_url", "host", "source",
-                    F.col("digest"),
-                    F.col("digest").alias("etag"),
-                    F.col("warc_ts").alias("last_modified"),
-                    F.col("status").alias("last_status"),
-                    F.lit(r).alias("last_round"),
+            def w_state():
+                # latest-record upsert keyed on canon_url: bucket-pruned
+                # rewrite (tables.BucketedLog.merge_upsert) — only the
+                # round's touched buckets move, never the full state log.
+                # etag = the content digest (a strong validator, which is
+                # what the sandbox web serves); last_modified = capture ts.
+                st = (
+                    results.filter(F.col("fetched"))
+                    .select(
+                        "canon_url", "host", "source",
+                        F.col("digest"),
+                        F.col("digest").alias("etag"),
+                        F.col("warc_ts").alias("last_modified"),
+                        F.col("status").alias("last_status"),
+                        F.lit(r).alias("last_round"),
+                    )
+                    .dropDuplicates(["canon_url"])
                 )
-                .dropDuplicates(["canon_url"])
-            )
-            versions["url_state"] = self.url_state.merge_upsert(
-                st, metrics={"round": r}
-            )
+                self.url_state.merge_upsert(st, metrics={"round": r})
 
-        sinks = [w_pages, w_errors, w_seen, w_visited, w_log]
-        if self.host_edges is not None:
-            sinks.append(w_edges)
-        if self.url_state is not None:
-            sinks.append(w_state)
-        with ThreadPoolExecutor(max_workers=7) as pool:
-            futs = [pool.submit(fn) for fn in sinks]
-            n_new = pool.submit(w_links).result()
-            for f in futs:
-                f.result()  # surface the first failure
-        t = _mark("appends", t)
+            sinks = [w_pages, w_errors, w_log, w_filters]
+            if self.host_edges is not None:
+                sinks.append(w_edges)
+            if self.url_state is not None:
+                sinks.append(w_state)
+            with ThreadPoolExecutor(max_workers=7) as pool:
+                futs = [pool.submit(fn) for fn in sinks]
+                n_new = pool.submit(w_links).result()
+                for f in futs:
+                    f.result()  # surface the first failure
+            t = _mark("appends", t)
 
-        metrics.update(
-            selected=int(n_sel),
-            fetched=int(counts["n_fetched"] or 0),
-            errors=n_err,
-            new_urls=n_new,
-            pages=n_pages,
-        )
-        self.catalog.save_checkpoint(r + 1, versions, metrics)
-        parsed.unpersist()
-        selected.unpersist()
-        return metrics
+            metrics.update(
+                selected=int(n_sel),
+                fetched=int(counts["n_fetched"] or 0),
+                errors=n_err,
+                new_urls=n_new,
+                pages=n_pages,
+            )
+            self._checkpoint(r + 1, metrics)
+            return metrics
+        finally:
+            # also on failure: a crashed round must not pin its caches
+            if parsed is not None:
+                parsed.unpersist()
+            selected.unpersist()
 
     def run(self, max_rounds: int = 100) -> list[dict]:
         """Crawl until the frontier drains (or max_rounds)."""
@@ -923,7 +931,7 @@ class CrawlEngine:
             F.min(F.struct("priority", "discovered_round", "depth", "url",
                            "host", "source")).alias("b")
         )
-        v = self.visited.read()
+        v = self.crawl_log.read()
         if v is None:
             return best.select(
                 F.col("b.url").alias("url"), "canon_url",
@@ -933,8 +941,11 @@ class CrawlEngine:
                 F.col("b.depth").alias("depth"),
                 F.lit("pending").alias("state"),
             )
+        state = F.when(F.col("fetched"), F.lit("fetched")).otherwise(
+            F.lit("error")
+        )
         return best.join(
-            v.select("canon_url", "state"), "canon_url", "left"
+            v.select("canon_url", state.alias("state")), "canon_url", "left"
         ).select(
             F.col("b.url").alias("url"), "canon_url",
             F.col("b.host").alias("host"),

@@ -92,6 +92,10 @@ def test_retry_after_both_wire_forms(spark):
             # hostile: 20 digits matches a naive ^[0-9]+$ but overflows
             # a long cast, which throws under ANSI mode -- must be NULL
             ("99999999999999999999",),
+            # leading zeros are still delta-seconds, however many
+            ("000000000005",),
+            # fits in a long, but now + value overflows it
+            ("9223372036854775807",),
         ],
         "v string",
     )
@@ -108,6 +112,8 @@ def test_retry_after_both_wire_forms(spark):
     assert got[3] is None
     assert got[4] is None
     assert got[5] is None
+    assert got[6] == now + 5
+    assert got[7] is None
 
 
 def test_retry_after_format_parse_roundtrip(spark):

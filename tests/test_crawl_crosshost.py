@@ -157,7 +157,7 @@ def test_robots_disallow_applies_to_mixedcase_links(engine):
     # … but was never selected, fetched, or recorded as visited
     visited = {
         r["canon_url"]
-        for r in engine.visited.read().select("canon_url").collect()
+        for r in engine.crawl_log.read().select("canon_url").collect()
     }
     assert GAMMA9 not in visited
 

@@ -153,7 +153,7 @@ def test_error_cooldown_excludes_then_readmits(spark, world, tmp_path_factory):
     eng.bootstrap()
     eng.round(0)
     # inject a block signal: host H errored hard in round 0
-    visited = eng.visited.read()
+    visited = eng.crawl_log.read()
     h = visited.select("host").first()["host"]
     eng.errors.append(
         spark.createDataFrame(
@@ -199,7 +199,7 @@ def test_scope_rules_gate_frontier_admission(spark, tmp_path):
 
     def visited_urls(eng):
         return {
-            r["canon_url"] for r in eng.visited.read().collect()
+            r["canon_url"] for r in eng.crawl_log.read().collect()
         }
 
     plain = run(CrawlConfig(n_shards=8, fetch_partitions=4),

@@ -184,8 +184,8 @@ def test_revisit_round_consumes_priorities(spark, world, tmp_path_factory):
 
     visited = [
         r["canon_url"]
-        for r in eng.visited.read()
-        .filter(F.col("state") == "fetched")
+        for r in eng.crawl_log.read()
+        .filter(F.col("fetched"))
         .select("canon_url")
         .distinct()
         .orderBy("canon_url")

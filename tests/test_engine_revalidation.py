@@ -57,7 +57,7 @@ def test_url_state_tracks_latest_fetch(spark, world, tmp_path_factory):
     is recorded in the round checkpoints."""
     eng, _ = _crawl(spark, world, tmp_path_factory)
     st = eng.url_state.read()
-    vis = eng.visited.read().filter(F.col("state") == "fetched")
+    vis = eng.crawl_log.read().filter(F.col("fetched"))
     assert st.count() == st.select("canon_url").distinct().count()
     assert st.count() == vis.select("canon_url").distinct().count()
     live = world["pages_raw"].select(

@@ -157,7 +157,7 @@ def test_crawl_with_periodic_expiry_matches_plain_run(spark, tmp_path):
         )
         eng.run(max_rounds=30)
         pages = eng.pages.read()
-        visited = eng.visited.read()
+        visited = eng.crawl_log.read()
         return (
             sorted(r["document_url"] for r in pages.collect()),
             sorted(r["canon_url"] for r in visited.collect()),

@@ -14,9 +14,9 @@ from legislation_scraper_spark.synth import synth_world
 SF = "/root/testdata/sf0.001"
 
 
-def _explain(df) -> str:
+def _explain(df, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
+        df._jdf.queryExecution(), mode
     )
 
 
@@ -208,6 +208,60 @@ def test_bucketed_frontier_pending_has_no_exchange(spark, tmp_path):
     eng.bootstrap()
     plan = _explain(eng.pending())
     assert not re.findall(r"\bExchange\b", plan), plan
+
+
+def test_pending_exact_side_reads_bucketed_crawl_log(spark, tmp_path):
+    """The exact seen side is crawl_log, bucketed by canon_url like the
+    frontier: with broadcast joins off (the scale path), pending()'s
+    anti-join reads it as a bucketed scan with NO Exchange between the
+    scan and the join — only the candidate side shuffles."""
+    import re
+
+    from legislation_scraper_spark.plans.crawl import (
+        CrawlConfig, CrawlEngine,
+    )
+    from legislation_scraper_spark.tables import Catalog
+
+    w = synth_world(spark, seed=9, docs_per_source=6, n_sources=2,
+                    partitions=2)
+    eng = CrawlEngine(
+        spark, Catalog(spark, str(tmp_path / "store")), w["pages_raw"],
+        w["seeds"], w["robots"],
+        CrawlConfig(n_shards=4, fetch_partitions=4, salt_buckets=2),
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        eng.bootstrap()
+        for r in range(2):
+            eng.round(r)
+        text = _explain(eng.pending(), "simple")
+    finally:
+        spark.conf.set(key, old)
+
+    def indent(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    lines = text.splitlines()
+    scans = [
+        i for i, ln in enumerate(lines)
+        if "FileScan" in ln and eng.crawl_log.cat_name in ln
+    ]
+    assert scans, text
+    for i in scans:
+        assert "Bucketed: true" in lines[i], lines[i]
+        # a node's ancestors are the nearest earlier lines with less
+        # indent; the first join above the scan comes before any Exchange
+        depth, ops = indent(lines[i]), []
+        for ln in reversed(lines[:i]):
+            if indent(ln) < depth:
+                depth = indent(ln)
+                ops.append(re.sub(r"^\*\(\d+\) ", "", ln.strip(" :+-")))
+        j = next(k for k, op in enumerate(ops)
+                 if op.split(" ")[0].endswith("Join"))
+        assert "LeftAnti" in ops[j], text
+        assert not [op for op in ops[:j] if op.startswith("Exchange")], text
 
 
 def test_contamination_screen_broadcasts_benchmark(spark):

@@ -4,6 +4,10 @@ uninterrupted run's (SURVEY.md §5 test 3)."""
 
 from __future__ import annotations
 
+import collections
+import os
+import threading
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -23,6 +27,37 @@ def world(spark):
     return {k: v.cache() for k, v in w.items()}
 
 
+def _manifests(root):
+    """(table, manifest file) for every committed snapshot under root."""
+    return {
+        (os.path.basename(os.path.dirname(d)), f)
+        for d, _, files in os.walk(root)
+        if os.path.basename(d) == "snapshots"
+        for f in files
+        if f.endswith(".json")
+    }
+
+
+@pytest.fixture(scope="module")
+def reference(spark, world, tmp_path_factory):
+    """An uninterrupted crawl, run round by round, with the tables each
+    round committed to."""
+    root = str(tmp_path_factory.mktemp("reference"))
+    eng = _mk_engine(spark, world, root)
+    eng.bootstrap()
+    rounds = []
+    for r in range(40):
+        before = _manifests(root)
+        m = eng.round(r)
+        if m["selected"] == 0:
+            return eng, rounds
+        m["commits"] = collections.Counter(
+            t for t, _ in _manifests(root) - before
+        )
+        rounds.append(m)
+    pytest.fail("reference crawl did not drain in 40 rounds")
+
+
 def _mk_engine(spark, world, root):
     return CrawlEngine(
         spark, Catalog(spark, root),
@@ -31,14 +66,14 @@ def _mk_engine(spark, world, root):
 
 
 def _table_rows(eng, name, cols):
-    df = eng.catalog.table(name).read()
+    # the seen set is a view over crawl_log, not a table of its own
+    df = eng.seen.df() if name == "seen" else eng.catalog.table(name).read()
     return sorted(tuple(r[c] for c in cols) for r in df.select(*cols).collect())
 
 
-def test_resume_equals_uninterrupted(spark, world, tmp_path):
+def test_resume_equals_uninterrupted(spark, world, reference, tmp_path):
     # Uninterrupted reference run
-    a = _mk_engine(spark, world, str(tmp_path / "a"))
-    a.run(max_rounds=40)
+    a, _ = reference
 
     # Interrupted run: 3 rounds, then a *torn* extra commit (crash mid
     # round: pages appended but checkpoint never written), then resume.
@@ -133,3 +168,132 @@ def test_bucketed_overwrite_crash_safety(spark, tmp_path):
         (str(i), "v2") for i in range(50)
     )
     assert not (set(before_files) & log._data_files()), "old files not pruned"
+
+
+# --- crash anywhere in a round, then resume -----------------------------
+
+ROUND_TABLES = ("pages", "fetch_errors", "frontier_log", "crawl_log",
+                "seen_filters")
+COMPARED = [
+    ("pages", ("document_url", "text_markdown", "type", "situation")),
+    ("seen", ("canon_url",)),
+    ("crawl_log", ("round", "host", "host_rank", "canon_url", "fetched",
+                   "status", "attempts", "url_hash", "shard")),
+    ("fetch_errors", ("canon_url", "round", "error")),
+    ("frontier_log", ("url", "canon_url", "host", "depth",
+                      "discovered_round")),
+    # a leaked delta bitmap never changes a result (false positives
+    # only), so compare the filter log itself
+    ("seen_filters", ("shard", "n_keys", "bitmap")),
+]
+
+
+def test_round_commits_each_table_once(reference):
+    """One attempts log: a round with pages and errors commits exactly
+    five tables, once each, and no `seen` or `visited` table exists."""
+    eng, rounds = reference
+    full = [m for m in rounds if m["pages"] and m["errors"]]
+    assert full, "the world must have a round with pages and errors"
+    for m in full:
+        assert m["commits"] == {t: 1 for t in ROUND_TABLES}, m["round"]
+    assert "seen" not in os.listdir(eng.catalog.root)
+    assert "visited" not in os.listdir(eng.catalog.root)
+    # every checkpoint, bootstrap's included, names every table
+    for tag in eng.catalog.checkpoints():
+        versions = eng.catalog.load_checkpoint(tag)["versions"]
+        assert set(versions) == set(ROUND_TABLES), tag
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _arm_crash(monkeypatch, eng, point):
+    """Make ``eng``'s next round die at ``point``:
+
+    - ``"before_sinks"``: no sink commits;
+    - a table name: that sink commits, every other sink dies before
+      committing (they wait for it, so the torn state is exactly one
+      table);
+    - ``"before_checkpoint"``: every sink commits, the checkpoint is
+      never written."""
+    if point == "before_checkpoint":
+        def save_checkpoint(*a, **kw):
+            raise _Crash(point)
+
+        monkeypatch.setattr(eng.catalog, "save_checkpoint", save_checkpoint)
+        return
+    committed = threading.Event()
+    if point == "before_sinks":
+        committed.set()
+    for name, table in eng.owned_tables().items():
+        if name == point:
+            def append(*a, _real=table.append, **kw):
+                try:
+                    _real(*a, **kw)
+                finally:
+                    committed.set()
+                raise _Crash(point)
+        else:
+            def append(*a, **kw):
+                committed.wait(timeout=120)
+                raise _Crash(point)
+        monkeypatch.setattr(table, "append", append)
+
+
+def _rows_at(eng, tag, name, cols):
+    """Rows of table ``name`` as checkpoint ``tag`` recorded it (the
+    seen set is crawl_log's canon_url column)."""
+    src = "crawl_log" if name == "seen" else name
+    v = eng.catalog.load_checkpoint(tag)["versions"][src]
+    df = eng.catalog.table(src).read(v) if v else None
+    if df is None:
+        return []
+    return sorted(tuple(r[c] for c in cols) for r in df.select(*cols).collect())
+
+
+@pytest.mark.parametrize("crash_round,sinks", [
+    # round 0 fetches only the seed search pages: no pages, one error
+    (0, ("fetch_errors", "frontier_log", "crawl_log", "seen_filters")),
+    # round 1 has pages but no errors, after a round that wrote no pages
+    (1, ("pages", "frontier_log", "crawl_log", "seen_filters")),
+], ids=["round0", "round1"])
+def test_crash_anywhere_then_resume_equals_uninterrupted(
+    spark, world, reference, tmp_path, crash_round, sinks
+):
+    """Exactly-once resume: round ``crash_round`` crashes before its
+    sinks, after each single sink, and before its checkpoint.  Each
+    time resume() rolls every table back to the last checkpoint, and
+    redoing the round leaves every table equal to the uninterrupted
+    crawl's at the same checkpoint (from there the crawl is the same
+    deterministic function of those tables; the full run is compared in
+    test_resume_equals_uninterrupted)."""
+    ref, rounds = reference
+    m = rounds[crash_round]
+    if crash_round == 0:
+        assert m["pages"] == 0 and m["errors"] > 0
+    else:
+        assert m["pages"] > 0 and m["errors"] == 0
+    root = str(tmp_path / "store")
+    eng = _mk_engine(spark, world, root)
+    eng.bootstrap()
+    for r in range(crash_round):
+        eng.round(r)
+    tag = crash_round + 1
+    want = {name: _rows_at(ref, tag, name, cols) for name, cols in COMPARED}
+    for point in ("before_sinks", *sinks, "before_checkpoint"):
+        if point in ROUND_TABLES:
+            assert m["commits"][point] == 1, f"{point} writes in this round"
+        crashed = _mk_engine(spark, world, root)
+        assert crashed.resume() == crash_round
+        with pytest.MonkeyPatch.context() as mp:
+            _arm_crash(mp, crashed, point)
+            with pytest.raises(_Crash):
+                crashed.round(crash_round)
+        eng = _mk_engine(spark, world, root)
+        assert eng.resume() == crash_round, point
+        eng.round(crash_round)
+        for name, cols in COMPARED:
+            assert _rows_at(eng, tag, name, cols) == want[name], (point, name)
+        # un-finish the round so the next point crashes it again
+        os.remove(os.path.join(eng.catalog.ckpt_dir, f"c{tag:06d}.json"))

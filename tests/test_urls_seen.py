@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from legislation_scraper_spark.functions.urls import (
     canonicalize_url,
@@ -35,6 +37,38 @@ def test_canonicalize(spark):
     got = [r[0] for r in df.select(canonicalize_url(F.col("url"))).collect()]
     want = [w for _, w in CANON_CASES]
     assert got == want
+
+
+# URL-shaped text over printable ASCII plus the whitespace the rules
+# touch: schemes in mixed case, default and odd ports, fragments,
+# trailing slashes and spaces next to them
+_url_text = st.builds(
+    lambda pre, scheme, host, port, rest: f"{pre}{scheme}://{host}{port}{rest}",
+    st.sampled_from(["", " ", "  "]),
+    st.sampled_from(["http", "https", "HTTPS", "Http", "ftp"]),
+    st.text(alphabet="aAbZ.-09 :", max_size=8),
+    st.sampled_from(["", ":80", ":443", ":443:443", ":8443", ":"]),
+    st.text(
+        alphabet=st.characters(min_codepoint=32, max_codepoint=126)
+        | st.sampled_from(["\t", "\n", "/", "#", " "]),
+        max_size=16,
+    ),
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.one_of(_url_text, st.text(max_size=12)), min_size=1,
+                max_size=40))
+def test_canonicalize_url_idempotent(spark, urls):
+    """canonicalize(canonicalize(u)) == canonicalize(u): the engine
+    keys crawl_log and the seen filters with frontier_log's canon_url
+    and never re-canonicalizes it, which is only sound for a fixed
+    point."""
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    once = df.select(canonicalize_url(F.col("url")).alias("c"))
+    twice = once.select("c", canonicalize_url(F.col("c")).alias("cc"))
+    bad = [(r["c"], r["cc"]) for r in twice.collect() if r["c"] != r["cc"]]
+    assert not bad, bad
 
 
 def test_url_host(spark):
@@ -74,7 +108,7 @@ def test_seen_set_exactness_under_bloom_fp(spark, tmp_path, fpp):
     cand = spark.createDataFrame(
         [(f"https://a.br/doc/{i}",) for i in range(1000)], "url string"
     )
-    out = seen.filter_unseen(cand)
+    out = seen.filter_unseen(with_url_key(cand, "url", seen.n_shards))
     got = sorted(r["url"] for r in out.collect())
     want = sorted(f"https://a.br/doc/{i}" for i in range(1, 1000, 2))
     assert got == want
@@ -88,7 +122,7 @@ def test_seen_add_idempotent(spark, tmp_path):
     )
     seen.add(urls)
     seen.add(urls)  # re-adding must not resurrect them as unseen
-    out = seen.filter_unseen(urls)
+    out = seen.filter_unseen(with_url_key(urls, "url", seen.n_shards))
     assert out.count() == 0
 
 
@@ -132,8 +166,9 @@ def test_incremental_filter_state_equivalent(spark, tmp_path):
     assert inc.filters_table.read().count() > 8  # true delta log
 
     def unseen(ss):
+        keyed = with_url_key(df, "url", ss.n_shards)
         return sorted(
-            r["url"] for r in ss.filter_unseen(df, "url").select("url").collect()
+            r["url"] for r in ss.filter_unseen(keyed).select("url").collect()
         )
 
     expect = unseen(ref)
@@ -170,56 +205,15 @@ def test_empty_filter_log_falls_back_to_rebuild(spark, tmp_path):
         cat.table("seen"), n_shards=8,
         filters_table=cat.table("seen_filters"), keys_per_shard=1024,
     )
+    keyed = with_url_key(df, "url", 8)
     got = sorted(
-        r["url"] for r in inc.filter_unseen(df, "url").select("url").collect()
+        r["url"] for r in inc.filter_unseen(keyed).select("url").collect()
     )
     expect = sorted(
-        r["url"] for r in legacy.filter_unseen(df, "url").select("url").collect()
+        r["url"] for r in legacy.filter_unseen(keyed).select("url").collect()
     )
     assert got == expect
     assert len(got) < 200  # seen URLs actually filtered out
-
-
-def test_incremental_cuckoo_filter_state_equivalent(spark, tmp_path):
-    """Cuckoo incremental delta log (VERDICT r1 item 7): multiple adds
-    append fixed-geometry delta tables; the probe folds them via
-    fingerprint re-insertion (cuckoo.merge_tables), never rescanning
-    the seen table — results identical to the stateless rebuild path,
-    before and after compaction, and a saturated shard (forced with a
-    tiny keys_per_shard) degrades to the exact anti-join, never to a
-    false negative."""
-    from pyspark.sql import functions as F
-
-    from legislation_scraper_spark.operators.seen import SeenSet
-    from legislation_scraper_spark.tables import Catalog
-
-    urls = [(f"https://h{i % 5}.example/p{i}",) for i in range(400)]
-    df = spark.createDataFrame(urls, "url string")
-
-    def unseen(ss):
-        return sorted(
-            r["url"]
-            for r in ss.filter_unseen(df, "url").select("url").collect()
-        )
-
-    for kps in (1024, 8):  # roomy geometry, then forced saturation
-        cat = Catalog(spark, str(tmp_path / f"ck{kps}"))
-        inc = SeenSet(
-            cat.table("seen"), n_shards=8, filter_kind="cuckoo",
-            filters_table=cat.table("seen_filters"), keys_per_shard=kps,
-        )
-        cat2 = Catalog(spark, str(tmp_path / f"ref{kps}"))
-        ref = SeenSet(cat2.table("seen"), n_shards=8, filter_kind="cuckoo")
-        for mod in (0, 1, 2):
-            batch = df.filter(F.xxhash64("url") % 7 == mod)
-            inc.add(batch, "url")
-            ref.add(batch, "url")
-        assert inc.filters_table.read().count() > 8  # true delta log
-        expect = unseen(ref)
-        assert unseen(inc) == expect, f"kps={kps}"
-        inc.compact_filters()
-        assert inc.filters_table.read().count() <= 8
-        assert unseen(inc) == expect, f"kps={kps} post-compact"
 
 
 def test_registered_domain_psl_subset(spark):
