@@ -6759,9 +6759,9 @@ _ORACLE_B6 = {
           SELECT key, day, COUNT(*) AS new_entities
           FROM first GROUP BY key, day)
         SELECT key, day, new_entities,
-               SUM(new_entities) OVER (
+               CAST(SUM(new_entities) OVER (
                  PARTITION BY key ORDER BY day
-                 ROWS UNBOUNDED PRECEDING) AS cum_entities
+                 ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_entities
         FROM daily
     """,
 }
@@ -6884,10 +6884,10 @@ _ORACLE_B7 = {
         WITH r AS (SELECT MIN(epoch_us(ts)) AS min_us,
                           MAX(epoch_us(ts)) AS max_us FROM events),
         h AS (SELECT event_type AS cat,
-                SUM(CASE WHEN 2 * epoch_us(ts) <= min_us + max_us
-                    THEN 1 ELSE 0 END) AS c1,
-                SUM(CASE WHEN 2 * epoch_us(ts) <= min_us + max_us
-                    THEN 0 ELSE 1 END) AS c2
+                CAST(SUM(CASE WHEN 2 * epoch_us(ts) <= min_us + max_us
+                    THEN 1 ELSE 0 END) AS BIGINT) AS c1,
+                CAST(SUM(CASE WHEN 2 * epoch_us(ts) <= min_us + max_us
+                    THEN 0 ELSE 1 END) AS BIGINT) AS c2
               FROM events, r GROUP BY event_type),
         t AS (SELECT CAST(SUM(c1) AS DOUBLE) AS n1,
                      CAST(SUM(c2) AS DOUBLE) AS n2,
@@ -6907,9 +6907,9 @@ _ORACLE_B7 = {
                        ORDER BY epoch_us(ts), event_id) AS prev_us
                    FROM events)
         SELECT host, COUNT(*) AS n_fetches,
-               SUM(CASE WHEN prev_us IS NOT NULL
+               CAST(SUM(CASE WHEN prev_us IS NOT NULL
                    AND us - prev_us <= 15000000
-                   THEN 1 ELSE 0 END) AS n_reused,
+                   THEN 1 ELSE 0 END) AS BIGINT) AS n_reused,
                ROUND(SUM(CASE WHEN prev_us IS NOT NULL
                      AND us - prev_us <= 15000000
                      THEN 1 ELSE 0 END)

@@ -10,8 +10,9 @@ set keyed by canonicalized URL hash"; this module implements the Bloom
 variant):
 
 1. **Partitioned Bloom pre-filter** — keys are sharded by
-   ``pmod(url_hash, n_shards)``; each shard materializes a Bloom bitmap
-   (numpy, built in ``applyInPandas`` — one pass, no driver rows).
+   ``pmod(url_hash, n_shards)``; each shard's Bloom bitmap is an
+   ``array<bigint>`` of 64-bit words, built, OR-merged and probed with
+   built-in Spark expressions (no Python stage, nothing collected).
    Candidates probe only their shard's bitmap.  A Bloom *miss* proves
    the URL is new (no false negatives) — those rows skip the expensive
    exact join entirely.  At steady state most frontier candidates are
@@ -37,9 +38,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.urls import canonicalize_url, url_hash
@@ -55,37 +54,7 @@ def with_url_key(df: DataFrame, url_col: str = "url", n_shards: int = 64) -> Dat
     )
 
 
-# --- Bloom bitmap construction (per shard, executor-side) -------------------
-
-_HASH_SPLIT = np.uint64(0x9E3779B97F4A7C15)
-
-
-def _bloom_positions(hashes: np.ndarray, m_bits: int, k: int) -> np.ndarray:
-    """k positions per key via double hashing h1 + i*h2 (Kirsch-
-    Mitzenmacher); hashes is uint64 view of xxhash64 keys."""
-    h1 = hashes
-    h2 = (hashes ^ _HASH_SPLIT) * np.uint64(0xFF51AFD7ED558CCD) | np.uint64(1)
-    pos = np.empty((k, len(hashes)), dtype=np.uint64)
-    for i in range(k):
-        pos[i] = (h1 + np.uint64(i) * h2) % np.uint64(m_bits)
-    return pos
-
-
-def _build_bitmap(hashes: np.ndarray, m_bits: int, k: int) -> bytes:
-    bits = np.zeros((m_bits + 7) // 8, dtype=np.uint8)
-    pos = _bloom_positions(hashes, m_bits, k).ravel()
-    np.bitwise_or.at(bits, (pos // 8).astype(np.int64), (1 << (pos % 8)).astype(np.uint8))
-    return bits.tobytes()
-
-
-def _probe_bitmap(bitmap: bytes, hashes: np.ndarray, m_bits: int, k: int) -> np.ndarray:
-    bits = np.frombuffer(bitmap, dtype=np.uint8)
-    pos = _bloom_positions(hashes, m_bits, k)
-    hit = np.ones(len(hashes), dtype=bool)
-    for i in range(k):
-        byte = bits[(pos[i] // 8).astype(np.int64)]
-        hit &= (byte & (1 << (pos[i] % 8)).astype(np.uint8)) != 0
-    return hit
+# --- Bloom bitmaps: array<bigint> words, bit p in word p >> 6 at p & 63 ----
 
 
 @dataclass
@@ -100,30 +69,79 @@ class BloomParams:
         k = max(1, round(m / n * math.log(2)))
         return BloomParams(m_bits=m, k=k)
 
+    @property
+    def n_words(self) -> int:
+        return (self.m_bits + 63) // 64
+
+
+def _positions(url_hash: Column, params: BloomParams) -> Column:
+    """The key's k bit positions h1 + i*h2 mod m (Kirsch-Mitzenmacher).
+    h1 and h2 are below m, so the sum fits a long (ANSI mode throws on
+    overflow); both rehash the key, whose residue mod n_shards is fixed
+    within a shard."""
+    m = F.lit(params.m_bits)
+    h1 = F.pmod(F.xxhash64(url_hash), m)
+    h2 = F.pmod(F.xxhash64(url_hash, F.lit(1)), m - 1) + 1
+    ks = F.sequence(F.lit(0), F.lit(params.k - 1))
+    return F.transform(ks, lambda i: F.pmod(h1 + i * h2, m))
+
+
+def _bit(pos: Column) -> Column:
+    # F.shiftleft takes only a Python int shift count
+    return F.call_function(
+        "shiftleft", F.lit(1).cast("long"), pos.bitwiseAND(63).cast("int")
+    )
+
+
+def _densify(entries: Column, n_words: int) -> Column:
+    """``array<bigint>`` of ``n_words`` words from (word, bits) structs
+    sorted by word: each entry is preceded by zeros up to its word, and
+    zeros pad the tail.  O(words) per shard; a map lookup per word would
+    be a linear scan each."""
+    zero = F.lit(0).cast("long")
+
+    def run(e: Column, j: Column) -> Column:
+        start = F.coalesce(F.get(entries, j - 1)["word"] + 1, F.lit(0))
+        return F.concat(
+            F.array_repeat(zero, e["word"] - start), F.array(e["bits"])
+        )
+
+    tail = F.lit(n_words - 1) - F.element_at(entries, -1)["word"]
+    return F.concat(
+        F.flatten(F.transform(entries, run)), F.array_repeat(zero, tail)
+    )
+
 
 def build_bloom_shards(
     seen: DataFrame, params: BloomParams, n_shards: int = 64
 ) -> DataFrame:
-    """(shard, bitmap) rows — one Bloom bitmap per shard of the seen set.
+    """(shard, bitmap, n_keys) rows — one Bloom bitmap per shard of the
+    seen set that has keys.
 
     ``seen`` must carry ``shard`` and ``url_hash`` (see with_url_key).
+    ``n_keys`` counts rows, duplicates included.
     """
-    m_bits, k = params.m_bits, params.k
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        h = pdf["url_hash"].to_numpy().astype(np.int64).view(np.uint64)
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf["shard"].iloc[0])],
-                "bitmap": [_build_bitmap(h, m_bits, k)],
-                "n_keys": [len(h)],
-            }
-        )
-
+    # one shuffle: clustering by shard also serves the (shard, word) agg
+    pos = seen.repartition("shard").select(
+        "shard", F.explode(_positions(F.col("url_hash"), params)).alias("pos")
+    )
+    words = pos.groupBy(
+        "shard", F.shiftright("pos", 6).cast("int").alias("word")
+    ).agg(F.bit_or(_bit(F.col("pos"))).alias("bits"), F.count("*").alias("n"))
     return (
-        seen.select("shard", "url_hash")
-        .groupBy("shard")
-        .applyInPandas(build, schema="shard int, bitmap binary, n_keys long")
+        words.groupBy("shard")
+        .agg(
+            F.array_sort(F.collect_list(F.struct("word", "bits"))).alias("e"),
+            # every key sets exactly k positions
+            (F.sum("n") / params.k).cast("long").alias("n_keys"),
+        )
+        # a column, not the expression: the densify lambda reads it per
+        # entry, and an expression would be re-evaluated each time
+        .select(
+            "shard",
+            _densify(F.col("e"), params.n_words).alias("bitmap"),
+            "n_keys",
+        )
     )
 
 
@@ -134,32 +152,25 @@ def bloom_probe(
 ) -> DataFrame:
     """Adds ``maybe_seen`` to candidates: False ⇒ provably unseen.
 
-    Joins each candidate partition with its shard bitmap (broadcast —
-    bitmaps are small and few), probes vectorized in numpy.
+    Joins each candidate with its shard bitmap (broadcast — bitmaps are
+    small and few) and tests its k bits: O(k) word lookups per row.  A
+    shard without a bitmap has seen nothing.
     """
-    m_bits, k = params.m_bits, params.k
-    joined = candidates.join(F.broadcast(bloom_shards), "shard", "left")
+    def is_set(pos: Column) -> Column:
+        word = F.element_at("bitmap", F.shiftright(pos, 6).cast("int") + 1)
+        return word.bitwiseAND(_bit(pos)) != 0
 
-    def probe(batches):
-        for pdf in batches:
-            out = pdf.drop(columns=["bitmap", "n_keys"])
-            maybe = np.zeros(len(pdf), dtype=bool)
-            if len(pdf):
-                h = pdf["url_hash"].to_numpy().astype(np.int64).view(np.uint64)
-                for _, idx in pdf.groupby("shard").indices.items():
-                    bm = pdf["bitmap"].iloc[idx[0]]
-                    if bm is None:
-                        continue  # shard has no bitmap → nothing seen there
-                    maybe[idx] = _probe_bitmap(bytes(bm), h[idx], m_bits, k)
-            out["maybe_seen"] = maybe
-            yield out
-
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in joined.schema.fields
-        if f.name not in ("bitmap", "n_keys")
-    ) + ", maybe_seen boolean"
-    return joined.mapInPandas(probe, schema=schema)
+    return (
+        candidates.join(F.broadcast(bloom_shards), "shard", "left")
+        .withColumn(
+            "maybe_seen",
+            F.coalesce(
+                F.forall(_positions(F.col("url_hash"), params), is_set),
+                F.lit(False),
+            ),
+        )
+        .drop("bitmap", "n_keys")
+    )
 
 
 class SeenSet:
@@ -236,27 +247,15 @@ class SeenSet:
         if log is None:
             return None
 
-        def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            acc = np.zeros(0, dtype=np.uint8)
-            n = 0
-            for blob, nk in zip(pdf["bitmap"], pdf["n_keys"]):
-                arr = np.frombuffer(bytes(blob), dtype=np.uint8)
-                if acc.size == 0:
-                    acc = arr.copy()
-                else:
-                    # fixed params ⇒ identical bitmap length per shard
-                    acc |= arr
-                n += int(nk)
-            return pd.DataFrame(
-                {
-                    "shard": [int(pdf["shard"].iloc[0])],
-                    "bitmap": [acc.tobytes()],
-                    "n_keys": [n],
-                }
-            )
-
-        return log.groupBy("shard").applyInPandas(
-            merge, schema="shard int, bitmap binary, n_keys long"
+        zero = F.array_repeat(F.lit(0).cast("long"), self._params().n_words)
+        return log.groupBy("shard").agg(
+            # fixed params ⇒ every delta of a shard has the same length
+            F.aggregate(
+                F.collect_list("bitmap"),
+                zero,
+                lambda acc, b: F.zip_with(acc, b, lambda x, y: x.bitwiseOR(y)),
+            ).alias("bitmap"),
+            F.sum("n_keys").alias("n_keys"),
         )
 
     def compact_filters(self) -> None:
@@ -285,12 +284,10 @@ class SeenSet:
         seen = self.df()
         if seen is None:
             return cand
-        merged = self.merged_filters()
-        if merged is not None:
-            # incremental path: OR-merge the persisted delta bitmaps —
-            # no rescan of the exact seen table to build filters
-            probed = bloom_probe(cand, merged, self._params())
-        else:
+        # incremental path: OR-merge the persisted delta bitmaps — no
+        # rescan of the exact seen table to build filters
+        shards, params = self.merged_filters(), self._params()
+        if shards is None:
             # NOTE: reached both when no filters_table is configured AND
             # when one is configured but its delta log is empty while the
             # exact table is not (store predates the incremental path, or
@@ -304,7 +301,7 @@ class SeenSet:
                 max(n_seen // self.n_shards, 1), self.fpp
             )
             shards = build_bloom_shards(seen, params, self.n_shards)
-            probed = bloom_probe(cand, shards, params)
+        probed = bloom_probe(cand, shards, params)
         surely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
         verified_new = maybe.join(

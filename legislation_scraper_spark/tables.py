@@ -985,11 +985,12 @@ class BucketedLog(Table):
             # frontier, so a post-append refresh silently forced later
             # sinks to recompute the whole fetch+parse chain (measured
             # 77 s/round at local[4]).
-            self._register(
-                self.spark.read.parquet(
-                    os.path.join(self.data_dir, snap.file_sets[0])
-                ).schema
-            )
+            if not self._registered:  # schema inference is a Spark job
+                self._register(
+                    self.spark.read.parquet(
+                        os.path.join(self.data_dir, snap.file_sets[0])
+                    ).schema
+                )
             self.spark.sql(f"REFRESH TABLE {self.cat_name}")
             return self.spark.table(self.cat_name)
         # historical read (time travel): plain file-list scan — correct

@@ -18,12 +18,30 @@ TABLES = (
 ).split()
 
 
+def _host_sized_heap() -> dict[str, str]:
+    """Test JVM heap of half the host's memory, at most get_spark's 32g
+    default, unless SPARK_GRAFT_DRIVER_MEM sets it.  A 32g heap on a
+    16 GB host lets the JVM grow until the kernel kills it mid-suite."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return {}
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(
+                int(line.split()[1]) for line in f
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return {}
+    return {"spark.driver.memory": f"{max(1, min(32, kb // 2**21))}g"}
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(
         "lss-tests",
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
         shuffle_partitions=8,
+        extra_conf=_host_sized_heap(),
     )
     yield s
     s.stop()

@@ -18,7 +18,7 @@ import pytest
 
 import __spark_entry__ as entry_mod
 import bench
-from tests.conftest import SF_SMALL, compare_query
+from tests.conftest import SF_SMALL, compare_query, duck_con
 
 NAMES = sorted(entry_mod.queries())
 HEADLINE = set(bench.HEADLINE)
@@ -46,3 +46,21 @@ def test_oracle_keys_subset():
     q = set(entry_mod.queries())
     o = set(entry_mod.oracle_sql())
     assert o <= q, f"oracle-only keys: {o - q}"
+
+
+def test_oracles_return_no_hugeint():
+    """DuckDB types an uncast SUM of integers HUGEINT where Spark
+    returns bigint, so a typed comparison of the two results fails even
+    when their values agree.  Every oracle runs at sf0.001 and no result
+    column may be HUGEINT."""
+    entry_mod.ensure_oracle_fixtures(SF_SMALL)
+    con = duck_con(SF_SMALL)
+    bad = {}
+    for name, sql in entry_mod.oracle_sql().items():
+        rel = con.sql(sql.replace("_sf0.01.parquet", "_sf0.001.parquet"))
+        rel.fetchall()
+        huge = [c for c, t in zip(rel.columns, rel.types)
+                if str(t) in ("HUGEINT", "UHUGEINT")]
+        if huge:
+            bad[name] = huge
+    assert not bad, bad

@@ -161,6 +161,20 @@ def blog(spark, tmp_path):
     return lg
 
 
+def test_blog_registered_read_launches_no_job(spark, blog):
+    """A second read of a log registered in the catalog infers no
+    schema: it launches no Spark job."""
+    blog.read()
+    sc = spark.sparkContext
+    sc.setJobGroup("blog-second-read", "read of a registered log")
+    try:
+        df = blog.read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("blog-second-read") == []
+    assert sorted(df.columns) == ["n", "st", "url"]
+
+
 def test_blog_merge_updates_and_inserts(spark, blog):
     src = spark.createDataFrame(
         [("https://h0.leg.br/doc/0", 0, "FETCHED"),

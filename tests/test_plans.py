@@ -264,6 +264,46 @@ def test_pending_exact_side_reads_bucketed_crawl_log(spark, tmp_path):
         assert not [op for op in ops[:j] if op.startswith("Exchange")], text
 
 
+def test_seen_filter_plans_have_no_python_stage(spark, tmp_path):
+    """The Bloom pre-filter is built, OR-merged and probed with Spark
+    expressions: neither pending() over a multi-delta filter log nor the
+    delta build that add_filters appends runs a Python node."""
+    from legislation_scraper_spark.plans.crawl import (
+        CrawlConfig, CrawlEngine,
+    )
+    from legislation_scraper_spark.tables import Catalog
+
+    w = synth_world(spark, seed=9, docs_per_source=6, n_sources=2,
+                    partitions=2)
+    eng = CrawlEngine(
+        spark, Catalog(spark, str(tmp_path / "store")), w["pages_raw"],
+        w["seeds"], w["robots"],
+        CrawlConfig(n_shards=4, fetch_partitions=4, salt_buckets=2),
+    )
+    eng.bootstrap()
+    for r in range(2):
+        eng.round(r)
+    assert len(eng.seen.filters_table.snapshot().file_sets) == 2
+    plans = {"pending": _explain(eng.pending())}
+
+    class Capture:
+        def append(self, df):
+            plans["add_filters"] = _explain(df)
+
+    eng.seen.filters_table = Capture()
+    keyed = with_url_key(
+        spark.createDataFrame([("https://a.br/1",), ("https://b.br/2",)],
+                              "url string"), "url", 4,
+    )
+    eng.seen.add_filters(keyed)
+    assert set(plans) == {"pending", "add_filters"}
+    python_nodes = ("FlatMapGroupsInPandas", "MapInPandas",
+                    "PythonMapInArrow", "ArrowEvalPython", "BatchEvalPython")
+    for name, plan in plans.items():
+        found = [n for n in python_nodes if n in plan]
+        assert not found, (name, found, plan)
+
+
 def test_contamination_screen_broadcasts_benchmark(spark):
     """Corpus side of the contamination screen must probe a BROADCAST
     benchmark dim; the only Exchange in the plan is the final per-doc

@@ -14,7 +14,12 @@ from legislation_scraper_spark.functions.urls import (
     salted_host,
     url_host,
 )
-from legislation_scraper_spark.operators.seen import SeenSet, with_url_key
+from legislation_scraper_spark.operators.seen import (
+    SeenSet,
+    bloom_probe,
+    build_bloom_shards,
+    with_url_key,
+)
 from legislation_scraper_spark.tables import Catalog
 
 
@@ -177,6 +182,59 @@ def test_incremental_filter_state_equivalent(spark, tmp_path):
     inc.compact_filters()
     assert inc.filters_table.read().count() <= 8
     assert unseen(inc) == expect
+
+
+class _DeltaLog:
+    """Filter-log stand-in: ``read()`` is the union of the deltas."""
+
+    def __init__(self, deltas):
+        self.deltas = deltas
+
+    def read(self):
+        out = self.deltas[0]
+        for d in self.deltas[1:]:
+            out = out.unionByName(d)
+        return out
+
+
+_LONG = st.integers(-(2**63), 2**63 - 1)
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    keys=st.lists(_LONG, max_size=50),
+    cut=st.integers(0, 50),
+    keys_per_shard=st.sampled_from([1, 4, 64]),
+)
+def test_bloom_has_no_false_negatives(spark, keys, cut, keys_per_shard):
+    """Every key added, through one build or through delta builds
+    OR-merged by merged_filters, probes maybe_seen: raw 64-bit hashes
+    (the extremes always included), duplicates, and more keys per shard
+    than the filter's capacity."""
+    keys = keys + [-(2**63), 2**63 - 1, -1, 0]
+    seen = SeenSet(None, n_shards=3, keys_per_shard=keys_per_shard)
+    params = seen._params()
+
+    def keyed(ks):
+        return spark.createDataFrame([(k,) for k in ks], "url_hash long") \
+            .withColumn("shard", F.pmod("url_hash", F.lit(3)).cast("int"))
+
+    seen.filters_table = _DeltaLog([
+        build_bloom_shards(keyed(part), params, 3)
+        for part in (keys[:cut], keys[cut:])
+    ])
+    every = keyed(keys)
+    probes = {
+        "build": build_bloom_shards(every, params, 3),
+        "merged": seen.merged_filters(),
+    }
+    out = None
+    for via, shards in probes.items():
+        p = bloom_probe(every, shards, params).withColumn("via", F.lit(via))
+        out = p if out is None else out.unionByName(p)
+    missed = [(r["via"], r["url_hash"]) for r in out.collect()
+              if not r["maybe_seen"]]
+    assert not missed, missed
 
 
 def test_empty_filter_log_falls_back_to_rebuild(spark, tmp_path):
