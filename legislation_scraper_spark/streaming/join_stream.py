@@ -57,7 +57,9 @@ def match_responses(
     ``(resp_ts, status)`` struct — deterministic across partitionings).
     The group-agg is one hash aggregate on the join output, partial
     map-side — no extra shuffle beyond the join's own exchange on the
-    key.
+    key.  It groups on ``(key, url, req_ts)``, so exactly duplicated
+    REQUEST rows also collapse to one output row (without ``dedupe``
+    each request row yields its own rows).
 
     Works identically on static and streaming inputs, EXCEPT the
     dedupe aggregate: streaming callers use ``stream_match_responses``,
@@ -118,9 +120,17 @@ def stream_match_responses(
     dropped BEFORE the join with ``dropDuplicatesWithinWatermark`` on
     the key — at-most-one output row per request, bounded dedup state.
     Streaming keeps the FIRST-ARRIVED response (arrival order), not
-    necessarily the earliest event-time one the batch path picks; the
-    two agree whenever duplicates arrive in event-time order, and
-    either way downstream latency sampling sees one sample per fetch.
+    necessarily the earliest event-time one the batch path picks, and
+    it keeps it whether or not it lands in the request's window.  So
+    the two modes differ in one more corner: when the first-arrived
+    duplicate is OUT of window (``resp_ts < req_ts`` or past the
+    horizon), the dedup drops the later in-window retry that the batch
+    path would match, and the request emits a false ``timed_out =
+    true`` row.  Otherwise they agree whenever duplicates arrive in
+    event-time order, and either way downstream latency sampling sees
+    at most one sample per fetch.  Unlike the batch path, exactly
+    duplicated request rows are not collapsed here (no post-join
+    aggregate): each yields its own row.
     (A post-join group-agg would match batch exactly but chains a
     second stateful operator after the stream-stream join — the
     pre-join dedup is the cheaper, provably-bounded shape.)

@@ -6,12 +6,19 @@ has no Iceberg runtime jar and no network, so this module provides a
 minimal, swappable stand-in with the same *semantics*:
 
 - every commit (append or overwrite) writes new parquet files under a
-  unique directory, then atomically publishes a JSON manifest listing
-  the table's live file-sets (``os.rename`` is atomic on POSIX);
+  unique ``data/set=<id>/`` directory, then atomically publishes a JSON
+  manifest (``os.link`` claims it exclusively on POSIX).  The manifest
+  owns the table's format: the live file-sets by schema vintage, each
+  vintage's Spark schema as written and its partition columns, and the
+  schema-evolution ops;
 - readers resolve the latest (or any historical) manifest → snapshot
-  isolation and time travel;
-- each manifest carries per-partition row-count lineage and free-form
-  metrics, mirroring Iceberg snapshot summaries.
+  isolation and time travel.  A snapshot reads as one parquet scan per
+  schema vintage with the recorded schema supplied, its commit dirs as
+  ``set=`` partitions of one ``data/`` root: no schema-inference job,
+  and one ``FileScan`` for a table that never evolved;
+- each manifest carries per-partition row-count lineage, the
+  cumulative row count and free-form metrics, mirroring Iceberg
+  snapshot summaries.
 
 On a real cluster, ``Catalog`` is replaced by ``spark.table`` /
 ``df.writeTo(...).append()`` against an Iceberg catalog — the engine
@@ -24,12 +31,15 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 from dataclasses import dataclass
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _footer_lineage(
@@ -84,9 +94,53 @@ def _atomic_write_json(path: str, payload: dict) -> None:
     os.rename(tmp, path)
 
 
+def _as_nullable(t):
+    """Schema JSON with every field, element and value nullable, as a
+    file scan reports it, so commits of one plan record one schema."""
+    if isinstance(t, dict):
+        return {
+            k: True
+            if k in ("nullable", "containsNull", "valueContainsNull")
+            else _as_nullable(x)
+            for k, x in t.items()
+        }
+    if isinstance(t, list):
+        return [_as_nullable(x) for x in t]
+    return t
+
+
+def _add_sets(
+    vintages: list[dict],
+    ops: int,
+    partition_cols: list[str],
+    schema: StructType,
+    sets: list[str],
+) -> list[dict]:
+    """``vintages`` plus ``sets``, written with ``schema`` under ``ops``
+    schema ops.  They join the newest vintage when it has the same op
+    count and layout and no column of another type (its schema gains
+    their new columns, which read as NULL on its older sets); else they
+    start a vintage."""
+    fields = _as_nullable(schema.jsonValue())["fields"]
+    new = {"ops": ops, "partition_cols": partition_cols, "sets": sets,
+           "schema": {"type": "struct", "fields": fields}}
+    if vintages:
+        last = vintages[-1]
+        have = {f["name"]: f["type"] for f in last["schema"]["fields"]}
+        if (last["ops"], last["partition_cols"]) == (ops, partition_cols) \
+                and all(have.get(f["name"], f["type"]) == f["type"]
+                        for f in fields):
+            new["sets"] = last["sets"] + sets
+            new["schema"]["fields"] = last["schema"]["fields"] + [
+                f for f in fields if f["name"] not in have
+            ]
+            return vintages[:-1] + [new]
+    return vintages + [new]
+
+
 def apply_schema_ops(df: DataFrame, ops: list | None) -> DataFrame:
-    """Replay a snapshot's schema-evolution ops over one file set's raw
-    scan (Iceberg resolves the same thing through field IDs).  Ops are
+    """Replay a snapshot's schema-evolution ops over one vintage's scan
+    (Iceberg resolves the same thing through field IDs).  Ops are
     IDEMPOTENT per file vintage: a file written after a rename already
     carries the new name, so the rename is a no-op on it; a file
     written after an add already has the column.  That is what lets
@@ -121,21 +175,34 @@ class ConcurrentCommitError(RuntimeError):
 @dataclass
 class Snapshot:
     version: int
-    file_sets: list[str]
     lineage: dict[str, Any]
     metrics: dict[str, Any]
     # cumulative live-row count at this version (appends accumulate,
-    # overwrites reset).  None only for manifests written before this
-    # field existed — readers fall back to the lineage-chain walk.
-    total_rows: int | None = None
+    # overwrites reset)
+    total_rows: int
     # ordered schema-evolution ops applied at read time (Iceberg
-    # schema-evolution analogue; see Table.evolve_schema).  None/empty
-    # = the table has never evolved.
-    schema_ops: list | None = None
+    # schema-evolution analogue; see Table.evolve_schema).  None = the
+    # table has never evolved.
+    schema_ops: list | None
+    # the live file sets by schema vintage, oldest first: {"ops": schema
+    # ops in force when the sets were written, "partition_cols": [...],
+    # "schema": Spark schema JSON, "sets": [...]}
+    vintages: list[dict]
+
+    @property
+    def file_sets(self) -> list[str]:
+        return [s for vin in self.vintages for s in vin["sets"]]
+
+    @property
+    def partition_cols(self) -> list[str]:
+        """Directory partitioning of the newest sets; rewrites keep it."""
+        return self.vintages[-1]["partition_cols"] if self.vintages else []
 
 
 class Table:
-    """One snapshot-versioned table."""
+    """One snapshot-versioned table.  Each commit writes its files under
+    ``data/set=<id>/`` (its partition dirs below that), so a snapshot's
+    sets read as partitions of one ``data/`` root."""
 
     def __init__(self, spark: SparkSession, root: str, name: str):
         self.spark = spark
@@ -168,9 +235,14 @@ class Table:
             return None  # expired (expire_snapshots) — history is gone
         with open(path) as f:
             d = json.load(f)
+        if "vintages" not in d:
+            raise ValueError(
+                f"table {self.name}: manifest {path} records no schema "
+                "(written by an older store format); rebuild the store"
+            )
         return Snapshot(
-            d["version"], d["file_sets"], d["lineage"], d["metrics"],
-            d.get("total_rows"), d.get("schema_ops"),
+            d["version"], d["lineage"], d["metrics"], d["total_rows"],
+            d.get("schema_ops"), d["vintages"],
         )
 
     # -- commit serialization --------------------------------------------------
@@ -203,31 +275,131 @@ class Table:
             f"{retries} attempts (concurrent writers)"
         )
 
+    def _publish(
+        self,
+        metrics: dict[str, Any] | None,
+        new_sets: list[str] = (),
+        schema: StructType | None = None,
+        partition_cols: list[str] | None = None,
+        lineage: dict[str, int] | None = None,
+        *,
+        overwrite: bool = False,
+        replaced: list[str] = (),
+        base: Snapshot | None = None,
+        ops: list[dict] = (),
+        retries: int = 20,
+    ) -> int:
+        """The one manifest builder every commit goes through.  The new
+        snapshot is the predecessor's sets minus ``replaced`` (minus all
+        of them on ``overwrite``) plus ``new_sets``, written with
+        ``schema`` and ``partition_cols``, whose rows ``lineage``
+        counts; ``ops`` extend the schema-op list.  With ``base`` the
+        commit rewrites that snapshot and is conflict-checked: if any
+        other writer committed since, it aborts instead of silently
+        dropping that commit's rows (Iceberg validation)."""
+        lineage = lineage or {}
+
+        def build(v: int) -> dict:
+            prev = self.snapshot(v - 1) if v > 1 else None
+            if base is not None and (
+                prev is None or prev.version != base.version
+                or set(prev.file_sets) != set(base.file_sets)
+            ):
+                raise ConcurrentCommitError(
+                    f"table {self.name}: snapshot advanced past "
+                    f"v{base.version} during a row-level rewrite; "
+                    "re-run it against the new snapshot"
+                )
+            vintages, total = [], 0
+            if prev is not None and not overwrite:
+                gone = set(replaced)
+                vintages = [
+                    dict(vin, sets=[s for s in vin["sets"] if s not in gone])
+                    for vin in prev.vintages
+                ]
+                vintages = [vin for vin in vintages if vin["sets"]]
+                total = prev.total_rows - self._set_rows(replaced)
+            # table-level property: evolution ops survive appends AND
+            # overwrites (new data arrives already in current schema;
+            # ops are idempotent on it)
+            schema_ops = (prev and prev.schema_ops or []) + list(ops)
+            if new_sets:
+                vintages = _add_sets(
+                    vintages, len(schema_ops), list(partition_cols or []),
+                    schema, list(new_sets),
+                )
+            payload = {
+                "version": v,
+                "vintages": vintages,
+                "lineage": lineage,
+                "metrics": metrics or {},
+                "total_rows": total + sum(lineage.values()),
+            }
+            if schema_ops:
+                payload["schema_ops"] = schema_ops
+            return payload
+
+        return self._claim_version(build, retries)
+
     # -- read ----------------------------------------------------------------
+
+    def _scan(self, snap: Snapshot, sets: list[str] | None = None):
+        """The one read path: per schema vintage, ONE parquet scan given
+        the schema the manifest recorded (no schema inference, so no
+        Spark job), with the snapshot's schema ops replayed; vintages
+        are unioned by name.  A table that never evolved is one scan.
+        ``sets`` limits the scan to those file sets."""
+        keep = set(snap.file_sets if sets is None else sets)
+        scans = []
+        for vin in snap.vintages:
+            paths = [s for s in vin["sets"] if s in keep]
+            if paths:
+                df = self._parquet(StructType.fromJson(vin["schema"]), paths)
+                scans.append(apply_schema_ops(df, snap.schema_ops))
+        return reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), scans
+        )
+
+    def _parquet(self, schema: StructType, sets: list[str]) -> DataFrame:
+        """Commit dirs read as partitions of ``data/``: ``set`` is the
+        first partition column (typed string, or Spark would type-infer
+        the hex ids), the table's own partition columns follow."""
+        return (
+            self.spark.read.schema(schema.add("set", "string"))
+            .option("basePath", self.data_dir)
+            .parquet(*sets)
+        )
 
     def read(self, version: int | None = None) -> DataFrame | None:
         """DataFrame over the snapshot's file sets; None if table empty.
 
-        Each commit's file set is its own partitioned parquet root, so
-        multi-commit snapshots are unioned by name (Spark refuses mixed
-        partition roots in one scan).  Partition pruning still applies
-        within each set; Iceberg would give a single pruned scan.
-        """
+        Every commit of a schema vintage is in one scan, so partition
+        pruning and column pruning act on all of them at once (see
+        ``_scan``)."""
         snap = self.snapshot(version)
         if snap is None or not snap.file_sets:
             return None
-        # schema ops replay PER SET (sets are vintages: files written
-        # before an evolution need the rename/add, later ones don't)
-        dfs = [
-            apply_schema_ops(self.spark.read.parquet(p), snap.schema_ops)
-            for p in snap.file_sets
-        ]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        return self._scan(snap).drop("set")
 
     # -- write ---------------------------------------------------------------
+
+    def _write_set(
+        self, df: DataFrame, partition_cols: list[str] | None
+    ) -> tuple[str, dict[str, int]]:
+        """Write one commit's files under a fresh ``data/set=<id>/``;
+        returns the dir and its per-partition lineage, read from the
+        parquet footers (driver-side file walk, no Spark job — the
+        Iceberg analogue is snapshot summary stats, likewise
+        metadata-only)."""
+        new_set = os.path.join(self.data_dir, f"set={uuid.uuid4().hex}")
+        writer = df.write.mode("overwrite")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(new_set)
+        return new_set, _footer_lineage(new_set, partition_cols)
+
+    def _set_rows(self, sets: list[str]) -> int:
+        return sum(sum(_footer_lineage(p, None).values()) for p in sets)
 
     def _commit(
         self,
@@ -236,44 +408,11 @@ class Table:
         partition_cols: list[str] | None,
         metrics: dict[str, Any] | None,
     ) -> int:
-        new_set = os.path.join(self.data_dir, uuid.uuid4().hex)
-        writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(new_set)
-        # per-partition lineage for THIS commit, read from parquet footer
-        # metadata (driver-side file walk, no Spark job — the Iceberg
-        # analogue is snapshot summary stats, likewise metadata-only)
-        lineage = _footer_lineage(new_set, partition_cols)
-        commit_rows = sum(lineage.values())
-
-        def build(v: int) -> dict:
-            prev = self.snapshot(v - 1) if v > 1 else None
-            if mode == "append" and prev is not None:
-                file_sets = prev.file_sets + [new_set]
-                prev_total = (
-                    prev.total_rows
-                    if prev.total_rows is not None
-                    else self.approx_rows(prev.version)
-                )
-            else:
-                file_sets = [new_set]
-                prev_total = 0
-            payload = {
-                "version": v,
-                "file_sets": file_sets,
-                "lineage": lineage,
-                "metrics": metrics or {},
-                "total_rows": prev_total + commit_rows,
-            }
-            # table-level property: evolution ops survive appends AND
-            # overwrites (new data arrives already in current schema;
-            # ops are idempotent on it)
-            if prev is not None and prev.schema_ops:
-                payload["schema_ops"] = prev.schema_ops
-            return payload
-
-        return self._claim_version(build)
+        new_set, lineage = self._write_set(df, partition_cols)
+        return self._publish(
+            metrics, [new_set], df.schema, partition_cols, lineage,
+            overwrite=mode != "append",
+        )
 
     def append(
         self,
@@ -293,25 +432,14 @@ class Table:
 
     # -- row-level changes (copy-on-write) -------------------------------------
 
-    def _tagged_sets(self, snap: Snapshot, cols: list[str] | None = None):
-        """Union of per-set scans, each tagged with its set path.
-
-        Column pruning: when ``cols`` is given only those columns reach
-        the parquet scan (the probe job for merge/delete reads key or
-        predicate columns, never full rows)."""
-        parts = []
-        for p in snap.file_sets:
-            # current-schema view per vintage, so merge/delete keys and
-            # predicates written against the evolved schema resolve on
-            # pre-evolution files too
-            d = apply_schema_ops(self.spark.read.parquet(p), snap.schema_ops)
-            if cols is not None:
-                d = d.select(*cols)
-            parts.append(d.withColumn("_set", F.lit(p)))
-        out = parts[0]
-        for d in parts[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+    def _sets_holding(self, base: Snapshot, rows: DataFrame) -> list[str]:
+        """The file sets of ``base`` that hold any of ``rows`` (a scan of
+        ``base`` with its ``set`` column); one small collect."""
+        ids = {r["set"] for r in rows.select("set").distinct().collect()}
+        return [
+            s for s in base.file_sets
+            if os.path.basename(s).partition("=")[2] in ids
+        ]
 
     def _swap_sets(
         self,
@@ -321,62 +449,24 @@ class Table:
         metrics: dict[str, Any] | None,
     ) -> int:
         """Commit ``replacement`` in place of the ``touched`` file sets
-        (Iceberg copy-on-write): untouched sets carry over in the new
-        manifest with ZERO data movement; only the touched fraction is
-        rewritten.  Conflict-checked — if any other writer commits
-        between the base read and the claim, the merge aborts instead
-        of silently dropping that commit's rows (Iceberg validation)."""
-        new_set = os.path.join(self.data_dir, uuid.uuid4().hex)
-        replacement.write.mode("overwrite").parquet(new_set)
-        lineage = _footer_lineage(new_set, None)
-        new_rows = sum(lineage.values())
-        touched_rows = sum(
-            sum(_footer_lineage(p, None).values()) for p in touched
-        )
-        # every touched row deleted → don't publish an empty set (a
-        # part-file-less parquet dir breaks schema inference on read)
-        publish = [new_set] if new_rows > 0 else []
-
-        def build(v: int) -> dict:
-            prev = self.snapshot(v - 1) if v > 1 else None
-            if prev is None or prev.version != base.version or set(
-                prev.file_sets
-            ) != set(base.file_sets):
-                raise ConcurrentCommitError(
-                    f"table {self.name}: snapshot advanced past "
-                    f"v{base.version} during a row-level rewrite; "
-                    "re-run the merge/delete against the new snapshot"
-                )
-            prev_total = (
-                prev.total_rows
-                if prev.total_rows is not None
-                else self.approx_rows(prev.version)
-            )
-            payload = {
-                "version": v,
-                "file_sets": [
-                    s for s in prev.file_sets if s not in set(touched)
-                ] + publish,
-                "lineage": lineage,
-                "metrics": metrics or {},
-                "total_rows": prev_total - touched_rows + new_rows,
-            }
-            if prev.schema_ops:
-                payload["schema_ops"] = prev.schema_ops
-            return payload
-
+        (Iceberg copy-on-write), in the table's partition layout:
+        untouched sets carry over in the new manifest with ZERO data
+        movement; only the touched fraction is rewritten.
+        Conflict-checked against ``base`` (see ``_publish``)."""
+        new_set, lineage = self._write_set(replacement, base.partition_cols)
+        keep = bool(lineage)  # every touched row deleted: publish no set
         try:
-            v = self._claim_version(build, retries=1)
+            return self._publish(
+                metrics, [new_set] if keep else [], replacement.schema,
+                base.partition_cols, lineage,
+                replaced=touched, base=base, retries=1,
+            )
         except Exception:
-            import shutil
-
-            shutil.rmtree(new_set, ignore_errors=True)
+            keep = False
             raise
-        if not publish:
-            import shutil
-
-            shutil.rmtree(new_set, ignore_errors=True)
-        return v
+        finally:
+            if not keep:
+                shutil.rmtree(new_set, ignore_errors=True)
 
     def merge_upsert(
         self,
@@ -404,24 +494,16 @@ class Table:
         if base is None or not base.file_sets:
             return self.overwrite(src, metrics=metrics)
         src_keys = src.select(*key_cols).distinct()
-        touched = [
-            r["_set"]
-            for r in self._tagged_sets(base, key_cols)
-            .join(src_keys, key_cols, "left_semi")
-            .select("_set")
-            .distinct()
-            .collect()
-        ]
+        touched = self._sets_holding(
+            base,
+            self._scan(base).select(*key_cols, "set")
+            .join(src_keys, key_cols, "left_semi"),
+        )
         if not touched:
             # pure insert — append-shaped commit, no rewrite at all
-            return self.append(src, metrics=metrics)
+            return self.append(src, base.partition_cols, metrics)
         survivors = (
-            self._tagged_sets(
-                Snapshot(base.version, touched, {}, {},
-                         None, base.schema_ops),
-                None,
-            )
-            .drop("_set")
+            self._scan(base, touched).drop("set")
             .join(src_keys, key_cols, "left_anti")
         )
         merged = survivors.unionByName(src, allowMissingColumns=True)
@@ -438,61 +520,28 @@ class Table:
         if base is None or not base.file_sets:
             return None
         cond = F.expr(cond) if isinstance(cond, str) else cond
-        touched = [
-            r["_set"]
-            for r in self._tagged_sets(base)
-            .filter(cond)
-            .select("_set")
-            .distinct()
-            .collect()
-        ]
+        touched = self._sets_holding(base, self._scan(base).filter(cond))
         if not touched:
             return None
         # survivors = rows where cond is NOT TRUE (a NULL predicate row
         # is kept — SQL DELETE semantics; a bare ~cond would drop it)
         survivors = (
-            self._tagged_sets(
-                Snapshot(base.version, touched, {}, {},
-                         None, base.schema_ops)
-            )
-            .drop("_set")
+            self._scan(base, touched).drop("set")
             .filter(~F.coalesce(cond, F.lit(False)))
         )
         return self._swap_sets(base, touched, survivors, metrics)
 
     def approx_rows(self, version: int | None = None) -> int:
-        """Row count from manifest lineage (no Spark job).
+        """Row count from the manifest (no Spark job).
 
-        Exact for append-only tables.  Each manifest stores its
-        CUMULATIVE ``total_rows`` at commit time, so the count does not
-        depend on predecessor manifests surviving expiry — a
-        checkpoint-protected snapshot below the expiry horizon (whose
-        predecessors' manifests are gone) still reports the full count
-        (ADVICE r2 item 1; seen.py sizes bloom filters from this).
-        Manifests written before the field existed fall back to the
-        lineage-chain walk.
-        """
+        Each manifest stores its CUMULATIVE ``total_rows`` at commit
+        time, so the count does not depend on predecessor manifests
+        surviving expiry — a checkpoint-protected snapshot below the
+        expiry horizon (whose predecessors' manifests are gone) still
+        reports the full count (seen.py sizes bloom filters from
+        this)."""
         snap = self.snapshot(version)
-        if snap is None:
-            return 0
-        if snap.total_rows is not None:
-            return snap.total_rows
-        total = 0
-        live = set(snap.file_sets)
-        for v in self.versions():
-            if v > snap.version:
-                break
-            s = self.snapshot(v)
-            # an expired predecessor means v starts a chain at a full
-            # rewrite (expire_snapshots only drops history up to such a
-            # boundary), so its lineage covers all of its file sets
-            prev = self.snapshot(v - 1) if v > 1 else None
-            new_sets = set(s.file_sets) - (
-                set(prev.file_sets) if prev is not None else set()
-            )
-            if new_sets & live:
-                total += sum(s.lineage.values())
-        return total
+        return 0 if snap is None else snap.total_rows
 
     # -- schema evolution ------------------------------------------------------
 
@@ -515,43 +564,28 @@ class Table:
         Readers of OLD versions still see the old schema (the op list
         is part of the snapshot, not the table dir) — time travel
         crosses evolutions faithfully.  New writes arrive in current
-        schema; ops are idempotent on them.  ``compact()`` physically
-        materializes the current schema (it rewrites through
-        ``read()``), after which the ops are no-ops on every file.
+        schema and start a new vintage; ops are idempotent on them.
+        ``compact()`` physically materializes the current schema (it
+        rewrites through ``read()``), after which the ops are no-ops on
+        every file.
         """
         for op in ops:
             if op.get("op") not in ("rename", "add", "drop"):
                 raise ValueError(f"unknown schema op: {op!r}")
             if op["op"] == "add" and "type" not in op:
                 raise ValueError(f"add op needs a type: {op!r}")
-
-        def build(v: int) -> dict:
-            prev = self.snapshot(v - 1) if v > 1 else None
-            prev_total = 0
-            if prev is not None and prev.total_rows is not None:
-                prev_total = prev.total_rows
-            elif prev is not None:
-                prev_total = self.approx_rows(prev.version)
-            return {
-                "version": v,
-                "file_sets": prev.file_sets if prev else [],
-                "lineage": {},
-                "metrics": metrics or {"schema_evolution": True},
-                "total_rows": prev_total,
-                "schema_ops": (
-                    (prev.schema_ops or []) if prev else []
-                ) + list(ops),
-            }
-
-        return self._claim_version(build)
+        return self._publish(metrics or {"schema_evolution": True}, ops=ops)
 
     def compact(self) -> int | None:
         """Fold a many-commit snapshot into one file set (the Iceberg
-        rewrite_data_files maintenance action).  Semantically a no-op."""
+        rewrite_data_files maintenance action), in the table's partition
+        layout.  Semantically a no-op."""
         snap = self.snapshot()
         if snap is None or len(snap.file_sets) <= 1:
             return None
-        return self.overwrite(self.read(), metrics={"compaction": True})
+        return self.overwrite(
+            self.read(), snap.partition_cols, {"compaction": True}
+        )
 
     def rollback(self, version: int) -> None:
         """Drop snapshots after ``version`` (time-travel restart)."""
@@ -578,8 +612,6 @@ class Table:
         rows and ``approx_rows`` stays exact.  Time travel below the
         horizon is gone — that is the semantics of expiry.
         """
-        import shutil
-
         vs = self.versions()
         if not vs:
             return {"snapshots_removed": 0, "file_sets_removed": 0}
@@ -636,12 +668,13 @@ class BucketedLog(Table):
     Spark native bucketing over an external table.)
 
     Mechanics: the table is registered in the session catalog
-    (``CREATE TABLE ... CLUSTERED BY ... LOCATION ...``) pointing at
-    this Table's data dir; appends go through ``insertInto`` so every
-    file carries bucket metadata; the snapshot manifest records the
-    FILE NAMES each commit added (bucketed files live flat in one
-    location), which keeps atomic snapshots, time travel, and rollback
-    working exactly as for ``Table``.  A ``_bucket_spec.json`` marker
+    (``CREATE TABLE ... CLUSTERED BY ... LOCATION ...``, typed from the
+    committed schema, never inferred) pointing at this Table's data
+    dir; commits write bucket-aligned files (see ``_stage``); the
+    snapshot manifest records the FILE NAMES each commit added
+    (bucketed files live flat in one location), which keeps atomic
+    snapshots, time travel, and rollback working exactly as for
+    ``Table``.  A ``_bucket_spec.json`` marker
     makes the storage self-describing — ``Catalog.table`` returns a
     ``BucketedLog`` for any table dir that carries one, so resume in a
     fresh session re-registers the catalog table automatically.
@@ -651,8 +684,7 @@ class BucketedLog(Table):
 
     def evolve_schema(self, ops, metrics=None) -> int:
         """Not supported: the bucketed log's schema is pinned by its
-        catalog DDL (CREATE TABLE ... CLUSTERED BY) and every
-        ``insertInto`` is position-based against it.  Evolve by
+        catalog DDL (CREATE TABLE ... CLUSTERED BY).  Evolve by
         rewriting into a new log (the Iceberg equivalent of changing a
         partition transform — also a new table)."""
         raise NotImplementedError(
@@ -729,11 +761,13 @@ class BucketedLog(Table):
             if not f.startswith(("_", "."))
         }
 
-    def _register(self, df_schema) -> None:
+    def _register(self, schema: StructType) -> None:
+        """The catalog table over ``data_dir`` with the bucket DDL, once
+        per session; typed from the schema given, never inferred."""
         if self._registered:
             return
         cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in df_schema
+            f"`{f.name}` {f.dataType.simpleString()}" for f in schema
         )
         self.spark.sql(
             f"CREATE TABLE IF NOT EXISTS {self.cat_name} ({cols}) "
@@ -742,26 +776,39 @@ class BucketedLog(Table):
         )
         self._registered = True
 
-    def _commit(self, df, mode, partition_cols, metrics) -> int:
-        assert partition_cols is None, "bucketed log: no dir partitions"
-        self._register(df.schema)
-        # Write bucket-aligned files OUTSIDE the catalog write path.
-        # Two reasons, both measured in round 3:
-        # - ``insertInto`` ends with an automatic refreshByPath, which
-        #   invalidates EVERY cached plan scanning this table — a crawl
-        #   round's parsed cache reads the frontier, so each frontier
-        #   append silently forced later sinks to recompute the whole
-        #   fetch+parse chain (≈77 s/round at local[4]).
-        # - an unaligned insert writes (input partitions × buckets)
-        #   files per commit, tripping the compactor every round.
-        # Mechanics: ``repartition(n, col)`` assigns partition id
-        # pmod(murmur3(col), n) — the SAME function the bucket spec
-        # uses — so staged partition i holds exactly bucket i's rows,
-        # and the bucket id is carried in the file NAME (Spark's
-        # BucketingUtils parses the trailing ``_NNNNN`` group), so a
-        # rename turns plain parquet output into valid bucket files.
-        import shutil as _sh
+    def _parquet(self, schema: StructType, files: list[str]) -> DataFrame:
+        # flat bucket files, live or retired: nothing to discover
+        return self.spark.read.schema(schema).parquet(
+            *[self._resolve(f) for f in files]
+        )
 
+    def _set_rows(self, files: list[str]) -> int:
+        import pyarrow.parquet as pq
+
+        return sum(pq.read_metadata(self._resolve(f)).num_rows for f in files)
+
+    def _stage(self, df: DataFrame, buckets: set[int] | None = None):
+        """Write ``df`` as bucket files and rename them into
+        ``data_dir`` (only ``buckets``' files when given); returns the
+        new file names.
+
+        The files are written OUTSIDE the catalog write path.  Two
+        reasons, both measured:
+        - ``insertInto`` ends with an automatic refreshByPath, which
+          invalidates EVERY cached plan scanning this table — a crawl
+          round's parsed cache reads the frontier, so each frontier
+          append silently forced later sinks to recompute the whole
+          fetch+parse chain (≈77 s/round at local[4]).
+        - an unaligned insert writes (input partitions × buckets)
+          files per commit, tripping the compactor every round.
+        Mechanics: ``repartition(n, col)`` assigns partition id
+        pmod(murmur3(col), n) — the SAME function the bucket spec
+        uses — so staged partition i holds exactly bucket i's rows,
+        and the bucket id is carried in the file NAME (Spark's
+        BucketingUtils parses the trailing ``_NNNNN`` group), so a
+        rename turns plain parquet output into valid bucket files.
+        Stray renamed files are invisible until a manifest names them:
+        every read path goes through file_sets."""
         staging = os.path.join(self.dir, f"_staging_{uuid.uuid4().hex}")
         new_files: list[str] = []
         try:
@@ -770,67 +817,40 @@ class BucketedLog(Table):
                 .write.mode("overwrite")
                 .parquet(staging)
             )
-            staged = []
             for f in sorted(os.listdir(staging)):
                 if not f.startswith("part-"):
                     continue
                 i = int(f.split("-", 2)[1])
+                if buckets is not None and i not in buckets:
+                    continue  # an empty part file of an unaffected bucket
                 stem, dot, ext = f.partition(".")
-                staged.append((f, f"{stem}_{i:05d}{dot}{ext}"))
-            # Overwrite renames the staged files IN first and deletes
-            # the replaced files only after the manifest claim succeeds
-            # (below): a crash between the two steps leaves the current
-            # snapshot's file_sets fully readable (stray new files are
-            # invisible — every read path goes through file_sets).  The
-            # old order (delete → rename) had a window where the live
-            # snapshot pointed at deleted files (r3 ADVICE).
-            old_files = (
-                self._data_files() if mode != "append" else set()
-            )
-            for src, dst in staged:
+                dst = f"{stem}_{i:05d}{dot}{ext}"
                 os.rename(
-                    os.path.join(staging, src),
-                    os.path.join(self.data_dir, dst),
+                    os.path.join(staging, f), os.path.join(self.data_dir, dst)
                 )
                 new_files.append(dst)
         finally:
-            _sh.rmtree(staging, ignore_errors=True)
-        new_files = sorted(new_files)
-        import pyarrow.parquet as pq
+            shutil.rmtree(staging, ignore_errors=True)
+        return sorted(new_files)
 
-        n = sum(
-            pq.read_metadata(os.path.join(self.data_dir, f)).num_rows
-            for f in new_files
-        )
-
-        def build(v: int) -> dict:
-            prev = self.snapshot(v - 1) if v > 1 else None
-            if mode == "append" and prev is not None:
-                file_sets = prev.file_sets + new_files
-                prev_total = (
-                    prev.total_rows
-                    if prev.total_rows is not None
-                    else self.approx_rows(prev.version)
-                )
-            else:
-                file_sets = new_files
-                prev_total = 0
-            return {
-                "version": v,
-                "file_sets": file_sets,
-                "lineage": {"__all__": n},
-                "metrics": metrics or {},
-                "total_rows": prev_total + n,
-            }
-
-        # retries=1: a bucketed log is SINGLE-WRITER by contract — the
-        # staged-rename scheme assumes no concurrent writer is renaming
-        # files into data_dir, so a lost claim means another writer
-        # exists and the commit must fail loudly rather than serialize.
+    def _publish_files(
+        self, new_files, schema, metrics, replaced, **kw
+    ) -> int:
+        """Publish staged ``new_files`` in place of ``replaced``, then
+        RETIRE the replaced files (not delete: rollback below this
+        commit must stay readable; expire_snapshots reclaims them once
+        unreferenced).  retries=1: a bucketed log is SINGLE-WRITER by
+        contract — the staged-rename scheme assumes no concurrent
+        writer is renaming files into data_dir, so a lost claim means
+        another writer exists and the commit must fail loudly."""
         try:
-            v = self._claim_version(build, retries=1)
+            v = self._publish(
+                metrics, new_files, schema, None,
+                {"__all__": self._set_rows(new_files)},
+                replaced=replaced, retries=1, **kw,
+            )
         except Exception:
-            # claim lost/failed: roll the rename back so the directory
+            # claim lost/failed: roll the renames back so the directory
             # matches the (still-current) previous snapshot exactly
             for f in new_files:
                 try:
@@ -838,11 +858,22 @@ class BucketedLog(Table):
                 except OSError:
                     pass
             raise
-        # manifest now points at new_files only — RETIRE replaced files
-        # (not delete: rollback below this commit must stay readable;
-        # expire_snapshots reclaims them once unreferenced)
-        self._retire(old_files - set(new_files))
+        self._retire(set(replaced) - set(new_files))
+        # register with the first commit, as a later read would: keeps
+        # the catalog DDL off the read path of the next round
+        self._register(schema)
         return v
+
+    def _commit(self, df, mode, partition_cols, metrics) -> int:
+        assert not partition_cols, "bucketed log: no dir partitions"
+        # an overwrite replaces every live file, but only after the
+        # manifest claim succeeds: a crash in between leaves the current
+        # snapshot's files in place
+        old = self._data_files() if mode != "append" else set()
+        return self._publish_files(
+            self._stage(df), df.schema, metrics, old,
+            overwrite=mode != "append",
+        )
 
     def merge_upsert(
         self, src: DataFrame, metrics: dict[str, Any] | None = None
@@ -863,11 +894,7 @@ class BucketedLog(Table):
         buckets are read and rewritten.  An upsert touching k hosts'
         URLs rewrites ≤ k buckets of a 10^10-row log; every other file
         moves into the new manifest untouched.  Replaced files are
-        RETIRED once the claim succeeds (moved to ``retired_dir`` —
-        the bucketed catalog scan requires data_dir == current
-        snapshot, but rollback/time-travel below the rewrite must stay
-        readable; expire_snapshots reclaims retired files once
-        unreferenced).
+        RETIRED once the claim succeeds (see ``_publish_files``).
         """
         snap = self.snapshot()
         if snap is None or not snap.file_sets:
@@ -886,144 +913,49 @@ class BucketedLog(Table):
             return int(fname.partition(".")[0].rsplit("_", 1)[1])
 
         touched = [f for f in snap.file_sets if bucket_of(f) in affected]
+        merged = src
         if touched:
-            old = self.spark.read.parquet(
-                *[os.path.join(self.data_dir, f) for f in touched]
+            merged = (
+                self._scan(snap, touched)
+                .join(src.select(key).distinct(), [key], "left_anti")
+                .unionByName(src, allowMissingColumns=True)
             )
-            merged = old.join(
-                src.select(key).distinct(), [key], "left_anti"
-            ).unionByName(src, allowMissingColumns=True)
-        else:
-            merged = src
-        self._register(merged.schema)
-        import shutil as _sh
-
-        staging = os.path.join(self.dir, f"_staging_{uuid.uuid4().hex}")
-        new_files: list[str] = []
-        try:
-            (
-                merged.repartition(n, F.col(key))
-                .write.mode("overwrite")
-                .parquet(staging)
-            )
-            for f in sorted(os.listdir(staging)):
-                if not f.startswith("part-"):
-                    continue
-                i = int(f.split("-", 2)[1])
-                if i not in affected:
-                    # merged rows hash only to affected buckets by
-                    # construction; anything here is an empty part file
-                    continue
-                stem, dot, ext = f.partition(".")
-                dst = f"{stem}_{i:05d}{dot}{ext}"
-                os.rename(
-                    os.path.join(staging, f),
-                    os.path.join(self.data_dir, dst),
-                )
-                new_files.append(dst)
-        finally:
-            _sh.rmtree(staging, ignore_errors=True)
-        new_files = sorted(new_files)
-        import pyarrow.parquet as pq
-
-        def _rows(names: list[str]) -> int:
-            return sum(
-                pq.read_metadata(
-                    os.path.join(self.data_dir, f)
-                ).num_rows
-                for f in names
-            )
-
-        new_rows, touched_rows = _rows(new_files), _rows(touched)
-
-        def build(v: int) -> dict:
-            prev = self.snapshot(v - 1) if v > 1 else None
-            if prev is None or prev.version != snap.version or set(
-                prev.file_sets
-            ) != set(snap.file_sets):
-                raise ConcurrentCommitError(
-                    f"bucketed log {self.name}: snapshot advanced past "
-                    f"v{snap.version} during merge_upsert"
-                )
-            prev_total = (
-                prev.total_rows
-                if prev.total_rows is not None
-                else self.approx_rows(prev.version)
-            )
-            return {
-                "version": v,
-                "file_sets": [
-                    f for f in prev.file_sets if f not in set(touched)
-                ] + new_files,
-                "lineage": {"__all__": new_rows},
-                "metrics": metrics or {},
-                "total_rows": prev_total - touched_rows + new_rows,
-            }
-
-        try:
-            v = self._claim_version(build, retries=1)
-        except Exception:
-            for f in new_files:
-                try:
-                    os.remove(os.path.join(self.data_dir, f))
-                except OSError:
-                    pass
-            raise
-        self._retire(set(touched) - set(new_files))
-        return v
+        return self._publish_files(
+            self._stage(merged, affected), merged.schema, metrics, touched,
+            base=snap,
+        )
 
     def read(self, version: int | None = None) -> DataFrame | None:
         snap = self.snapshot(version)
         if snap is None or not snap.file_sets:
             return None
-        if set(snap.file_sets) == self._data_files():
-            # current state == snapshot → the BUCKETED catalog scan
-            # (groupBy/join on bucket_col runs without Exchange).
-            # REFRESH happens here, at read time — NOT in _commit: a
-            # refresh invalidates every cached plan that scans this
-            # table, and a crawl round's parsed cache reads the
-            # frontier, so a post-append refresh silently forced later
-            # sinks to recompute the whole fetch+parse chain (measured
-            # 77 s/round at local[4]).
-            if not self._registered:  # schema inference is a Spark job
-                self._register(
-                    self.spark.read.parquet(
-                        os.path.join(self.data_dir, snap.file_sets[0])
-                    ).schema
-                )
-            self.spark.sql(f"REFRESH TABLE {self.cat_name}")
-            return self.spark.table(self.cat_name)
-        # historical read (time travel): plain file-list scan — correct
-        # rows, no bucket metadata (Iceberg keeps it; acceptable here).
-        # Files replaced since ``version`` live in the retired dir.
-        return self.spark.read.parquet(
-            *[self._resolve(f) for f in snap.file_sets]
-        )
+        if set(snap.file_sets) != self._data_files():
+            # historical read (time travel): the file-list scan — correct
+            # rows, no bucket metadata (Iceberg keeps it; acceptable
+            # here).  Files replaced since ``version`` live in the
+            # retired dir.
+            return self._scan(snap)
+        # current state == snapshot → the BUCKETED catalog scan
+        # (groupBy/join on bucket_col runs without Exchange); a fresh
+        # session registers it from the manifest's schema
+        self._register(StructType.fromJson(snap.vintages[-1]["schema"]))
+        # REFRESH happens here, at read time — NOT at commit: a refresh
+        # invalidates every cached plan that scans this table, and a
+        # crawl round's parsed cache reads the frontier, so a
+        # post-append refresh silently forced later sinks to recompute
+        # the whole fetch+parse chain (measured 77 s/round at local[4]).
+        self.spark.sql(f"REFRESH TABLE {self.cat_name}")
+        return self.spark.table(self.cat_name)
 
     def compact(self) -> int | None:
         snap = self.snapshot()
         if snap is None or len(snap.file_sets) <= self.n_buckets:
             return None
-        # overwrite-from-self would delete the very files the lazy plan
-        # reads; stage through a scratch parquet dir first (disk-backed
-        # and distributed — safe at any table size, unlike a
-        # localCheckpoint into executor memory)
-        import shutil
-        import tempfile
-
-        staging = tempfile.mkdtemp(prefix=f"compact_{self.name}_")
-        try:
-            self.read().write.mode("overwrite").parquet(staging)
-            # overwrite re-aligns to one file per bucket via the
-            # repartition in _commit, so a compacted log is exactly
-            # n_buckets files
-            v = self.overwrite(
-                self.spark.read.parquet(staging),
-                metrics={"compaction": True},
-            )
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        return v
+        # the staging write in _stage reads every replaced file before
+        # any new one is renamed in or an old one retired, so the log
+        # can be rewritten from its own scan; the repartition there
+        # re-aligns it to exactly one file per bucket
+        return self.overwrite(self.read(), metrics={"compaction": True})
 
     def rollback(self, version: int) -> None:
         keep = set()

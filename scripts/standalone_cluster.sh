@@ -22,11 +22,20 @@ CPUS_PER_SLOT=${LSS_SA_CPUS_PER_SLOT:-2}
 start() {
     local n_workers=$1 cores=$2 mem=$3
     mkdir -p "$LOG_DIR"
-    # defensive: a stale worker from a previous run would re-register
-    # with the new master at the same address and add phantom cores
-    pkill -f 'org.apache.spark.deploy.worker.Worker' 2>/dev/null || true
-    pkill -f 'org.apache.spark.deploy.master.Master' 2>/dev/null || true
-    sleep 1
+    # slice the allowed CPU set into disjoint proportional chunks
+    mapfile -t ALLOWED < <(python3 -c '
+import os
+for c in sorted(os.sched_getaffinity(0)): print(c)')
+    local chunk=$((cores * CPUS_PER_SLOT))
+    if [ "${#ALLOWED[@]}" -lt $((n_workers * chunk)) ]; then
+        echo "need $((n_workers * chunk)) CPUs ($n_workers workers x $cores cores x $CPUS_PER_SLOT CPUs/slot), only ${#ALLOWED[@]} allowed" >&2
+        exit 1
+    fi
+    # a stale worker from a previous run would re-register with the new
+    # master at the same address and add phantom cores: stop the
+    # daemons this script started before (their PIDs, not every Spark
+    # daemon of the user)
+    stop > /dev/null
     : > "$PID_FILE"
     java -cp "$SPARK_HOME/jars/*" -Xmx768m \
         org.apache.spark.deploy.master.Master \
@@ -34,11 +43,6 @@ start() {
         > "$LOG_DIR/master.log" 2>&1 &
     echo $! >> "$PID_FILE"
     sleep 5
-    # slice the allowed CPU set into disjoint proportional chunks
-    mapfile -t ALLOWED < <(python3 -c '
-import os
-for c in sorted(os.sched_getaffinity(0)): print(c)')
-    local chunk=$((cores * CPUS_PER_SLOT))
     for i in $(seq 0 $((n_workers - 1))); do
         local lo=$((i * chunk))
         local cpus

@@ -175,6 +175,62 @@ def test_blog_registered_read_launches_no_job(spark, blog):
     assert sorted(df.columns) == ["n", "st", "url"]
 
 
+def _jobs_and_plan(spark, read, group):
+    """Spark jobs that ``read()`` launches, and its physical plan."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "snapshot read")
+    try:
+        df = read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sc.statusTracker().getJobIdsForGroup(group), plan, df
+
+
+def test_snapshot_reads_are_one_scan_without_jobs(spark, tmp_path, blog):
+    """A 3-commit partitioned table and a historical bucketed-log
+    snapshot each read as ONE schema-supplied FileScan: no schema
+    inference job, no Union of per-commit scans."""
+    t = Table(spark, str(tmp_path), "parts")
+    for i in range(3):
+        t.append(spark.createDataFrame(
+            [(i, f"k{i % 2}", "v")], "id int, k string, v string"),
+            partition_cols=["k"])
+    jobs, plan, df = _jobs_and_plan(spark, t.read, "table-read")
+    assert jobs == []
+    assert plan.count("FileScan") == 1 and "Union" not in plan
+    assert _rows(df) == [(0, "v", "k0"), (1, "v", "k1"), (2, "v", "k0")]
+
+    v1 = blog.current_version()
+    blog.append(spark.createDataFrame(
+        [("https://h9.leg.br/x", 1, "seen")], "url string, n int, st string"))
+    jobs, plan, df = _jobs_and_plan(
+        spark, lambda: blog.read(v1), "blog-historical-read")
+    assert jobs == []
+    assert plan.count("FileScan") == 1 and "Union" not in plan
+    assert df.count() == 64
+
+
+def test_rewrites_keep_partitioning(spark, tmp_path):
+    """delete_where and compact rewrite in the table's partition layout:
+    the rows and columns read back unchanged, and the lineage of each
+    rewrite is per partition, not one unpartitioned ``__all__``."""
+    t = Table(spark, str(tmp_path), "pages")
+    schema = "id int, kind string, v string"
+    t.append(spark.createDataFrame([(1, "a", "x"), (2, "b", "y")], schema),
+             partition_cols=["kind"])
+    t.append(spark.createDataFrame([(3, "a", "z"), (4, "b", "w")], schema),
+             partition_cols=["kind"])
+    cols = t.read().columns
+    assert t.delete_where("id = 4") is not None
+    assert t.snapshot().lineage == {"a": 1}
+    assert t.compact() is not None
+    assert t.snapshot().lineage == {"a": 2, "b": 1}
+    df = t.read()
+    assert df.columns == cols
+    assert _rows(df) == [(1, "x", "a"), (2, "y", "b"), (3, "z", "a")]
+
+
 def test_blog_merge_updates_and_inserts(spark, blog):
     src = spark.createDataFrame(
         [("https://h0.leg.br/doc/0", 0, "FETCHED"),

@@ -4,6 +4,9 @@ evolved schemas."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -140,3 +143,14 @@ def test_bad_ops_rejected(spark, tmp_path):
         t.evolve_schema([{"op": "cast", "name": "x"}])
     with pytest.raises(ValueError):
         t.evolve_schema([{"op": "add", "name": "x"}])  # no type
+
+
+def test_manifest_without_schema_is_refused(spark, tmp_path):
+    """A manifest that records no schema (an older store format) is not
+    read by inference: the table refuses it, naming itself."""
+    t = _cat(spark, tmp_path).table("old")
+    with open(os.path.join(t.snap_dir, "v00001.json"), "w") as f:
+        json.dump({"version": 1, "file_sets": [], "lineage": {},
+                   "metrics": {}, "total_rows": 0}, f)
+    with pytest.raises(ValueError, match="table old: .*rebuild"):
+        t.read()
