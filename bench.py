@@ -701,17 +701,19 @@ def run_cluster_scaling(best16: "dict | None") -> dict:
         """One crawl on a fresh ``n_workers`` cluster, or None when it
         fails: the failure goes to ``errors`` and the levels already
         measured stay in the result."""
+        label = f"{n_workers}w" + (f"x{cores}" if cores else "")
+        # one executor size for the cluster and the crawl's slot count
+        cores = cores or int(os.environ.get("LSS_BENCH_EXEC_CORES", "4"))
         try:
             _cluster_ctl("start", n_workers, cores=cores)
             try:
                 _settle()
                 return _cluster_crawl(
-                    world_dir, n_workers * (cores or 4), exec_cores=cores
+                    world_dir, n_workers * cores, exec_cores=cores
                 )
             finally:
                 _cluster_ctl("stop")
         except Exception as exc:
-            label = f"{n_workers}w" + (f"x{cores}" if cores else "")
             errors.append(f"{label}: {str(exc)[:200]}")
             return None
 

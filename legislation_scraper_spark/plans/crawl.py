@@ -10,10 +10,12 @@ database/saver.py:63-87) with a Spark-first incremental-batch loop
     selected   = robots ⋈ pending → window rank ≤ budget → salted repartition
     results    = fetch(selected)            (mapInPandas transport)
     pages        += extract_doc(fetched docs)     (Arrow UDF, byte-parity)
-    frontier_log += extract_links(fetched search) (new URLs, depth+1)
-    fetch_errors += failures (fetch + parse)
+    frontier_log += extract_links(fetched search) (new URLs, depth+1;
+                    one row per URL: its first discovery in visit order)
     crawl_log    += every attempted URL: round, host, host_rank, keys,
-                    outcome (ordering contract AND exact seen set)
+                    outcome and error (NULL unless the fetch or the
+                    parse failed) — the ordering contract, the exact
+                    seen set and the error record
     seen_filters += Bloom delta bitmaps of the same rows
     catalog.save_checkpoint(r + 1, {every owned table: version})
                                         ← atomic multi-table commit
@@ -38,10 +40,13 @@ frontier; the frontier-side work is a partition-pruned scan + bloom
 probe.
 
 Crawl-ordering contract: selection order is fully determined by
-(priority, discovered_round, canon_url) per host — reproducible under
-any parallelism and verified against the straight-line simulator
-(plans/simulator.py) by tests/test_crawl_engine.py
-(test_visit_order_matches_simulator / test_seen_set_matches_simulator).
+(priority, discovered_round, canon_url) per host, where a URL keeps the
+priority of its first discovery (earliest round, then the linking
+page's host, host_rank and link position — the simulator's visit
+order) — reproducible under any parallelism and verified against the
+straight-line simulator (plans/simulator.py) by
+tests/test_crawl_engine.py (test_visit_order_matches_simulator /
+test_seen_set_matches_simulator).
 """
 
 from __future__ import annotations
@@ -63,6 +68,18 @@ FRONTIER_COLS = (
     "url", "canon_url", "url_hash", "shard", "host", "source",
     "priority", "depth", "discovered_round",
 )
+
+
+def _first_per_url(df: DataFrame, *order) -> DataFrame:
+    """One frontier row per ``canon_url``: the one whose ``order``
+    columns sort first."""
+    rest = [c for c in FRONTIER_COLS if c != "canon_url"]
+    return (
+        df.groupBy("canon_url")
+        .agg(F.min(F.struct(F.struct(*order).alias("o"), *rest)).alias("b"))
+        .select("canon_url", "b.*")
+        .select(*FRONTIER_COLS)
+    )
 
 
 @dataclass
@@ -174,9 +191,8 @@ class CrawlEngine:
             "frontier_log", "canon_url", self.cfg.frontier_buckets
         )
         self.pages = catalog.table("pages")
-        self.errors = catalog.table("fetch_errors")
-        # one row per attempt: the ordering contract, the visit record
-        # and the exact side of the seen set, stored once
+        # one row per attempt: the ordering contract, the visit record,
+        # the exact side of the seen set and the error record, stored once
         self.crawl_log = catalog.bucketed_log(
             "crawl_log", "canon_url", self.cfg.frontier_buckets
         )
@@ -205,11 +221,18 @@ class CrawlEngine:
             keys_per_shard=self.cfg.filter_keys_per_shard,
         )
 
+    @property
+    def errors(self):
+        """``crawl_log`` again: its rows with ``error`` set are the error
+        record.  This alias and ``visited`` exist only because perfbench
+        reads them; ROADMAP direction 3 deletes both."""
+        return self.crawl_log
+
     def owned_tables(self) -> dict:
         """Every table the engine writes, by name — the checkpoint's
         version map covers all of them."""
         owned = [
-            self.frontier, self.pages, self.errors, self.crawl_log,
+            self.frontier, self.pages, self.crawl_log,
             self.seen.filters_table, self.host_edges, self.url_state,
         ]
         return {t.name: t for t in owned if t is not None}
@@ -269,46 +292,43 @@ class CrawlEngine:
 
     def _best_frontier(self) -> DataFrame | None:
         """One row per canonical URL in the frontier log (earliest
-        discovery wins), seen-or-not — the admission view `pending()`
-        filters and `revisit_selection()` re-admits from."""
+        discovery round wins; a round logs each URL once), seen-or-not
+        — the admission view `pending()` filters and
+        `revisit_selection()` re-admits from."""
         log = self.frontier.read()
         if log is None:
             return None
-        return log.groupBy("canon_url").agg(
-            F.min(
-                F.struct(
-                    "priority", "discovered_round", "depth", "url",
-                    "url_hash", "shard", "host", "source",
-                )
-            ).alias("b")
-        ).select(
-            F.col("b.url").alias("url"),
-            "canon_url",
-            F.col("b.url_hash").alias("url_hash"),
-            F.col("b.shard").alias("shard"),
-            F.col("b.host").alias("host"),
-            F.col("b.source").alias("source"),
-            F.col("b.priority").alias("priority"),
-            F.col("b.depth").alias("depth"),
-            F.col("b.discovered_round").alias("discovered_round"),
+        return _first_per_url(
+            log, "discovered_round", "priority", "depth", "url"
         )
 
     def cooled_hosts(self, r: int) -> DataFrame | None:
         """Hosts in error cooldown at round ``r``: ≥ threshold errors
         within the trailing window.  None when cooldown is disabled or
-        no errors exist yet."""
+        no attempts exist yet."""
         if not self.cfg.error_cooldown_rounds:
             return None
-        errs = self.errors.read()
-        if errs is None:
+        log = self.crawl_log.read()
+        if log is None:
             return None
         return (
-            errs.filter(F.col("round") >= r - self.cfg.error_cooldown_rounds)
+            log.filter(
+                F.col("error").isNotNull()
+                & (F.col("round") >= r - self.cfg.error_cooldown_rounds)
+            )
             .groupBy("host")
             .agg(F.count("*").alias("n_err"))
             .filter(F.col("n_err") >= self.cfg.cooldown_error_threshold)
             .select("host")
         )
+
+    def _host_graph(self) -> DataFrame | None:
+        """The recorded host graph as summed (src_host, dst_host, n)
+        edges, or None before any edges exist."""
+        edges = self.host_edges.read() if self.host_edges is not None else None
+        if edges is None:
+            return None
+        return edges.groupBy("src_host", "dst_host").agg(F.sum("n").alias("n"))
 
     def trust_scores(self) -> DataFrame | None:
         """TrustRank over the crawl's OWN accumulated host graph
@@ -320,14 +340,9 @@ class CrawlEngine:
         Scale: the host graph is orders of magnitude smaller than the
         URL frontier (10^7 hosts vs 10^10 URLs at the north-star tier);
         per-round edge folds are pre-aggregated counts."""
-        if self.host_edges is None:
+        e = self._host_graph()
+        if e is None:
             return None
-        edges = self.host_edges.read()
-        if edges is None:
-            return None
-        e = edges.groupBy("src_host", "dst_host").agg(
-            F.sum("n").alias("n")
-        )
         from ..operators.graph import trustrank
 
         # url_host normalization matches host_edges' src/dst keys —
@@ -349,14 +364,9 @@ class CrawlEngine:
         steps.  Returns (host, opic) or None before any edges exist.
         Same scale posture as :meth:`trust_scores` — the host graph is
         politeness metadata, orders of magnitude below URL volume."""
-        if self.host_edges is None:
+        e = self._host_graph()
+        if e is None:
             return None
-        edges = self.host_edges.read()
-        if edges is None:
-            return None
-        e = edges.groupBy("src_host", "dst_host").agg(
-            F.sum("n").alias("n")
-        )
         from ..operators.graph import opic
 
         return opic(
@@ -367,7 +377,8 @@ class CrawlEngine:
         """Split cfg.global_round_budget across hosts proportional to
         ABSORBABLE backlog — min(pending URLs, robots round capacity)
         per host, disallowed hosts excluded — optionally scaled by
-        TrustRank (cfg.budget_weights='trust_backlog').  Output feeds
+        TrustRank or OPIC (cfg.budget_weights='trust_backlog' |
+        'opic_backlog').  Output feeds
         schedule_round(host_budgets=...), which takes
         min(robots_budget, allocation) — robots stays binding.
 
@@ -406,34 +417,24 @@ class CrawlEngine:
                 F.least(F.col("backlog"), cap).alias("weight"),
             )
         )
-        if self.cfg.budget_weights == "trust_backlog":
-            trust = self.trust_scores()
-            if trust is not None:
-                # +epsilon keeps zero-trust hosts schedulable (they get
-                # leftover quota after trusted backlog is funded)
-                backlog = backlog.join(
-                    F.broadcast(trust), "host", "left"
-                ).select(
-                    "host",
-                    (
-                        F.col("weight")
-                        * (F.coalesce("trust", F.lit(0.0)) + F.lit(1e-6))
-                    ).alias("weight"),
-                )
-        elif self.cfg.budget_weights == "opic_backlog":
-            opic = self.opic_host_scores()
-            if opic is not None:
-                # same epsilon contract as the trust branch: a host the
-                # graph has not yet scored still gets leftover quota
-                backlog = backlog.join(
-                    F.broadcast(opic), "host", "left"
-                ).select(
-                    "host",
-                    (
-                        F.col("weight")
-                        * (F.coalesce("opic", F.lit(0.0)) + F.lit(1e-6))
-                    ).alias("weight"),
-                )
+        scorer = {
+            "trust_backlog": self.trust_scores,
+            "opic_backlog": self.opic_host_scores,
+        }.get(self.cfg.budget_weights)
+        scores = scorer() if scorer is not None else None
+        if scores is not None:
+            # +epsilon keeps a host the graph scores 0 or not at all
+            # schedulable (it gets leftover quota after scored backlog
+            # is funded)
+            backlog = backlog.join(
+                F.broadcast(scores.toDF("host", "score")), "host", "left"
+            ).select(
+                "host",
+                (
+                    F.col("weight")
+                    * (F.coalesce("score", F.lit(0.0)) + F.lit(1e-6))
+                ).alias("weight"),
+            )
         return politeness.allocate_budgets(
             backlog, self.cfg.global_round_budget
         )
@@ -670,6 +671,10 @@ class CrawlEngine:
                 if self.url_state is not None
                 else []
             )
+            # each attempt's outcome, stated once for the counts and every
+            # sink: a fetched document whose record is missing or an error
+            # is a parse error, every other fetched document a page
+            doc_ok = ~F.coalesce(F.col("p.rec.is_error"), F.lit(True))
             parsed = raw.select(
                 *[c for c in raw.columns if c != "body"],
                 *state_cols,
@@ -677,34 +682,32 @@ class CrawlEngine:
                     F.col("fetched"), parse_page("canon_url", "body")
                 ).alias("p"),
             ).select(
-                "*", F.col("p.rec").alias("rec"), F.col("p.l").alias("l")
+                "*", F.col("p.rec").alias("rec"), F.col("p.l").alias("l"),
+                (F.col("fetched") & ~is_search & doc_ok).alias("is_page"),
+                F.when(~F.col("fetched"), F.col("fetch_error"))
+                .when(
+                    ~is_search & ~doc_ok,
+                    # byte-identical to plans/simulator.py's parse error
+                    F.lit("parse error / empty document"),
+                )
+                .alias("error"),
             ).drop("p").cache()
             # one aggregation pass for every round metric (vs one job each)
-            is_page = (
-                F.col("fetched") & ~is_search & ~F.coalesce("rec.is_error", F.lit(True))
-            )
-            is_err = ~F.col("fetched") | (
-                F.col("fetched") & ~is_search & F.coalesce("rec.is_error", F.lit(True))
-            )
             counts = parsed.agg(
                 F.count("*").alias("n_sel"),
                 F.sum(F.col("fetched").cast("long")).alias("n_fetched"),
-                F.sum(is_page.cast("long")).alias("n_pages"),
-                F.sum(is_err.cast("long")).alias("n_err"),
+                F.sum(F.col("is_page").cast("long")).alias("n_pages"),
+                F.count("error").alias("n_err"),
             ).collect()[0]
             n_sel = counts["n_sel"]
             t = _mark("schedule_fetch", t)
             if n_sel == 0:
                 return metrics
-
-            results = parsed  # attempted rows (all outcomes)
-            fetched = parsed.filter(F.col("fetched"))
-
-            # --- extracted documents → pages (+ parse errors) ---
-            doc_rec = fetched.filter(~is_search)
-            good = doc_rec.filter(~F.col("rec.is_error"))
             n_pages = int(counts["n_pages"] or 0)
-            pages_df = good.select(
+            n_err = int(counts["n_err"])
+
+            # --- extracted documents → pages ---
+            pages_df = parsed.filter(F.col("is_page")).select(
                 F.col("canon_url").alias("document_url"),
                 "source",
                 F.col("rec.title").alias("title"),
@@ -728,33 +731,17 @@ class CrawlEngine:
             )
             t = _mark("extract", t)
 
-            err_df = results.filter(~F.col("fetched")).select(
-                "canon_url", "host", "source",
-                F.lit(r).alias("round"), "status", "attempts",
-                F.col("fetch_error").alias("error"),
-            ).unionByName(
-                doc_rec.filter(F.col("rec.is_error")).select(
-                    "canon_url", "host", "source",
-                    F.lit(r).alias("round"), "status", "attempts",
-                    F.lit("parse error / empty document").alias("error"),
-                )
-            )
-            n_err = int(counts["n_err"] or 0)
-
-            links = (
-                fetched.filter(is_search)
-                .select(
-                    "host", "source", "priority", "depth", "discovered_round",
-                    F.explode(
-                        F.concat(
-                            F.col("l.doc_links"),
-                            F.when(
-                                F.col("l.next_link").isNotNull(),
-                                F.array(F.col("l.next_link")),
-                            ).otherwise(F.array().cast("array<string>")),
-                        )
-                    ).alias("url"),
-                )
+            links = parsed.filter(F.col("fetched") & is_search).select(
+                "host", "host_rank", "source", "priority", "depth",
+                F.posexplode(
+                    F.concat(
+                        F.col("l.doc_links"),
+                        F.when(
+                            F.col("l.next_link").isNotNull(),
+                            F.array(F.col("l.next_link")),
+                        ).otherwise(F.array().cast("array<string>")),
+                    )
+                ).alias("pos", "url"),
             )
             if self.cfg.scope_rules:
                 from ..sources.cdx import scope_filter
@@ -773,26 +760,35 @@ class CrawlEngine:
                     .filter(F.col("allowed"))
                     .drop("surt", "allowed")
                 )
-            new_front = with_url_key(
-                links.select(
+            # one row per URL: its first discovery in the round's visit
+            # order (linking page's host, host_rank, link position), as
+            # the simulator admits a link the first time it sees it
+            new_front = _first_per_url(
+                with_url_key(
+                    links.select(
+                        "url",
+                        # the CHILD's own host, not the linking page's — a
+                        # cross-host link scheduled under the parent's host
+                        # would evade the target host's politeness budget
+                        # (links.host stays the parent host for the src side
+                        # of host_edges below)
+                        url_host(F.col("url")).alias("host"),
+                        "source", "priority",
+                        (F.col("depth") + 1).alias("depth"),
+                        F.lit(r + 1).alias("discovered_round"),
+                        F.struct(F.col("host"), "host_rank", "pos").alias(
+                            "found"
+                        ),
+                    ),
                     "url",
-                    # the CHILD's own host, not the linking page's — a
-                    # cross-host link scheduled under the parent's host
-                    # would evade the target host's politeness budget
-                    # (links.host stays the parent host for the src side
-                    # of host_edges below)
-                    url_host(F.col("url")).alias("host"),
-                    "source", "priority",
-                    (F.col("depth") + 1).alias("depth"),
-                    F.lit(r + 1).alias("discovered_round"),
+                    self.cfg.n_shards,
                 ),
-                "url",
-                self.cfg.n_shards,
-            ).select(*FRONTIER_COLS).distinct()
+                "found",
+            )
 
             # --- all round outputs write CONCURRENTLY -----------------------
             # Every sink below reads only the materialized `parsed` cache and
-            # writes its OWN table (separate snapshot dirs), so the five jobs
+            # writes its OWN table (separate snapshot dirs), so the jobs
             # are independent; submitting them from driver threads overlaps
             # their fixed job-submission/stage latency (Spark runs concurrent
             # jobs from one session; FIFO still fills free task slots).  On a
@@ -816,35 +812,32 @@ class CrawlEngine:
                         metrics={"round": r},
                     )
 
-            def w_errors():
-                if n_err:
-                    self.errors.append(_co(err_df))
-
             def w_links() -> int:
                 # single pass: append, then read the new-URL count from the
                 # commit's manifest lineage (computed from parquet footers
                 # during the append) — a separate count() job re-ran the
-                # whole distinct shuffle
+                # whole dedup shuffle
                 v = self.frontier.append(new_front)
                 # manifest lineage records THIS commit's rows only
                 return int(sum(self.frontier.snapshot(v).lineage.values()))
 
             def w_log():
                 # the round's attempts, once: ordering contract, visit
-                # record and exact seen set (keys carried from frontier_log;
-                # the bucketed append aligns rows to canon_url buckets)
+                # record, exact seen set and error record (keys carried from
+                # frontier_log; the bucketed append aligns rows to canon_url
+                # buckets)
                 self.crawl_log.append(
-                    results.select(
+                    parsed.select(
                         F.lit(r).alias("round"), "host", "host_rank",
                         "canon_url", "priority", "fetched", "source",
-                        "status", "attempts", "url_hash", "shard",
+                        "status", "attempts", "error", "url_hash", "shard",
                     )
                 )
 
             def w_filters():
                 # Bloom delta bitmaps over the same cached rows (no re-key,
                 # no dedup: a round attempts each canon_url once)
-                self.seen.add_filters(results.select("shard", "url_hash"))
+                self.seen.add_filters(parsed.select("shard", "url_hash"))
 
             def w_edges():
                 # host-level link graph: src = linking page's host, dst =
@@ -868,7 +861,7 @@ class CrawlEngine:
                 # etag = the content digest (a strong validator, which is
                 # what the sandbox web serves); last_modified = capture ts.
                 st = (
-                    results.filter(F.col("fetched"))
+                    parsed.filter(F.col("fetched"))
                     .select(
                         "canon_url", "host", "source",
                         F.col("digest"),
@@ -881,12 +874,12 @@ class CrawlEngine:
                 )
                 self.url_state.merge_upsert(st, metrics={"round": r})
 
-            sinks = [w_pages, w_errors, w_log, w_filters]
+            sinks = [w_pages, w_log, w_filters]
             if self.host_edges is not None:
                 sinks.append(w_edges)
             if self.url_state is not None:
                 sinks.append(w_state)
-            with ThreadPoolExecutor(max_workers=7) as pool:
+            with ThreadPoolExecutor(max_workers=6) as pool:
                 futs = [pool.submit(fn) for fn in sinks]
                 n_new = pool.submit(w_links).result()
                 for f in futs:
@@ -924,33 +917,16 @@ class CrawlEngine:
 
     def frontier_state(self) -> DataFrame | None:
         """FIXTURES.md §3 view: every discovered URL with its state."""
-        log = self.frontier.read()
-        if log is None:
+        best = self._best_frontier()
+        if best is None:
             return None
-        best = log.groupBy("canon_url").agg(
-            F.min(F.struct("priority", "discovered_round", "depth", "url",
-                           "host", "source")).alias("b")
-        )
+        cols = ("url", "canon_url", "host", "source", "priority", "depth")
         v = self.crawl_log.read()
         if v is None:
-            return best.select(
-                F.col("b.url").alias("url"), "canon_url",
-                F.col("b.host").alias("host"),
-                F.col("b.source").alias("source"),
-                F.col("b.priority").alias("priority"),
-                F.col("b.depth").alias("depth"),
-                F.lit("pending").alias("state"),
-            )
+            return best.select(*cols, F.lit("pending").alias("state"))
         state = F.when(F.col("fetched"), F.lit("fetched")).otherwise(
             F.lit("error")
         )
         return best.join(
             v.select("canon_url", state.alias("state")), "canon_url", "left"
-        ).select(
-            F.col("b.url").alias("url"), "canon_url",
-            F.col("b.host").alias("host"),
-            F.col("b.source").alias("source"),
-            F.col("b.priority").alias("priority"),
-            F.col("b.depth").alias("depth"),
-            F.coalesce("state", F.lit("pending")).alias("state"),
-        )
+        ).select(*cols, F.coalesce("state", F.lit("pending")).alias("state"))

@@ -28,6 +28,7 @@ import pytest
 
 from legislation_scraper_spark.operators.fetch import FetchPolicy
 from legislation_scraper_spark.plans.crawl import CrawlConfig, CrawlEngine
+from legislation_scraper_spark.plans.simulator import SimWorld, simulate
 from legislation_scraper_spark.tables import Catalog
 
 ALPHA = "alpha.gov.br"
@@ -182,8 +183,8 @@ def test_extracted_docs_complete_and_error_free(engine):
     assert set(pages) == {BETA1, BETA2, ALPHA3, DELTA4}
     for u in pages:
         assert DOC_TEXTS[u].strip().split(".")[0] in pages[u]
-    errs = engine.errors.read()  # None: table never written to
-    assert errs is None or errs.count() == 0
+    errs = engine.crawl_log.read().filter(F.col("error").isNotNull())
+    assert errs.count() == 0
 
 
 def test_host_edges_use_normalized_keys(engine):
@@ -214,3 +215,86 @@ def test_no_robots_row_defaults_to_allow(engine):
         if r["host"] == DELTA
     ]
     assert [(r["canon_url"], r["fetched"]) for r in log] == [(DELTA4, True)]
+
+
+# --- first discovery wins -----------------------------------------------
+
+SEARCH_A = "https://a.example/busca?page=0"
+SEARCH_B = "https://b.example/busca?page=0"
+C_DOC1 = "https://c.example/norma/1"
+C_DOC2 = "https://c.example/norma/2"
+
+
+def _search_html(*links: str) -> str:
+    res = "".join(f'<a class="res" href="{u}">Doc</a>' for u in links)
+    return (
+        f'<html><body><div class="resultados">{res}</div>'
+        f'<span class="total">Total de registros: {len(links)}</span>'
+        f"</body></html>"
+    )
+
+
+@pytest.fixture(scope="module")
+def first_found(spark, tmp_path_factory):
+    """Round 0 visits a priority-5 search page on a.example and a
+    priority-1 one on b.example; both link c.example's /norma/1, only
+    b.example links /norma/2, and c.example's budget is 1."""
+    pages = {
+        SEARCH_A: _search_html(C_DOC1),
+        SEARCH_B: _search_html(C_DOC1, C_DOC2),
+        C_DOC1: _doc_html("Norma 1", "texto da norma um. " * 20),
+        C_DOC2: _doc_html("Norma 2", "texto da norma dois. " * 20),
+    }
+    seeds = [
+        {"seed_url": SEARCH_A, "source": "a", "priority": 5},
+        {"seed_url": SEARCH_B, "source": "b", "priority": 1},
+    ]
+    robots = {"c.example": {"allow": True, "max_parallel": 1}}
+    policy = FetchPolicy(permanent_mod=1)  # no simulated 5xx
+    eng = CrawlEngine(
+        spark, Catalog(spark, str(tmp_path_factory.mktemp("first"))),
+        spark.createDataFrame(
+            [(u, h.encode("utf-8")) for u, h in pages.items()],
+            "url string, html binary",
+        ).select(
+            "url",
+            F.to_timestamp(F.lit("2024-03-01 00:00:00")).alias("warc_ts"),
+            "html",
+        ),
+        spark.createDataFrame(
+            [tuple(s.values()) for s in seeds],
+            "seed_url string, source string, priority int",
+        ),
+        spark.createDataFrame(
+            [("c.example", True, 1, 1)],
+            "host string, allow boolean, crawl_delay_ms long, "
+            "max_parallel int",
+        ),
+        CrawlConfig(n_shards=4, fetch_partitions=4, policy=policy),
+    )
+    eng.run(max_rounds=4)
+    sim = simulate(
+        SimWorld({u: h.encode("utf-8") for u, h in pages.items()}, robots,
+                 seeds),
+        policy=policy, max_rounds=4,
+    )
+    return eng, sim
+
+
+def test_first_discovery_wins_as_in_simulator(first_found):
+    """A link found twice in one round keeps the priority of its first
+    discovery in visit order (a.example's, 5), as the simulator admits
+    it, so c.example's budget-1 slot goes to /norma/2 (priority 1)
+    first."""
+    eng, sim = first_found
+    got = sorted(
+        (r["round"], r["host"], r["host_rank"], r["canon_url"], r["fetched"])
+        for r in eng.crawl_log.read().collect()
+    )
+    assert got == sorted(sim.visit_log)
+    assert (1, "c.example", 1, C_DOC2, True) in got
+    prio = {
+        r["canon_url"]: r["priority"]
+        for r in eng.frontier_state().collect()
+    }
+    assert prio[C_DOC1] == 5 and prio[C_DOC2] == 1

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from legislation_scraper_spark.operators.seen import with_url_key
 from legislation_scraper_spark.plans.crawl import CrawlConfig, CrawlEngine
 from legislation_scraper_spark.plans.simulator import SimWorld, simulate
 from legislation_scraper_spark.synth import (
@@ -93,7 +94,7 @@ def test_extracted_pages_byte_identical(engine_result, sim_result, world):
 
 def test_errors_match_simulator(engine_result, sim_result):
     eng, _ = engine_result
-    errs = eng.errors.read()
+    errs = eng.crawl_log.read().filter(F.col("error").isNotNull())
     got = {r["canon_url"]: r["error"] for r in errs.collect()}
     assert got == sim_result.errors
 
@@ -152,15 +153,19 @@ def test_error_cooldown_excludes_then_readmits(spark, world, tmp_path_factory):
     )
     eng.bootstrap()
     eng.round(0)
-    # inject a block signal: host H errored hard in round 0
+    # inject a block signal: host H errored hard in round 0 (H is a host
+    # whose seed page was fetched, so it has discovered work)
     visited = eng.crawl_log.read()
-    h = visited.select("host").first()["host"]
-    eng.errors.append(
-        spark.createDataFrame(
-            [(f"https://{h}/blocked", h, "synthetic", 0, 503, 5, "blocked")],
-            "canon_url string, host string, source string, round int, "
-            "status int, attempts int, error string",
-        )
+    h = visited.filter("fetched").orderBy("host").first()["host"]
+    blocked = spark.createDataFrame(
+        [(0, h, 1, f"https://{h}/blocked", 0, False, "synthetic", 503, 5,
+          "blocked")],
+        "round int, host string, host_rank int, url string, priority int, "
+        "fetched boolean, source string, status int, attempts int, "
+        "error string",
+    )
+    eng.crawl_log.append(
+        with_url_key(blocked, "url", eng.cfg.n_shards).select(*visited.columns)
     )
     # the exclusion must be meaningful: the host has pending work
     assert eng.pending().filter(F.col("host") == h).count() > 0

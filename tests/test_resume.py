@@ -108,7 +108,7 @@ def test_resume_equals_uninterrupted(spark, world, reference, tmp_path):
         ("pages", ("document_url", "text_markdown", "type", "situation")),
         ("seen", ("canon_url",)),
         ("crawl_log", ("round", "host", "host_rank", "canon_url", "fetched")),
-        ("fetch_errors", ("canon_url", "error")),
+        ("crawl_log", ("canon_url", "round", "error")),
     ]:
         assert _table_rows(a, name, cols) == _table_rows(b2, name, cols), name
 
@@ -172,14 +172,12 @@ def test_bucketed_overwrite_crash_safety(spark, tmp_path):
 
 # --- crash anywhere in a round, then resume -----------------------------
 
-ROUND_TABLES = ("pages", "fetch_errors", "frontier_log", "crawl_log",
-                "seen_filters")
+ROUND_TABLES = ("pages", "frontier_log", "crawl_log", "seen_filters")
 COMPARED = [
     ("pages", ("document_url", "text_markdown", "type", "situation")),
     ("seen", ("canon_url",)),
     ("crawl_log", ("round", "host", "host_rank", "canon_url", "fetched",
-                   "status", "attempts", "url_hash", "shard")),
-    ("fetch_errors", ("canon_url", "round", "error")),
+                   "status", "attempts", "url_hash", "shard", "error")),
     ("frontier_log", ("url", "canon_url", "host", "depth",
                       "discovered_round")),
     # a leaked delta bitmap never changes a result (false positives
@@ -190,7 +188,8 @@ COMPARED = [
 
 def test_round_commits_each_table_once(reference):
     """One attempts log: a round with pages and errors commits exactly
-    five tables, once each, and no `seen` or `visited` table exists."""
+    four tables, once each, and no `seen`, `visited` or `fetch_errors`
+    table exists."""
     eng, rounds = reference
     full = [m for m in rounds if m["pages"] and m["errors"]]
     assert full, "the world must have a round with pages and errors"
@@ -198,6 +197,7 @@ def test_round_commits_each_table_once(reference):
         assert m["commits"] == {t: 1 for t in ROUND_TABLES}, m["round"]
     assert "seen" not in os.listdir(eng.catalog.root)
     assert "visited" not in os.listdir(eng.catalog.root)
+    assert "fetch_errors" not in os.listdir(eng.catalog.root)
     # every checkpoint, bootstrap's included, names every table
     for tag in eng.catalog.checkpoints():
         versions = eng.catalog.load_checkpoint(tag)["versions"]
@@ -254,7 +254,8 @@ def _rows_at(eng, tag, name, cols):
 
 @pytest.mark.parametrize("crash_round,sinks", [
     # round 0 fetches only the seed search pages: no pages, one error
-    (0, ("fetch_errors", "frontier_log", "crawl_log", "seen_filters")),
+    # (crawl_log carries it)
+    (0, ("frontier_log", "crawl_log", "seen_filters")),
     # round 1 has pages but no errors, after a round that wrote no pages
     (1, ("pages", "frontier_log", "crawl_log", "seen_filters")),
 ], ids=["round0", "round1"])
