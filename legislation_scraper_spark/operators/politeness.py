@@ -15,8 +15,10 @@ Spark-first equivalents:
 - host skew (one mega-host) would make both the rank's shuffle and the
   fetch stage lopsided → **salted repartition** for the fetch stage
   (functions/urls.salted_host); the budget was already enforced by the
-  rank, so salting is purely load-balancing.  AQE's skew-join handling
-  covers the joins.
+  rank, so salting is purely load-balancing.  Every host-keyed join
+  here broadcasts its per-host side (robots, budgets), so no join
+  shuffles on host and the crawl round needs no runtime skew-join
+  splitting: it runs without AQE (session.py).
 """
 
 from __future__ import annotations

@@ -43,6 +43,9 @@ from pyspark.sql import functions as F
 
 from ..functions.urls import canonicalize_url, url_hash
 
+# bitmap bytes one filter-log file is sized for
+FILTER_FILE_BYTES = 128 << 20
+
 
 def with_url_key(df: DataFrame, url_col: str = "url", n_shards: int = 64) -> DataFrame:
     """Attach canonical url, 64-bit key, and shard columns."""
@@ -206,6 +209,18 @@ class SeenSet:
     def _params(self) -> BloomParams:
         return BloomParams.for_capacity(self.keys_per_shard, self.fpp)
 
+    def _sized(self, bitmaps: DataFrame) -> DataFrame:
+        """``bitmaps`` in the fewest partitions that keep a file under
+        FILTER_FILE_BYTES, counting one ``n_words``-word bitmap per
+        shard.  The bitmaps leave a shuffle on ``shard``, so without
+        this a commit writes a file per shuffle partition wherever AQE
+        does not coalesce them, as in a crawl round.  A repartition,
+        not a coalesce: a coalesce would also narrow the bitmap build
+        stage behind it to that many tasks; this moves one row per
+        shard."""
+        size = self.n_shards * self._params().n_words * 8
+        return bitmaps.repartition(-(-size // FILTER_FILE_BYTES))
+
     def df(self) -> DataFrame | None:
         return self.table.read()
 
@@ -232,9 +247,9 @@ class SeenSet:
         come from ``frontier_log``, so no re-keying or dedup shuffle is
         needed (duplicate keys set the same bits)."""
         if self.filters_table is not None:
-            self.filters_table.append(
+            self.filters_table.append(self._sized(
                 build_bloom_shards(keyed, self._params(), self.n_shards)
-            )
+            ))
 
     def merged_filters(self) -> DataFrame | None:
         """One bitwise-OR-folded Bloom bitmap per shard from the delta
@@ -262,7 +277,7 @@ class SeenSet:
         """Fold the delta log to one row per shard (maintenance)."""
         merged = self.merged_filters()
         if merged is not None:
-            self.filters_table.overwrite(merged)
+            self.filters_table.overwrite(self._sized(merged))
 
     def filter_unseen(
         self, cand: DataFrame, url_col: str = "canon_url"

@@ -64,10 +64,37 @@ from ..operators.fetch import FetchPolicy, fetch
 from ..operators.seen import SeenSet, with_url_key
 from ..tables import Catalog
 
+# off for the duration of a round (session.py explains why)
+AQE = "spark.sql.adaptive.enabled"
+
 FRONTIER_COLS = (
     "url", "canon_url", "url_hash", "shard", "host", "source",
     "priority", "depth", "discovered_round",
 )
+
+
+def _build_cached(spark: SparkSession, *dfs: DataFrame | None) -> None:
+    """Build, on this thread, the cache of each frame in ``dfs`` that
+    is cached and not yet built.  For a plan cached with AQE, Spark
+    runs every stage of it but the last, which runs when a job first
+    reads the cache; a built cache costs nothing here.
+
+    A cached plan planned with AQE whose build fails un-caches every
+    cache that reads it (``CacheManager.recacheByPlan``), taking each
+    one's build lock.  A round without AQE builds its own caches while
+    waiting on broadcast threads, and a broadcast thread may be the
+    first to build a caller's cache: a failure there would wait on the
+    lock of the round cache whose builder waits on it, a deadlock
+    rather than an error.  Built first here, outside any round cache,
+    the same failure raises from the round."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for df in dfs:
+        if df is None:
+            continue
+        hit = cache.lookupCachedData(df._jdf)
+        if hit.isDefined():
+            builder = hit.get().cachedRepresentation().cacheBuilder()
+            builder.cachedColumnBuffers()
 
 
 def _first_per_url(df: DataFrame, *order) -> DataFrame:
@@ -605,55 +632,76 @@ class CrawlEngine:
         candidate set AFTER the seen filter — the recrawl admission
         path.  Caller contract: rows are already deduped against the
         fresh pending set (revisits are seen by definition, so the two
-        sets are disjoint by construction)."""
+        sets are disjoint by construction).
+
+        The round runs with adaptive execution off, so its plans are
+        static and its generated code is reused from round to round;
+        the session's setting is restored when the round returns or
+        raises.  The host-budget graph scoring runs at the session's
+        setting, and the caller's cached inputs are built before AQE
+        goes off (:func:`_build_cached`)."""
         import time as _time
 
-        timings: dict[str, float] = {}
-
-        def _mark(name: str, t0: float) -> float:
-            t1 = _time.perf_counter()
-            timings[name] = round(t1 - t0, 3)
-            return t1
-
-        t = _time.perf_counter()
-        self._maintain()
-        self._maybe_expire(r)
-        t = _mark("maintain", t)
-        pending = self.pending()
-        metrics = {"round": r, "selected": 0, "fetched": 0, "errors": 0,
-                   "new_urls": 0, "pages": 0, "timings": timings}
-        if extra_pending is not None:
-            pending = (
-                extra_pending if pending is None
-                else pending.unionByName(extra_pending)
-            )
-        if pending is None:
-            return metrics
-        cooled = self.cooled_hosts(r)
-        if cooled is not None:
-            # blocked-host back-off: broadcast anti-join (the cooled set
-            # is tiny — hosts, not URLs)
-            pending = pending.join(F.broadcast(cooled), "host", "left_anti")
-        host_budgets = (
-            self._host_budgets(pending)
-            if self.cfg.global_round_budget is not None
-            else None
+        conf = self.spark.conf
+        aqe = conf.get(AQE)
+        _build_cached(
+            self.spark, self.pages_raw, self.robots, self.seeds,
+            extra_pending,
         )
-        selected = politeness.schedule_round(
-            pending, self.robots, self.cfg.salt_buckets,
-            self.cfg.fetch_partitions, self.cfg.round_window_ms,
-            self.cfg.rank_impl, host_budgets=host_budgets,
-        ).persist()
-        # persist, because the fetch plan references the schedule THREE
-        # times (broadcast build of `selected`, the misses probe side,
-        # and the hit-set broadcast's join subtree) — exchange reuse
-        # dedupes the shuffles but not the window-rank recompute above
-        # them (~13 s/round at N4 bench scale, more at higher levels).
-        # MEMORY_AND_DISK persist (not localCheckpoint): lineage stays
-        # intact, so an executor loss on a real cluster recomputes the
-        # partition instead of failing the job.
-        parsed = None
+        conf.set(AQE, "false")
+        selected = parsed = None
         try:
+            timings: dict[str, float] = {}
+
+            def _mark(name: str, t0: float) -> float:
+                t1 = _time.perf_counter()
+                timings[name] = round(t1 - t0, 3)
+                return t1
+
+            t = _time.perf_counter()
+            self._maintain()
+            self._maybe_expire(r)
+            t = _mark("maintain", t)
+            pending = self.pending()
+            metrics = {"round": r, "selected": 0, "fetched": 0, "errors": 0,
+                       "new_urls": 0, "pages": 0, "timings": timings}
+            if extra_pending is not None:
+                pending = (
+                    extra_pending if pending is None
+                    else pending.unionByName(extra_pending)
+                )
+            if pending is None:
+                return metrics
+            cooled = self.cooled_hosts(r)
+            if cooled is not None:
+                # blocked-host back-off: broadcast anti-join (the cooled
+                # set is tiny — hosts, not URLs)
+                pending = pending.join(
+                    F.broadcast(cooled), "host", "left_anti"
+                )
+            host_budgets = None
+            if self.cfg.global_round_budget is not None:
+                # the graph scorers (trustrank, opic) plan and run their
+                # iterations here, at localCheckpoint: at the session's
+                # setting, like the rest of operators/graph
+                conf.set(AQE, aqe)
+                try:
+                    host_budgets = self._host_budgets(pending)
+                finally:
+                    conf.set(AQE, "false")
+            selected = politeness.schedule_round(
+                pending, self.robots, self.cfg.salt_buckets,
+                self.cfg.fetch_partitions, self.cfg.round_window_ms,
+                self.cfg.rank_impl, host_budgets=host_budgets,
+            ).persist()
+            # persist, because the fetch plan references the schedule THREE
+            # times (broadcast build of `selected`, the misses probe side,
+            # and the hit-set broadcast's join subtree) — exchange reuse
+            # dedupes the shuffles but not the window-rank recompute above
+            # them (~13 s/round at N4 bench scale, more at higher levels).
+            # MEMORY_AND_DISK persist (not localCheckpoint): lineage stays
+            # intact, so an executor loss on a real cluster recomputes the
+            # partition instead of failing the job.
             raw = fetch(
                 selected, self.pages_raw, self.cfg.policy, self.cfg.transport
             )
@@ -762,7 +810,9 @@ class CrawlEngine:
                 )
             # one row per URL: its first discovery in the round's visit
             # order (linking page's host, host_rank, link position), as
-            # the simulator admits a link the first time it sees it
+            # the simulator admits a link the first time it sees it.
+            # Grouped on the frontier log's bucket partitioning, so the
+            # append's own repartition is dropped: one canon_url shuffle.
             new_front = _first_per_url(
                 with_url_key(
                     links.select(
@@ -782,7 +832,7 @@ class CrawlEngine:
                     ),
                     "url",
                     self.cfg.n_shards,
-                ),
+                ).repartition(self.cfg.frontier_buckets, "canon_url"),
                 "found",
             )
 
@@ -852,6 +902,10 @@ class CrawlEngine:
                     .groupBy("src_host", "dst_host")
                     .agg(F.count("*").alias("n"))
                     .withColumn("round", F.lit(r))
+                    # one file a commit, not one per shuffle partition:
+                    # host pairs are few, and the round has no AQE to
+                    # coalesce them
+                    .coalesce(1)
                 )
 
             def w_state():
@@ -899,7 +953,9 @@ class CrawlEngine:
             # also on failure: a crashed round must not pin its caches
             if parsed is not None:
                 parsed.unpersist()
-            selected.unpersist()
+            if selected is not None:
+                selected.unpersist()
+            conf.set(AQE, aqe)
 
     def run(self, max_rounds: int = 100) -> list[dict]:
         """Crawl until the frontier drains (or max_rounds)."""

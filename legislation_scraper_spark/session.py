@@ -1,8 +1,32 @@
 """SparkSession factory with scale-oriented defaults.
 
 Defaults chosen for a multi-executor cluster reading ~100 TB:
-- AQE on (runtime coalesce, skew-join splitting) — the crawl frontier is
-  host-skewed by construction (a few huge hosts), cf. SURVEY.md §2.5 W3.
+- AQE on for the library (runtime coalesce, skew-join splitting,
+  runtime broadcast conversion): dedup, curation, graph and the oracle
+  queries join and group skewed data whose sizes are unknown until it
+  runs, cf. SURVEY.md §2.5 W3.  The crawl round
+  (``plans/crawl.CrawlEngine.round``) switches AQE off for its own
+  duration and restores it after: the round fixes its own partition
+  counts (salt buckets, fetch partitions, bucket counts), defeats host
+  skew by salting and names its broadcasts.  AQE runs every shuffle and
+  broadcast stage as its own job and re-plans the rest of the query
+  after each, which on a small round was most of the round's Spark jobs
+  and driver time.  Measured on perfbench's ``deep_crawl`` and
+  ``wide_round`` configuration (no global round budget, no host-edge
+  log): half the jobs a ``deep_crawl`` round, and faster rounds in 9
+  of 10 alternating pairs on each workload.  The host-budget graph scoring (``global_round_budget`` with
+  ``budget_weights`` ``trust_backlog`` or ``opic_backlog``) keeps the
+  session's setting, as the graph code it runs is planned for AQE; and
+  inputs the caller cached are built before AQE goes off
+  (``plans/crawl._build_cached``).
+- Generated code reused across queries: whole-stage codegen class names
+  carry no stage id (``spark.sql.codegen.useIdInClassName=false``), so
+  the same operator tree compiles to the same source in every round,
+  and the codegen cache holds 4000 classes, not 100 — one crawl round
+  alone generates ~110.  A repeated round then compiles a handful of
+  classes instead of ~110 fresh ones.  Neither setting changes results;
+  the cache size is a static conf, fixed when the JVM's first session
+  starts.
 - Arrow enabled — every Python-side transform is a vectorized pandas UDF
   (BASELINE.json input_hint mandates no per-row Python).
 - UTC session timezone so timestamp semantics are engine-independent.
@@ -73,6 +97,8 @@ def get_spark(
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.codegen.useIdInClassName": "false",
+        "spark.sql.codegen.cache.maxEntries": "4000",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # Byte-bound Arrow batches: crawl rows carry multi-KB html bodies,
         # so the default 10k-row batches reach ~56 MB each; at 32 concurrent

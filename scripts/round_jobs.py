@@ -1,4 +1,4 @@
-"""Spark jobs per crawl round, by call site and by sink table.
+"""Spark jobs, generated classes and JIT time per crawl round.
 
 Builds perfbench's ``deep_crawl`` world for one seed through
 ``perfbench/env.py`` and ``perfbench/workloads.py`` (same session
@@ -6,8 +6,10 @@ settings, world and engine config as the benchmark), runs the crawl's
 warm-up rounds, then rounds ``--first`` to ``--last``.  For each of
 those rounds it prints the jobs Spark ran, their tasks and their summed
 wall time (job-seconds), split by the call site that launched each job
-and, for jobs launched by a table append, by that table.  The last line
-is one JSON object with the same numbers.
+and, for jobs launched by a table append, by that table, and the
+classes Spark's code generator compiled and the milliseconds the JVM's
+JIT compilers spent during the round (``BenchEnv.jvm_counters``).  The
+last line is one JSON object with the same numbers.
 
 Run from anywhere; it uses the checkout it lives in:
 
@@ -89,7 +91,7 @@ def split(jobs: list[dict], key: str) -> dict:
     return {k: {**v, "seconds": round(v["seconds"], 3)} for k, v in out.items()}
 
 
-def summary(r: int, jobs: list[dict]) -> dict:
+def summary(r: int, jobs: list[dict], jvm: dict) -> dict:
     sinks = [j for j in jobs if j["table"] is not None]
     return {
         "round": r,
@@ -97,6 +99,8 @@ def summary(r: int, jobs: list[dict]) -> dict:
         "tasks": sum(j["tasks"] for j in jobs),
         "job_s": round(sum(j["seconds"] for j in jobs), 3),
         "sink_jobs": len(sinks),
+        "codegen_classes": int(jvm["codegen_classes"]),
+        "jit_ms": int(jvm["jit_ms"]),
         "by_site": split([j for j in jobs if j["table"] is None], "site"),
         "by_table": split(sinks, "table"),
     }
@@ -105,7 +109,8 @@ def summary(r: int, jobs: list[dict]) -> dict:
 def show(s: dict) -> None:
     print(
         f"round {s['round']}: {s['jobs']} jobs ({s['sink_jobs']} in sinks), "
-        f"{s['tasks']} tasks, {s['job_s']:.2f} job-s"
+        f"{s['tasks']} tasks, {s['job_s']:.2f} job-s, "
+        f"{s['codegen_classes']} codegen classes, {s['jit_ms']} JIT ms"
     )
     for title, key in (("call site", "by_site"), ("sink table", "by_table")):
         print(f"  by {title}:")
@@ -144,12 +149,15 @@ def main(argv: list[str] | None = None) -> None:
         last = max((j["id"] for j in jobs_since(store, -1)), default=-1)
         rounds = []
         for r in range(args.first, args.last + 1):
+            before = env.jvm_counters()
             if eng.round(r)["selected"] == 0:
                 break
+            after = env.jvm_counters()
             jobs = jobs_since(store, last)
             if jobs:
                 last = jobs[-1]["id"]
-            rounds.append(summary(r, jobs))
+            jvm = {k: after[k] - before[k] for k in after}
+            rounds.append(summary(r, jobs, jvm))
             show(rounds[-1])
         print(json.dumps({"seed": args.seed, "rounds": rounds}))
     finally:

@@ -23,6 +23,8 @@ implicit — here it must be enforced).
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -204,6 +206,16 @@ def test_host_edges_use_normalized_keys(engine):
     assert agg.get((ALPHA, ALPHA), 0) >= 1
     # robots-rowless host still appears as a normalized dst
     assert agg[(ALPHA, DELTA)] == 1
+
+
+def test_host_edges_one_file_per_commit(engine):
+    """The edges leave a shuffle on the host pair; the round runs
+    without AQE's partition coalescing, so the sink writes them as one
+    file rather than one per shuffle partition."""
+    t = engine.host_edges
+    for s in t.snapshot().file_sets:
+        files = [f for f in os.listdir(s) if f.endswith(".parquet")]
+        assert len(files) == 1, (s, files)
 
 
 def test_no_robots_row_defaults_to_allow(engine):

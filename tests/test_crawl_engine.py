@@ -4,6 +4,8 @@ error routing, robots refusal, and no-URL-fetched-twice."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -97,6 +99,22 @@ def test_errors_match_simulator(engine_result, sim_result):
     errs = eng.crawl_log.read().filter(F.col("error").isNotNull())
     got = {r["canon_url"]: r["error"] for r in errs.collect()}
     assert got == sim_result.errors
+
+
+def test_seen_filters_one_file_per_commit(engine_result):
+    """Each commit of the Bloom filter log is one file.  The bitmaps
+    come out of a shuffle on ``shard`` and the round runs without AQE's
+    partition coalescing, so the write is sized from the bitmaps' bytes,
+    not from the shuffle's partition count."""
+    eng, rounds = engine_result
+    t = eng.seen.filters_table
+    assert len(t.versions()) >= len([m for m in rounds if m["selected"]])
+    seen_sets: set[str] = set()
+    for v in t.versions():
+        for s in set(t.snapshot(v).file_sets) - seen_sets:
+            files = [f for f in os.listdir(s) if f.endswith(".parquet")]
+            assert len(files) == 1, (v, files)
+            seen_sets.add(s)
 
 
 def test_no_url_fetched_twice(engine_result):

@@ -264,6 +264,52 @@ def test_pending_exact_side_reads_bucketed_crawl_log(spark, tmp_path):
         assert not [op for op in ops[:j] if op.startswith("Exchange")], text
 
 
+def test_frontier_sink_shuffles_canon_url_once(spark, tmp_path, monkeypatch):
+    """A round's new links reach the bucketed frontier_log through ONE
+    canon_url Exchange: the first-discovery grouping runs on the
+    bucket partitioning, so the append's own repartition
+    (tables.BucketedLog._stage) is dropped.  8 shuffle partitions and
+    32 buckets, planned inside the round, where AQE is off.  The plan
+    checked is the one the frontier append hands to the parquet
+    writer."""
+    import os
+    import re
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from legislation_scraper_spark.plans.crawl import (
+        CrawlConfig, CrawlEngine,
+    )
+    from legislation_scraper_spark.tables import Catalog
+
+    w = synth_world(spark, seed=9, docs_per_source=6, n_sources=2,
+                    partitions=2)
+    eng = CrawlEngine(
+        spark, Catalog(spark, str(tmp_path / "store")), w["pages_raw"],
+        w["seeds"], w["robots"],
+        CrawlConfig(n_shards=4, fetch_partitions=4, salt_buckets=2,
+                    frontier_buckets=32),
+    )
+    eng.bootstrap()
+    plans = []
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(writer, path, *a, **kw):
+        if path.startswith(os.path.join(eng.frontier.dir, "")):
+            plans.append(_explain(writer._df, "simple"))
+        return real_parquet(writer, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert eng.round(0)["new_urls"] > 0
+    (plan,) = plans
+    # the round's own plan is static (inputs cached outside it keep theirs)
+    assert not plan.splitlines()[1].startswith("AdaptiveSparkPlan"), plan
+    found = re.findall(r"Exchange hashpartitioning\(canon_url#\d+, (\d+)\)",
+                       plan)
+    assert found == ["32"], plan
+
+
 def test_seen_filter_plans_have_no_python_stage(spark, tmp_path):
     """The Bloom pre-filter is built, OR-merged and probed with Spark
     expressions: neither pending() over a multi-delta filter log nor the

@@ -48,14 +48,23 @@ def reference(spark, world, tmp_path_factory):
     rounds = []
     for r in range(40):
         before = _manifests(root)
+        classes = _codegen_classes(spark)
         m = eng.round(r)
         if m["selected"] == 0:
             return eng, rounds
         m["commits"] = collections.Counter(
             t for t, _ in _manifests(root) - before
         )
+        m["codegen_classes"] = _codegen_classes(spark) - classes
         rounds.append(m)
     pytest.fail("reference crawl did not drain in 40 rounds")
+
+
+def _codegen_classes(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM (its
+    cache misses)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def _mk_engine(spark, world, root):
@@ -239,6 +248,85 @@ def _arm_crash(monkeypatch, eng, point):
                 committed.wait(timeout=120)
                 raise _Crash(point)
         monkeypatch.setattr(table, "append", append)
+
+
+def test_round_plans_are_static(spark, world, reference, tmp_path):
+    """Rounds after the first reuse their generated code: round 3
+    compiles at most a handful of classes (a round's plans compile ~110
+    when class names carry their stage ids or the codegen cache holds
+    fewer entries than a round generates).  A round runs without AQE
+    and gives the session its prior setting back, whether it raises or
+    returns."""
+    _, rounds = reference
+    assert len(rounds) > 3
+    assert rounds[3]["codegen_classes"] <= 10, [
+        m["codegen_classes"] for m in rounds
+    ]
+    key = "spark.sql.adaptive.enabled"
+    eng = _mk_engine(spark, world, str(tmp_path / "store"))
+    eng.bootstrap()
+    during = []
+    real_pending = eng.pending
+
+    def pending():
+        during.append(spark.conf.get(key))
+        return real_pending()
+
+    try:
+        for prior in ("true", "false"):
+            spark.conf.set(key, prior)
+            assert eng.resume() == 0
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(eng, "pending", pending)
+                _arm_crash(mp, eng, "before_checkpoint")
+                with pytest.raises(_Crash):
+                    eng.round(0)
+            assert spark.conf.get(key) == prior
+        assert eng.resume() == 0
+        assert eng.round(0)["selected"] > 0
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, "true")
+    assert during == ["false", "false"]
+
+
+def test_round_raises_on_task_failure(spark, world, tmp_path):
+    """A task that fails while the round first builds an input the
+    caller cached (under AQE, as the session runs) makes round() raise,
+    and promptly: the round's own caches are built without AQE, and
+    such a failure inside one of their broadcasts would otherwise
+    deadlock the driver on Spark's cache locks."""
+    def fail(html):
+        raise RuntimeError("injected task failure")
+
+    pages = (
+        world["pages_raw"]
+        .withColumn("html", F.udf(fail, "binary")("html"))
+        .repartition(4)
+        .cache()
+    )
+    eng = _mk_engine(
+        spark, {**world, "pages_raw": pages}, str(tmp_path / "store")
+    )
+    eng.bootstrap()
+    raised = []
+
+    def run():
+        try:
+            eng.round(0)
+        except Exception as e:  # noqa: BLE001 — asserted below
+            raised.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    try:
+        t.start()
+        t.join(timeout=180)
+        assert not t.is_alive(), "round() hung on a failed task"
+        (e,) = raised
+        assert "injected task failure" in str(e)
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    finally:
+        pages.unpersist()
 
 
 def _rows_at(eng, tag, name, cols):

@@ -274,6 +274,46 @@ def test_empty_filter_log_falls_back_to_rebuild(spark, tmp_path):
     assert len(got) < 200  # seen URLs actually filtered out
 
 
+def test_filter_delta_is_one_file_built_in_parallel(spark, tmp_path):
+    """Without AQE, as inside a crawl round, a filter-log commit is one
+    file, and the bitmap build after the shard shuffle still runs one
+    task per shuffle partition: the write is sized by repartitioning
+    the per-shard bitmaps, not by a coalesce that would narrow the
+    build stage to the file count."""
+    import os
+
+    cat = Catalog(spark, str(tmp_path / "sized"))
+    seen = SeenSet(
+        cat.table("seen"), n_shards=8, filters_table=cat.table("seen_filters"),
+    )
+    urls = [(f"https://h{i % 5}.example/p{i}",) for i in range(400)]
+    # one input partition: only the build stage can run several tasks
+    keyed = with_url_key(
+        spark.createDataFrame(urls, "url string").coalesce(1), "url", 8
+    )
+    key = "spark.sql.adaptive.enabled"
+    prior = spark.conf.get(key)
+    sc = spark.sparkContext
+    spark.conf.set(key, "false")
+    sc.setJobGroup("seen-filter-delta", "filter delta append")
+    try:
+        seen.add_filters(keyed)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(key, prior)
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup("seen-filter-delta")
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert max(tasks) == int(spark.conf.get("spark.sql.shuffle.partitions")), (
+        tasks
+    )
+    (s,) = seen.filters_table.snapshot().file_sets
+    assert len([f for f in os.listdir(s) if f.endswith(".parquet")]) == 1
+
+
 def test_registered_domain_psl_subset(spark):
     from legislation_scraper_spark.functions.urls import registered_domain
 
