@@ -76,6 +76,9 @@ HEADER_LIT = "GOVERNO DO ESTADO - DIÁRIO OFICIAL"
 FOOTER_LIT = "Imprimir | Voltar ao topo"
 OCR_SHORT_THRESHOLD = 200  # cf. base/scraper.py:344
 DEFAULT_SITUATION = "Não consta revogação expressa"
+# the error of a fetched document with no record or an error page, in
+# the crawl engine and its simulator alike
+PARSE_ERROR = "parse error / empty document"
 
 
 def _unwrap_paras(inner: str) -> str:
@@ -253,16 +256,3 @@ def make_parse_page(search_marker: str = "/busca"):
         return pd.DataFrame({"rec": recs, "l": links})
 
     return parse_page
-
-
-@F.pandas_udf(LINKS_TYPE)
-def extract_links(html: pd.Series) -> pd.DataFrame:
-    out = {"doc_links": [], "next_link": [], "total": []}
-    for raw in html:
-        h = raw.decode("utf-8", errors="replace") if isinstance(raw, (bytes, bytearray)) else str(raw)
-        out["doc_links"].append(_RE_RES_LINK.findall(h))
-        nxt = _RE_NEXT_LINK.search(h)
-        out["next_link"].append(nxt.group(1) if nxt else None)
-        tot = _RE_TOTAL.search(h)
-        out["total"].append(int(tot.group(1)) if tot else None)
-    return pd.DataFrame(out)

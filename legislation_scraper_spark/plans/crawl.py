@@ -9,13 +9,17 @@ database/saver.py:63-87) with a Spark-first incremental-batch loop
     pending    = frontier_log ⟂ crawl_log   (bloom pre-filter + anti-join)
     selected   = robots ⋈ pending → window rank ≤ budget → salted repartition
     results    = fetch(selected)            (mapInPandas transport)
-    pages        += extract_doc(fetched docs)     (Arrow UDF, byte-parity)
-    frontier_log += extract_links(fetched search) (new URLs, depth+1;
+    parsed     = parse_page(fetched bodies)  (one Arrow UDF: a document
+                                             record or a search page's links)
+    pages        += the documents                 (byte-parity)
+    frontier_log += the search pages' links (new URLs, depth+1;
                     one row per URL: its first discovery in visit order)
     crawl_log    += every attempted URL: round, host, host_rank, keys,
-                    outcome and error (NULL unless the fetch or the
-                    parse failed) — the ordering contract, the exact
-                    seen set and the error record
+                    outcome, error (NULL unless the fetch or the parse
+                    failed) and validators (the body's digest, the
+                    record's capture time warc_ts) — the ordering
+                    contract, the exact seen set, the error record and,
+                    as a view, url_state
     seen_filters += Bloom delta bitmaps of the same rows
     catalog.save_checkpoint(r + 1, {every owned table: version})
                                         ← atomic multi-table commit
@@ -59,7 +63,7 @@ from pyspark.sql import functions as F
 from ..functions.text import ascii_slug
 from ..functions.urls import url_host
 from ..operators import politeness
-from ..operators.extract import make_parse_page
+from ..operators.extract import PARSE_ERROR, make_parse_page
 from ..operators.fetch import FetchPolicy, fetch
 from ..operators.seen import SeenSet, with_url_key
 from ..tables import Catalog
@@ -71,6 +75,16 @@ FRONTIER_COLS = (
     "url", "canon_url", "url_hash", "shard", "host", "source",
     "priority", "depth", "discovered_round",
 )
+# one crawl_log row per attempt
+LOG_COLS = (
+    "round", "host", "host_rank", "canon_url", "priority", "fetched",
+    "source", "status", "attempts", "error", "url_hash", "shard",
+    "digest", "warc_ts",
+)
+BLOOM_FPP = 0.01  # the seen filter's false-positive target
+# hive partitioning of the pages table: ASCII twins of type, situation
+PAGES_PARTITION_COLS = ("type_slug", "situation_slug")
+TRUST_ITERS = 2  # iterations of the host-graph scorers
 
 
 def _build_cached(spark: SparkSession, *dfs: DataFrame | None) -> None:
@@ -112,10 +126,8 @@ def _first_per_url(df: DataFrame, *order) -> DataFrame:
 @dataclass
 class CrawlConfig:
     n_shards: int = 64
-    bloom_fpp: float = 0.01
     salt_buckets: int = 8
     fetch_partitions: int = 16
-    pages_partition_cols: tuple = ("type_slug", "situation_slug")
     policy: FetchPolicy = field(default_factory=FetchPolicy)
     search_marker: str = "/busca"  # URL shape that dispatches link parsing
     transport: str = "jvm"  # 'jvm' (codegen sim) | 'python' (mapInPandas)
@@ -178,14 +190,6 @@ class CrawlConfig:
     # counts per round) in a `host_edges` table — the input to
     # trust_scores().  Off by default (one extra tiny agg + append).
     record_host_edges: bool = False
-    trust_iters: int = 2
-    # Maintain a `url_state` BucketedLog (latest fetch record per URL:
-    # content digest + validators + last round/status) via bucket-pruned
-    # merge_upsert — the state table the conditional-revalidation
-    # recrawl tier (operators/fetch.revalidation_plan/outcomes, RFC 9110
-    # §13) reads and writes.  One extra md5 over the body in the fetch
-    # pass + one ≤round-sized upsert per round.  Off by default.
-    track_url_state: bool = False
     # Coalesce round sink writes to this many tasks per table.  The
     # parsed cache's partition count is scan-driven (web splits +
     # fetch_partitions), so each sink otherwise writes partitions×dirs
@@ -229,19 +233,10 @@ class CrawlEngine:
             if self.cfg.record_host_edges
             else None
         )
-        # latest per-URL fetch state, bucketed on the same key family as
-        # the frontier so the revalidation joins stay co-locatable
-        self.url_state = (
-            catalog.bucketed_log(
-                "url_state", "canon_url", self.cfg.frontier_buckets
-            )
-            if self.cfg.track_url_state
-            else None
-        )
         self.seen = SeenSet(
             self.crawl_log,
             self.cfg.n_shards,
-            self.cfg.bloom_fpp,
+            BLOOM_FPP,
             # incremental filter state: per-round delta bitmaps, OR-merged
             # at probe — the probe cost no longer scales with total seen
             filters_table=catalog.table("seen_filters"),
@@ -260,7 +255,7 @@ class CrawlEngine:
         version map covers all of them."""
         owned = [
             self.frontier, self.pages, self.crawl_log,
-            self.seen.filters_table, self.host_edges, self.url_state,
+            self.seen.filters_table, self.host_edges,
         ]
         return {t.name: t for t in owned if t is not None}
 
@@ -378,7 +373,7 @@ class CrawlEngine:
             url_host(F.col("seed_url")).alias("host")
         ).distinct()
         return trustrank(
-            e, seed_hosts, iters=self.cfg.trust_iters,
+            e, seed_hosts, iters=TRUST_ITERS,
             src="src_host", dst="dst_host",
         ).select(F.col("node").alias("host"), F.col("rank").alias("trust"))
 
@@ -397,7 +392,7 @@ class CrawlEngine:
         from ..operators.graph import opic
 
         return opic(
-            e, iters=self.cfg.trust_iters, src="src_host", dst="dst_host"
+            e, iters=TRUST_ITERS, src="src_host", dst="dst_host"
         ).select(F.col("node").alias("host"), F.col("score").alias("opic"))
 
     def _host_budgets(self, pending: DataFrame) -> DataFrame:
@@ -416,32 +411,17 @@ class CrawlEngine:
         would systematically under-fill; with capacity-capped weights
         the Hamilton division hands that quota to hosts with real
         headroom.  Residual waste is O(hosts) rounding units, never
-        O(B).  The capacity expression mirrors apply_robots (default
-        budget, crawl-delay window cap) so the two stay consistent."""
-        backlog = pending.groupBy("host").agg(
-            F.count("*").cast("double").alias("backlog")
-        )
-        cap = F.coalesce(F.col("max_parallel"), F.lit(4)).cast("double")
-        if self.cfg.round_window_ms is not None:
-            cap = F.least(
-                cap,
-                F.greatest(
-                    F.lit(1),
-                    F.floor(
-                        F.lit(self.cfg.round_window_ms)
-                        / F.coalesce(F.col("crawl_delay_ms"), F.lit(1))
-                    ),
-                ).cast("double"),
-            )
-        r = self.robots.select(
-            "host", "allow", "crawl_delay_ms", "max_parallel"
-        )
+        O(B).  The capacity is the robots budget ``apply_robots``
+        attaches, the one selection enforces."""
         backlog = (
-            backlog.join(F.broadcast(r), "host", "left")
-            .filter(F.coalesce(F.col("allow"), F.lit(True)))
-            .select(
-                "host",
-                F.least(F.col("backlog"), cap).alias("weight"),
+            politeness.apply_robots(
+                pending, self.robots, self.cfg.round_window_ms
+            )
+            .groupBy("host")
+            .agg(
+                F.least(F.count("*"), F.min("budget"))
+                .cast("double")
+                .alias("weight")
             )
         )
         scorer = {
@@ -492,27 +472,64 @@ class CrawlEngine:
         # frontier view beyond its own dedup
         return best.join(F.broadcast(picks.select(key)), key, "left_semi")
 
+    def url_state(self) -> DataFrame | None:
+        """The latest validated fetch record per URL: for each
+        ``canon_url``, its latest ``crawl_log`` attempt that carries a
+        digest (a fetch, or a 304 that kept the prior one), as
+        ``(canon_url, host, source, digest, etag, last_modified,
+        last_status, last_round)``.  ``etag`` is the digest, a strong
+        validator, which is what the synthetic web serves;
+        ``last_modified`` is the body's capture time.  A groupBy on the
+        log's bucket column: no Exchange.  None before any attempt."""
+        log = self.crawl_log.read()
+        if log is None:
+            return None
+        return (
+            log.filter(F.col("digest").isNotNull())
+            .groupBy("canon_url")
+            .agg(
+                F.max(
+                    F.struct(
+                        F.col("round").alias("last_round"), "host",
+                        "source", "digest",
+                        F.col("warc_ts").alias("last_modified"),
+                        F.col("status").alias("last_status"),
+                    )
+                ).alias("s")
+            )
+            .select(
+                "canon_url", "s.host", "s.source", "s.digest",
+                F.col("s.digest").alias("etag"), "s.last_modified",
+                "s.last_status", "s.last_round",
+            )
+        )
+
     def revalidation_round(self, r: int, budget: int) -> dict:
         """Conditional recrawl round (RFC 9110 §13, the validator tier
         the reference never needed — it refetches everything): pick the
-        ``budget`` stalest URLs from ``url_state``, plan conditional
+        ``budget`` stalest URLs of :meth:`url_state`, plan conditional
         requests from their stored validators
         (operators/fetch.revalidation_plan), apply origin behavior
         against the live web (revalidation_outcomes), then
 
         - **304 Not Modified** (live digest == stored validator): no
-          fetch, no parse, no page write — ``url_state`` is touched
-          with ``last_round = r`` via a bucket-pruned merge_upsert and
-          the saved bytes are ledgered;
+          fetch, no parse, no page write — the attempt is logged in
+          ``crawl_log`` with status 304, ``fetched`` false (no body was
+          sent) and the prior validators, and the saved bytes are
+          ledgered;
         - **200 / changed or validator-less**: refetched through the
           NORMAL :meth:`round` as ``extra_pending`` (the recrawl
           admission path — seen-filter bypassed by construction), whose
-          ``w_state`` sink upserts the new digests.
+          attempts record the new digests.
 
-        Requires ``CrawlConfig.track_url_state``.
+        The 304 rows are appended before the round runs, so the round's
+        checkpoint ``r + 1`` covers them; when the round selects
+        nothing, this writes that checkpoint itself.  A crash before it
+        rolls the 304 rows back with the rest of the round.  Their URLs
+        were fetched before, so the seen filter already holds them.
 
         Scale shape: picks are budget-bounded (TakeOrdered over the
-        state log, no global sort materialization); every join here —
+        state view, no global sort materialization); every join here —
         picks→frontier rows, plan→live digests — broadcasts the
         budget-bounded side, so the frontier and the web table are
         never shuffled.  At 10^10 rows the same joins run co-located
@@ -527,9 +544,7 @@ class CrawlEngine:
             "round": r, "revalidated": 0, "not_modified": 0,
             "refetched": 0, "saved_bytes": 0,
         }
-        if self.url_state is None:
-            raise ValueError("revalidation_round needs track_url_state")
-        state = self.url_state.read()
+        state = self.url_state()
         best = self._best_frontier()
         if state is None or best is None:
             return metrics
@@ -562,21 +577,28 @@ class CrawlEngine:
                 F.sum((F.col("status") == 304).cast("long")).alias("nm"),
                 F.sum("saved_bytes").alias("saved"),
             ).collect()[0]
-            fresh = out.filter(F.col("status") == 304).select(
-                "canon_url", "host", "source",
-                F.col("prior_digest").alias("digest"),
-                F.col("if_none_match").alias("etag"),
-                F.col("if_modified_since").alias("last_modified"),
-                F.lit(304).alias("last_status"),
-                F.lit(r).alias("last_round"),
-            ).dropDuplicates(["canon_url"])
+            if agg["nm"]:
+                # typed as the round's own attempts
+                types = dict(self.crawl_log.read().dtypes)
+                not_modified = out.filter(F.col("status") == 304).select(
+                    F.lit(r).alias("round"), "host",
+                    F.lit(None).alias("host_rank"), "canon_url",
+                    "priority", F.lit(False).alias("fetched"), "source",
+                    "status", F.lit(1).alias("attempts"),
+                    F.lit(None).alias("error"), "url_hash", "shard",
+                    F.col("prior_digest").alias("digest"),
+                    F.col("if_modified_since").alias("warc_ts"),
+                )
+                self.crawl_log.append(
+                    not_modified.select(
+                        *[F.col(c).cast(types[c]) for c in LOG_COLS]
+                    ),
+                    metrics={"round": r},
+                )
             changed = out.filter(F.col("status") != 304).select(
                 *FRONTIER_COLS
             )
             sub = self.round(r, extra_pending=changed)
-            # touch AFTER the round: both upserts hit url_state and the
-            # log is single-writer by contract
-            self.url_state.merge_upsert(fresh, metrics={"round": r})
             metrics.update(
                 revalidated=int(agg["n"] or 0),
                 not_modified=int(agg["nm"] or 0),
@@ -584,6 +606,8 @@ class CrawlEngine:
                 saved_bytes=int(agg["saved"] or 0),
                 round_metrics=sub,
             )
+            if not sub["selected"]:
+                self._checkpoint(r + 1, metrics)
         finally:
             out.unpersist()
         return metrics
@@ -594,13 +618,9 @@ class CrawlEngine:
         The trigger threshold is per-table: a bucketed log legitimately
         holds one file per bucket per commit, so its fan-in budget is
         buckets × 12, not 12."""
-        tables = [self.frontier, self.crawl_log]
-        if self.url_state is not None:
-            tables.append(self.url_state)
-        for t in tables:
+        for t in (self.frontier, self.crawl_log):
             snap = t.snapshot()
-            thr = 12 * getattr(t, "n_buckets", 1)
-            if snap and len(snap.file_sets) > thr:
+            if snap and len(snap.file_sets) > 12 * t.n_buckets:
                 t.compact()
         if self.seen.filters_table is not None:
             snap = self.seen.filters_table.snapshot()
@@ -711,21 +731,17 @@ class CrawlEngine:
             # boundary exactly once per round; cache WITHOUT the body —
             # the cached working set is metadata + text, not raw html.
             parse_page = make_parse_page(self.cfg.search_marker)
-            # content digest for the url_state validator tier — computed in
-            # the SAME pass that parses (body bytes are in hand; md5 is
-            # codegen), so tracking costs no extra scan of the fetch output
-            state_cols = (
-                [F.when(F.col("fetched"), F.md5(F.col("body"))).alias("digest")]
-                if self.url_state is not None
-                else []
-            )
             # each attempt's outcome, stated once for the counts and every
             # sink: a fetched document whose record is missing or an error
             # is a parse error, every other fetched document a page
             doc_ok = ~F.coalesce(F.col("p.rec.is_error"), F.lit(True))
             parsed = raw.select(
                 *[c for c in raw.columns if c != "body"],
-                *state_cols,
+                # the validators of a fetched body (url_state's view):
+                # its digest, taken in the pass that parses it
+                F.when(F.col("fetched"), F.md5(F.col("body"))).alias(
+                    "digest"
+                ),
                 F.when(
                     F.col("fetched"), parse_page("canon_url", "body")
                 ).alias("p"),
@@ -733,11 +749,7 @@ class CrawlEngine:
                 "*", F.col("p.rec").alias("rec"), F.col("p.l").alias("l"),
                 (F.col("fetched") & ~is_search & doc_ok).alias("is_page"),
                 F.when(~F.col("fetched"), F.col("fetch_error"))
-                .when(
-                    ~is_search & ~doc_ok,
-                    # byte-identical to plans/simulator.py's parse error
-                    F.lit("parse error / empty document"),
-                )
+                .when(~is_search & ~doc_ok, F.lit(PARSE_ERROR))
                 .alias("error"),
             ).drop("p").cache()
             # one aggregation pass for every round metric (vs one job each)
@@ -858,7 +870,7 @@ class CrawlEngine:
                 if n_pages:
                     self.pages.append(
                         _co(pages_df),
-                        partition_cols=list(self.cfg.pages_partition_cols),
+                        partition_cols=list(PAGES_PARTITION_COLS),
                         metrics={"round": r},
                     )
 
@@ -873,15 +885,11 @@ class CrawlEngine:
 
             def w_log():
                 # the round's attempts, once: ordering contract, visit
-                # record, exact seen set and error record (keys carried from
-                # frontier_log; the bucketed append aligns rows to canon_url
-                # buckets)
+                # record, exact seen set, error record and validators
+                # (keys carried from frontier_log; the bucketed append
+                # aligns rows to canon_url buckets)
                 self.crawl_log.append(
-                    parsed.select(
-                        F.lit(r).alias("round"), "host", "host_rank",
-                        "canon_url", "priority", "fetched", "source",
-                        "status", "attempts", "error", "url_hash", "shard",
-                    )
+                    parsed.withColumn("round", F.lit(r)).select(*LOG_COLS)
                 )
 
             def w_filters():
@@ -908,31 +916,9 @@ class CrawlEngine:
                     .coalesce(1)
                 )
 
-            def w_state():
-                # latest-record upsert keyed on canon_url: bucket-pruned
-                # rewrite (tables.BucketedLog.merge_upsert) — only the
-                # round's touched buckets move, never the full state log.
-                # etag = the content digest (a strong validator, which is
-                # what the sandbox web serves); last_modified = capture ts.
-                st = (
-                    parsed.filter(F.col("fetched"))
-                    .select(
-                        "canon_url", "host", "source",
-                        F.col("digest"),
-                        F.col("digest").alias("etag"),
-                        F.col("warc_ts").alias("last_modified"),
-                        F.col("status").alias("last_status"),
-                        F.lit(r).alias("last_round"),
-                    )
-                    .dropDuplicates(["canon_url"])
-                )
-                self.url_state.merge_upsert(st, metrics={"round": r})
-
             sinks = [w_pages, w_log, w_filters]
             if self.host_edges is not None:
                 sinks.append(w_edges)
-            if self.url_state is not None:
-                sinks.append(w_state)
             with ThreadPoolExecutor(max_workers=6) as pool:
                 futs = [pool.submit(fn) for fn in sinks]
                 n_new = pool.submit(w_links).result()
@@ -972,7 +958,9 @@ class CrawlEngine:
     # -- state views -----------------------------------------------------------
 
     def frontier_state(self) -> DataFrame | None:
-        """FIXTURES.md §3 view: every discovered URL with its state."""
+        """FIXTURES.md §3 view: every discovered URL with the state of
+        its latest attempt (a 304 counts as fetched: the content is
+        current, no body was needed)."""
         best = self._best_frontier()
         if best is None:
             return None
@@ -980,9 +968,12 @@ class CrawlEngine:
         v = self.crawl_log.read()
         if v is None:
             return best.select(*cols, F.lit("pending").alias("state"))
-        state = F.when(F.col("fetched"), F.lit("fetched")).otherwise(
-            F.lit("error")
+        state = F.when(
+            F.col("fetched") | (F.col("status") == 304), F.lit("fetched")
+        ).otherwise(F.lit("error"))
+        last = v.groupBy("canon_url").agg(
+            F.max_by(state, F.col("round")).alias("state")
         )
-        return best.join(
-            v.select("canon_url", state.alias("state")), "canon_url", "left"
-        ).select(*cols, F.coalesce("state", F.lit("pending")).alias("state"))
+        return best.join(last, "canon_url", "left").select(
+            *cols, F.coalesce("state", F.lit("pending")).alias("state")
+        )

@@ -111,7 +111,7 @@ def simulate(
                 else:
                     rec = X._extract_one(body)
                     if rec[6]:  # is_error
-                        res.errors[u] = "parse error / empty document"
+                        res.errors[u] = X.PARSE_ERROR
                     else:
                         res.pages[u] = rec[5]
         if not any_selected:

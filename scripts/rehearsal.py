@@ -246,13 +246,10 @@ def rehearse(spark, docs: int) -> dict:
 
 def _revalidation_stage(spark, out, cfg, pages_raw, seeds, robots, docs):
     """Revalidation at rehearsal scale (r4 verdict item 7): a second
-    crawl with track_url_state (the merge_upsert-maintained validator
-    table), then mutate 1% of the live world and run a
+    crawl round (its attempts carry the validators the url_state view
+    reads), then mutate 1% of the live world and run a
     conditional-recrawl round over the stalest 2% — the 304 tier must
-    skip fetch/parse (reval seconds << crawl seconds) and the
-    url_state upsert stays bucket-pruned at every size."""
-    import dataclasses
-
+    skip fetch/parse (reval seconds << crawl seconds)."""
     from pyspark.sql import functions as F
 
     from legislation_scraper_spark.plans.crawl import CrawlEngine
@@ -262,10 +259,8 @@ def _revalidation_stage(spark, out, cfg, pages_raw, seeds, robots, docs):
         prefix=f"rehearsal_rv_{docs}_", dir="/dev/shm"
     )
     try:
-        cfg2 = dataclasses.replace(cfg, track_url_state=True)
         eng2 = CrawlEngine(
-            spark, Catalog(spark, store2), pages_raw, seeds,
-            robots, cfg2,
+            spark, Catalog(spark, store2), pages_raw, seeds, robots, cfg,
         )
         eng2.bootstrap()
         t0 = time.perf_counter()

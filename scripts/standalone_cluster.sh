@@ -21,7 +21,15 @@ CPUS_PER_SLOT=${LSS_SA_CPUS_PER_SLOT:-2}
 
 start() {
     local n_workers=$1 cores=$2 mem=$3
-    mkdir -p "$LOG_DIR"
+    # every check runs before any daemon starts: a short or empty
+    # cpuset slice would pin workers to overlapping CPUs, or fail taskset
+    local v
+    for v in "$n_workers" "$cores" "$CPUS_PER_SLOT"; do
+        if ! [[ "$v" =~ ^[1-9][0-9]*$ ]]; then
+            echo "workers, cores and LSS_SA_CPUS_PER_SLOT must be positive integers (got '$v')" >&2
+            exit 2
+        fi
+    done
     # slice the allowed CPU set into disjoint proportional chunks
     mapfile -t ALLOWED < <(python3 -c '
 import os
@@ -31,6 +39,7 @@ for c in sorted(os.sched_getaffinity(0)): print(c)')
         echo "need $((n_workers * chunk)) CPUs ($n_workers workers x $cores cores x $CPUS_PER_SLOT CPUs/slot), only ${#ALLOWED[@]} allowed" >&2
         exit 1
     fi
+    mkdir -p "$LOG_DIR"
     # a stale worker from a previous run would re-register with the new
     # master at the same address and add phantom cores: stop the
     # daemons this script started before (their PIDs, not every Spark

@@ -177,10 +177,10 @@ def test_error_cooldown_excludes_then_readmits(spark, world, tmp_path_factory):
     h = visited.filter("fetched").orderBy("host").first()["host"]
     blocked = spark.createDataFrame(
         [(0, h, 1, f"https://{h}/blocked", 0, False, "synthetic", 503, 5,
-          "blocked")],
+          "blocked", None, None)],
         "round int, host string, host_rank int, url string, priority int, "
         "fetched boolean, source string, status int, attempts int, "
-        "error string",
+        "error string, digest string, warc_ts timestamp",
     )
     eng.crawl_log.append(
         with_url_key(blocked, "url", eng.cfg.n_shards).select(*visited.columns)

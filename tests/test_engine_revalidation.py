@@ -1,10 +1,10 @@
-"""Engine wiring for the url_state validator table and conditional
-recrawl rounds (RFC 9110 §13): with CrawlConfig.track_url_state the
-engine maintains a BucketedLog of the latest per-URL fetch record
-(content digest + validators) via bucket-pruned merge_upsert, and
+"""Engine wiring for the validator tier and conditional recrawl rounds
+(RFC 9110 §13): every attempt in crawl_log carries its validators, the
+engine's url_state() view is each URL's latest validated attempt, and
 CrawlEngine.revalidation_round() re-checks the stalest URLs against
-the live web — 304s cost zero fetch/parse/page work, changed URLs are
-refetched through the normal round.
+the live web — a 304 costs zero fetch/parse/page work and is logged as
+an attempt under the round's checkpoint, changed URLs are refetched
+through the normal round.
 
 The reference refetches everything on every run
 (/root/reference/src/scraper/main.py has no validator handling); at a
@@ -12,6 +12,8 @@ The reference refetches everything on every run
 """
 
 from __future__ import annotations
+
+import os
 
 import pyspark.sql.functions as F
 import pytest
@@ -39,7 +41,7 @@ def _crawl(spark, world, tmp_path_factory, pages_raw=None):
         spark, cat,
         pages_raw if pages_raw is not None else world["pages_raw"],
         world["seeds"], world["robots"],
-        CrawlConfig(n_shards=8, fetch_partitions=4, track_url_state=True),
+        CrawlConfig(n_shards=8, fetch_partitions=4),
     )
     eng.bootstrap()
     r = 0
@@ -56,7 +58,7 @@ def test_url_state_tracks_latest_fetch(spark, world, tmp_path_factory):
     successfully fetched URL, digest == md5(live body), and the version
     is recorded in the round checkpoints."""
     eng, _ = _crawl(spark, world, tmp_path_factory)
-    st = eng.url_state.read()
+    st = eng.url_state()
     vis = eng.crawl_log.read().filter(F.col("fetched"))
     assert st.count() == st.select("canon_url").distinct().count()
     assert st.count() == vis.select("canon_url").distinct().count()
@@ -68,7 +70,12 @@ def test_url_state_tracks_latest_fetch(spark, world, tmp_path_factory):
     # strong-validator contract: etag mirrors the digest
     assert st.filter(F.col("etag") != F.col("digest")).count() == 0
     tags = eng.catalog.checkpoints()
-    assert "url_state" in eng.catalog.load_checkpoint(max(tags))["versions"]
+    # the validators are checkpointed with the attempts that carry them
+    v = eng.catalog.load_checkpoint(max(tags))["versions"]["crawl_log"]
+    assert v == eng.crawl_log.current_version()
+    assert eng.crawl_log.read(v).filter(
+        F.col("fetched") & F.col("digest").isNull()
+    ).count() == 0
 
 
 def test_revalidation_all_304_when_unchanged(spark, world,
@@ -84,7 +91,7 @@ def test_revalidation_all_304_when_unchanged(spark, world,
     assert m["refetched"] == 0
     assert m["saved_bytes"] > 0
     assert eng.pages.current_version() == pages_v
-    touched = eng.url_state.read().filter(
+    touched = eng.url_state().filter(
         F.col("last_round") == rounds + 1
     )
     assert touched.count() == budget
@@ -97,7 +104,7 @@ def test_revalidation_refetches_changed_urls(spark, world,
     picks) are refetched through the normal round; url_state carries
     their NEW digests afterwards; unchanged picks still 304."""
     eng, rounds = _crawl(spark, world, tmp_path_factory)
-    st0 = eng.url_state.read()
+    st0 = eng.url_state()
     # revalidation picks the stalest `budget` URLs deterministically:
     # compute the pick set the same way, then mutate half of it
     budget = 6
@@ -135,7 +142,7 @@ def test_revalidation_refetches_changed_urls(spark, world,
     live = mutated.select(
         F.col("url").alias("canon_url"), F.md5("html").alias("want")
     )
-    st1 = eng.url_state.read().join(live, "canon_url")
+    st1 = eng.url_state().join(live, "canon_url")
     bad = st1.filter(
         F.col("canon_url").isin(*changed_urls)
         & (F.col("digest") != F.col("want"))
@@ -145,3 +152,123 @@ def test_revalidation_refetches_changed_urls(spark, world,
         F.col("canon_url").isin(*changed_urls)
         & (F.col("last_round") != rounds + 1)
     ).count() == 0
+
+
+# --- revalidation inside the round's checkpoint ---------------------------
+
+
+@pytest.fixture(scope="module")
+def drained(spark, world, tmp_path_factory):
+    """One drained crawl the tests below revalidate from: its store
+    root and last checkpoint tag."""
+    eng, _ = _crawl(spark, world, tmp_path_factory)
+    return eng.catalog.root, max(eng.catalog.checkpoints())
+
+
+def _from_drained(spark, world, drained, pages_raw=None):
+    """An engine over the drained store, rolled back to the drained
+    crawl's last checkpoint (later checkpoints are deleted first)."""
+    root, tag = drained
+    cat = Catalog(spark, root)
+    for t in cat.checkpoints():
+        if t > tag:
+            os.remove(os.path.join(cat.ckpt_dir, f"c{t:06d}.json"))
+    eng = CrawlEngine(
+        spark, cat,
+        pages_raw if pages_raw is not None else world["pages_raw"],
+        world["seeds"], world["robots"],
+        CrawlConfig(n_shards=8, fetch_partitions=4),
+    )
+    assert eng.resume() == tag
+    return eng
+
+
+def _attempts_and_state(eng):
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    return rows(eng.crawl_log.read()), rows(eng.url_state())
+
+
+@pytest.mark.parametrize("n_changed", [0, 2], ids=["all_304", "refetch"])
+def test_revalidation_crash_before_checkpoint_resumes_exactly_once(
+    spark, world, drained, n_changed
+):
+    """A revalidation round that crashes after its 304 rows commit and
+    before its checkpoint is rolled back whole by resume(): re-running
+    it gives the crawl_log and url_state() rows of an uninterrupted
+    revalidation round.  With every pick unchanged the round selects
+    nothing and the checkpoint is revalidation_round's own; with some
+    changed it is the refetch round's."""
+    tag = drained[1]
+    r, budget = tag + 1, 5
+    picks = [
+        row["canon_url"]
+        for row in _from_drained(spark, world, drained).url_state()
+        .orderBy("last_round", "canon_url").limit(budget).collect()
+    ]
+    pages = world["pages_raw"].withColumn(
+        "html",
+        F.when(
+            F.col("url").isin(*picks[:n_changed]),
+            F.concat(F.col("html"), F.lit(b"<!--rev-->")),
+        ).otherwise(F.col("html")),
+    )
+    eng = _from_drained(spark, world, drained, pages)
+    m = eng.revalidation_round(r, budget)
+    assert m["not_modified"] == budget - n_changed
+    assert m["refetched"] == n_changed
+    want = _attempts_and_state(eng)
+
+    crashed = _from_drained(spark, world, drained, pages)
+    log_v = crashed.crawl_log.current_version()
+    real_append = crashed.crawl_log.append
+    appended = []
+
+    def append(df, *a, **kw):
+        appended.append(df.filter(F.col("status") == 304).count())
+        return real_append(df, *a, **kw)
+
+    def save_checkpoint(*a, **kw):
+        raise RuntimeError("crash before the checkpoint")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(crashed.crawl_log, "append", append)
+        mp.setattr(crashed.catalog, "save_checkpoint", save_checkpoint)
+        with pytest.raises(RuntimeError, match="before the checkpoint"):
+            crashed.revalidation_round(r, budget)
+    # the 304 rows had committed, first
+    assert appended[0] == budget - n_changed
+    assert crashed.crawl_log.current_version() > log_v
+
+    eng = _from_drained(spark, world, drained, pages)
+    assert eng.crawl_log.current_version() == log_v
+    assert eng.crawl_log.read().filter(F.col("round") == r).count() == 0
+    eng.revalidation_round(r, budget)
+    assert _attempts_and_state(eng) == want
+
+
+def test_all_304_round_checkpoints_its_rows(spark, world, drained):
+    """A revalidation round whose picks all earn a 304 selects nothing
+    to refetch, and still leaves checkpoint r + 1, which covers its 304
+    rows in crawl_log: unfetched attempts with the prior validators."""
+    tag = drained[1]
+    r, budget = tag + 1, 4
+    eng = _from_drained(spark, world, drained)
+    m = eng.revalidation_round(r, budget)
+    assert m["not_modified"] == budget and m["refetched"] == 0
+    assert max(eng.catalog.checkpoints()) == r + 1
+    v = eng.catalog.load_checkpoint(r + 1)["versions"]["crawl_log"]
+    assert v == eng.crawl_log.current_version()
+    rows = eng.crawl_log.read(v).filter(F.col("round") == r)
+    assert rows.count() == budget
+    assert rows.filter(
+        (F.col("status") != 304) | F.col("fetched")
+        | F.col("error").isNotNull() | F.col("digest").isNull()
+    ).count() == 0
+    assert eng.resume() == r + 1
+    state = {
+        row["canon_url"]: row["state"]
+        for row in eng.frontier_state().collect()
+    }
+    assert {state[row["canon_url"]] for row in rows.collect()} == {"fetched"}

@@ -11,7 +11,7 @@ import pytest
 
 from legislation_scraper_spark.operators.extract import (
     extract_doc,
-    extract_links,
+    make_parse_page,
 )
 from legislation_scraper_spark.synth import PAGE_SIZE, synth_world
 
@@ -62,7 +62,9 @@ def test_error_pages_flagged(world):
 
 def test_search_page_links(world):
     search = world["pages_raw"].filter(F.col("url").contains("/busca"))
-    links = search.select("url", extract_links("html").alias("l"))
+    # the crawl engine's own parse UDF, dispatching on the URL shape
+    parse_page = make_parse_page("/busca")
+    links = search.select("url", parse_page("url", "html").l.alias("l"))
     first = links.filter(F.col("url").endswith("page=0")).collect()
     assert len(first) > 0
     for r in first:

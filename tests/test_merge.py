@@ -276,6 +276,41 @@ def test_blog_merge_read_stays_bucketed(spark, blog):
     assert "Exchange" not in plan
 
 
+def test_blog_files_hold_their_buckets_rows(spark, tmp_path):
+    """A bucket file's name comes from its rows.  An append of a frame
+    already hash-partitioned on the bucket column at n_buckets
+    partitions (a groupBy on it, with as many shuffle partitions as
+    buckets) lets Spark drop the staging repartition, and AQE may then
+    coalesce the shuffle left into fewer tasks than buckets.  Every
+    file still holds only its bucket's rows, and a bucketed groupBy
+    over this and an earlier append counts each key once."""
+    n = 4
+    conf = {"spark.sql.adaptive.enabled": "true",
+            "spark.sql.shuffle.partitions": str(n)}
+    prior = {k: spark.conf.get(k) for k in conf}
+    log = BucketedLog(spark, str(tmp_path), "grouped", "k", n)
+    keys = spark.range(200).select(
+        (F.col("id") % 50).cast("string").alias("k"))
+    log.append(keys.distinct().select("k", F.lit(1).alias("n")))
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        log.append(keys.groupBy("k").agg(F.count("*").cast("int").alias("n")))
+    finally:
+        for k, v in prior.items():
+            spark.conf.set(k, v)
+    files = sorted(log._data_files())
+    assert len(files) > 1
+    for f in files:
+        want = int(f.partition(".")[0].rsplit("_", 1)[1])
+        got = spark.read.parquet(os.path.join(log.data_dir, f)).select(
+            F.pmod(F.hash("k"), F.lit(n)).alias("b")).distinct().collect()
+        assert {r["b"] for r in got} == {want}, f
+    grouped = log.read().groupBy("k").agg(F.sum("n").alias("n")).collect()
+    assert len(grouped) == 50
+    assert {r["n"] for r in grouped} == {5}
+
+
 def test_randomized_merge_delete_matches_model(spark, tmp_path):
     """Randomized op-sequence equivalence: a seeded stream of
     append / merge_upsert / delete_where calls against `Table` must
