@@ -20,8 +20,9 @@ variant):
    bulk of the anti-join's probe side.
 2. **Exact anti-join backstop** — Bloom *hits* (possible false
    positives) are verified with a ``left_anti`` join against the exact
-   seen log on ``canon_url``.  Correctness never depends on the filter
-   (tests/test_urls_seen.py property-checks this).
+   seen log on ``canon_url``; without bitmaps every candidate takes
+   it.  Correctness never depends on the filter (tests/test_urls_seen.py
+   property-checks this).
 
 The crawl engine's exact log is its ``crawl_log`` (every attempted URL,
 bucketed by ``canon_url``); the Bloom bitmaps are derived state over the
@@ -293,33 +294,21 @@ class SeenSet:
         Bloom pre-filter first (provably-new rows bypass the join), then
         an exact ``left_anti`` on ``canon_url`` — the canonical URL
         determines the other two keys — for the maybe-seen remainder.
-        With a bucketed exact log the join reads it without an
-        Exchange; only the candidates shuffle.
+        With no bitmaps (no filter log, or an empty one) every candidate
+        takes the exact join.  With a bucketed exact log the join reads
+        it without an Exchange; only the candidates shuffle.
         """
         seen = self.df()
         if seen is None:
             return cand
-        # incremental path: OR-merge the persisted delta bitmaps — no
-        # rescan of the exact seen table to build filters
-        shards, params = self.merged_filters(), self._params()
+        exact = seen.select("canon_url")
+        # OR-merge the persisted delta bitmaps: no rescan of the exact
+        # seen table to build filters
+        shards = self.merged_filters()
         if shards is None:
-            # NOTE: reached both when no filters_table is configured AND
-            # when one is configured but its delta log is empty while the
-            # exact table is not (store predates the incremental path, or
-            # rows were appended bypassing add()).  Rebuilding from the
-            # exact table keeps the "pre-filter MISS proves unseen"
-            # contract; returning cand here would re-crawl seen URLs.
-            # stateless fallback: rebuild from the exact table
-            # (row count from snapshot lineage — no extra Spark job)
-            n_seen = self.table.approx_rows()
-            params = BloomParams.for_capacity(
-                max(n_seen // self.n_shards, 1), self.fpp
-            )
-            shards = build_bloom_shards(seen, params, self.n_shards)
-        probed = bloom_probe(cand, shards, params)
+            return cand.join(exact, "canon_url", "left_anti")
+        probed = bloom_probe(cand, shards, self._params())
         surely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-        verified_new = maybe.join(
-            seen.select("canon_url"), "canon_url", "left_anti"
-        )
+        verified_new = maybe.join(exact, "canon_url", "left_anti")
         return surely_new.unionByName(verified_new)

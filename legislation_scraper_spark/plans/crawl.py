@@ -12,8 +12,8 @@ database/saver.py:63-87) with a Spark-first incremental-batch loop
     parsed     = parse_page(fetched bodies)  (one Arrow UDF: a document
                                              record or a search page's links)
     pages        += the documents                 (byte-parity)
-    frontier_log += the search pages' links (new URLs, depth+1;
-                    one row per URL: its first discovery in visit order)
+    frontier_log += the search pages' links it does not hold (new URLs,
+                    depth+1; each at its first discovery in visit order)
     crawl_log    += every attempted URL: round, host, host_rank, keys,
                     outcome, error (NULL unless the fetch or the parse
                     failed) and validators (the body's digest, the
@@ -29,19 +29,18 @@ error) is derived: pending = discovered ∖ attempted, and a URL's
 fetched/error state is its ``crawl_log.fetched``.  This is the
 merge-on-read pattern — no per-round rewrite of a 10^10-row frontier,
 just appends plus the anti-join at read time (Iceberg MERGE/compaction
-would periodically fold the log at scale).  ``frontier_log`` and
-``crawl_log`` are both bucketed by ``canon_url``, so pending()'s dedup
-and its exact anti-join read them without an Exchange.
+would periodically fold the log at scale).  ``frontier_log`` holds each
+URL once, at its first discovery; both logs are bucketed by ``canon_url``,
+so pending()'s anti-join and admission's read them without an Exchange.
 
 Every checkpoint records the version of EVERY table the engine owns
 (0 for a table still empty), so resume rolls back a torn commit to any
 of them, whichever sink it came from.
 
 Shuffle budget per round (SURVEY.md §4): the seen anti-join, the
-politeness window rank, and the salted repartition — three shuffles,
-all on politeness-bounded row counts (≤ Σ budgets), NOT on the full
-frontier; the frontier-side work is a partition-pruned scan + bloom
-probe.
+politeness window rank and the salted repartition, on politeness-bounded
+row counts (≤ Σ budgets), NOT on the full frontier; and one canon_url
+shuffle of the new links, shared by their grouping, admission and append.
 
 Crawl-ordering contract: selection order is fully determined by
 (priority, discovered_round, canon_url) per host, where a URL keeps the
@@ -149,9 +148,9 @@ class CrawlConfig:
     # rebuild-maintenance action
     filter_keys_per_shard: int = 65536
     # buckets of the canon_url-bucketed logs (frontier_log, crawl_log;
-    # Iceberg bucket-transform analogue): pending()'s per-round dedup
-    # groupBy and its exact anti-join then run with NO Exchange over
-    # either log (tables.BucketedLog; asserted in tests/test_plans.py)
+    # Iceberg bucket-transform analogue): pending()'s exact anti-join
+    # and the admission anti-join then run with NO Exchange over either
+    # log (tables.BucketedLog; asserted in tests/test_plans.py)
     frontier_buckets: int = 32
     # snapshot-expiry maintenance (tables.Catalog.expire_all): every
     # N rounds, drop manifests/data below the keep horizon while
@@ -291,7 +290,8 @@ class CrawlEngine:
             F.lit(0).alias("depth"),
             F.lit(0).alias("discovered_round"),
         )
-        self.frontier.append(f)
+        # two spellings of one seed are one URL, admitted once
+        self.frontier.append(_first_per_url(f, "priority", "url"))
         self._checkpoint(0)
 
     def resume(self) -> int:
@@ -305,24 +305,18 @@ class CrawlEngine:
     # -- one crawl round --------------------------------------------------------
 
     def pending(self) -> DataFrame | None:
-        """Discovered ∖ attempted, deduped to one row per canonical URL
-        (earliest discovery wins — deterministic)."""
-        best = self._best_frontier()
-        if best is None:
-            return None
-        return self.seen.filter_unseen(best)
-
-    def _best_frontier(self) -> DataFrame | None:
-        """One row per canonical URL in the frontier log (earliest
-        discovery round wins; a round logs each URL once), seen-or-not
-        — the admission view `pending()` filters and
-        `revisit_selection()` re-admits from."""
+        """Discovered ∖ attempted: the frontier log, which admits each
+        canonical URL once, through the seen filter; no regroup."""
         log = self.frontier.read()
         if log is None:
             return None
-        return _first_per_url(
-            log, "discovered_round", "priority", "depth", "url"
-        )
+        return self.seen.filter_unseen(log)
+
+    def _best_frontier(self) -> DataFrame | None:
+        """The frontier log as read, one row per canonical URL.  This
+        alias exists only because perfbench's traced probe calls it;
+        ROADMAP direction 1 deletes it."""
+        return self.frontier.read()
 
     def cooled_hosts(self, r: int) -> DataFrame | None:
         """Hosts in error cooldown at round ``r``: ≥ threshold errors
@@ -465,12 +459,11 @@ class CrawlEngine:
 
         rates = change_rates(captures, key=key, horizon_days=horizon_days)
         picks = revisit_priorities(rates, budget, key=key)
-        best = self._best_frontier()
-        if best is None:
+        front = self.frontier.read()
+        if front is None:
             return None
-        # picks ≤ budget rows → broadcast semi-join, no shuffle of the
-        # frontier view beyond its own dedup
-        return best.join(F.broadcast(picks.select(key)), key, "left_semi")
+        # picks ≤ budget rows: a broadcast semi-join, the log unshuffled
+        return front.join(F.broadcast(picks.select(key)), key, "left_semi")
 
     def url_state(self) -> DataFrame | None:
         """The latest validated fetch record per URL: for each
@@ -520,7 +513,8 @@ class CrawlEngine:
         - **200 / changed or validator-less**: refetched through the
           NORMAL :meth:`round` as ``extra_pending`` (the recrawl
           admission path — seen-filter bypassed by construction), whose
-          attempts record the new digests.
+          attempts record the new digests.  ``refetched`` counts these
+          picks (admitted for refetch), not the round's other fetches.
 
         The 304 rows are appended before the round runs, so the round's
         checkpoint ``r + 1`` covers them; when the round selects
@@ -545,15 +539,14 @@ class CrawlEngine:
             "refetched": 0, "saved_bytes": 0,
         }
         state = self.url_state()
-        best = self._best_frontier()
-        if state is None or best is None:
+        front = self.frontier.read()
+        if state is None or front is None:
             return metrics
         picks = state.orderBy(
             F.col("last_round").asc(), F.col("canon_url")
         ).limit(budget)
-        cand = best.join(
-            F.broadcast(picks.select("canon_url")), "canon_url",
-            "left_semi",
+        cand = front.join(
+            F.broadcast(picks.select("canon_url")), "canon_url", "left_semi"
         )
         plan = revalidation_plan(
             cand,
@@ -595,14 +588,12 @@ class CrawlEngine:
                     ),
                     metrics={"round": r},
                 )
-            changed = out.filter(F.col("status") != 304).select(
-                *FRONTIER_COLS
-            )
+            changed = out.filter(F.col("status") != 304).select(*FRONTIER_COLS)
             sub = self.round(r, extra_pending=changed)
             metrics.update(
                 revalidated=int(agg["n"] or 0),
                 not_modified=int(agg["nm"] or 0),
-                refetched=sub["fetched"],
+                refetched=int(agg["n"] or 0) - int(agg["nm"] or 0),
                 saved_bytes=int(agg["saved"] or 0),
                 round_metrics=sub,
             )
@@ -682,6 +673,9 @@ class CrawlEngine:
             self._maintain()
             self._maybe_expire(r)
             t = _mark("maintain", t)
+            # read before any round cache exists: a read refreshes the
+            # table, which un-caches every plan over it
+            known = self.frontier.read()
             pending = self.pending()
             metrics = {"round": r, "selected": 0, "fetched": 0, "errors": 0,
                        "new_urls": 0, "pages": 0, "timings": timings}
@@ -824,7 +818,8 @@ class CrawlEngine:
             # order (linking page's host, host_rank, link position), as
             # the simulator admits a link the first time it sees it.
             # Grouped on the frontier log's bucket partitioning, so the
-            # append's own repartition is dropped: one canon_url shuffle.
+            # admission anti-join and the append's own repartition add
+            # no Exchange: one canon_url shuffle.
             new_front = _first_per_url(
                 with_url_key(
                     links.select(
@@ -847,6 +842,12 @@ class CrawlEngine:
                 ).repartition(self.cfg.frontier_buckets, "canon_url"),
                 "found",
             )
+            if known is not None:
+                # admit new URLs only: a sort-merge anti-join on the log's
+                # buckets (a broadcast would add a job a round)
+                new_front = new_front.join(
+                    known.hint("merge"), "canon_url", "left_anti"
+                )
 
             # --- all round outputs write CONCURRENTLY -----------------------
             # Every sink below reads only the materialized `parsed` cache and
@@ -875,12 +876,9 @@ class CrawlEngine:
                     )
 
             def w_links() -> int:
-                # single pass: append, then read the new-URL count from the
-                # commit's manifest lineage (computed from parquet footers
-                # during the append) — a separate count() job re-ran the
-                # whole dedup shuffle
+                # the new-URL count is this commit's manifest lineage,
+                # read from parquet footers: no count() job
                 v = self.frontier.append(new_front)
-                # manifest lineage records THIS commit's rows only
                 return int(sum(self.frontier.snapshot(v).lineage.values()))
 
             def w_log():
@@ -961,19 +959,19 @@ class CrawlEngine:
         """FIXTURES.md §3 view: every discovered URL with the state of
         its latest attempt (a 304 counts as fetched: the content is
         current, no body was needed)."""
-        best = self._best_frontier()
-        if best is None:
+        front = self.frontier.read()
+        if front is None:
             return None
         cols = ("url", "canon_url", "host", "source", "priority", "depth")
         v = self.crawl_log.read()
         if v is None:
-            return best.select(*cols, F.lit("pending").alias("state"))
+            return front.select(*cols, F.lit("pending").alias("state"))
         state = F.when(
             F.col("fetched") | (F.col("status") == 304), F.lit("fetched")
         ).otherwise(F.lit("error"))
         last = v.groupBy("canon_url").agg(
             F.max_by(state, F.col("round")).alias("state")
         )
-        return best.join(last, "canon_url", "left").select(
+        return front.join(last, "canon_url", "left").select(
             *cols, F.coalesce("state", F.lit("pending")).alias("state")
         )

@@ -661,13 +661,14 @@ class BucketedLog(Table):
     """Append-only log stored as a BUCKETED external parquet table
     (Iceberg bucket-partitioning analogue, VERDICT r1 item 5).
 
-    Why: ``pending()`` dedupes the frontier log with
-    ``groupBy(canon_url)`` every round; over a plain parquet scan that
-    is a full-log Exchange even when the round touches a fraction of
-    the frontier.  A bucketed table satisfies the aggregation's
-    ClusteredDistribution at scan time — ``groupBy`` on the bucket
-    column runs with NO Exchange, so the per-round cost is a co-located
-    scan+agg, never a 10^10-row shuffle.  (At cluster scale this is
+    Why: a crawl round joins its logs on ``canon_url`` (pending()'s
+    exact anti-join against ``crawl_log``, the admission anti-join
+    against ``frontier_log``); over a plain parquet scan each is a
+    full-log Exchange even when the round touches a fraction of the
+    frontier.  A bucketed table satisfies the join's (or a ``groupBy``'s)
+    ClusteredDistribution at scan time — it runs with NO Exchange over
+    the log, so the per-round cost is a co-located scan, never a
+    10^10-row shuffle.  (At cluster scale this is
     Iceberg's ``bucket(N, canon_url)`` partition transform; here it is
     Spark native bucketing over an external table.)
 
@@ -728,8 +729,8 @@ class BucketedLog(Table):
 
     @property
     def retired_dir(self) -> str:
-        """Retention area for files replaced by overwrite / compaction /
-        merge_upsert.  The catalog scan reads ``data_dir`` wholesale, so
+        """Retention area for files replaced by overwrite or compaction.
+        The catalog scan reads ``data_dir`` wholesale, so
         replaced files cannot stay there (the Exchange-free fast path
         requires data_dir == current snapshot) — but deleting them
         outright broke crash-resume: a rollback to a checkpoint BELOW a
@@ -849,21 +850,25 @@ class BucketedLog(Table):
             shutil.rmtree(staging, ignore_errors=True)
         return sorted(new_files)
 
-    def _publish_files(
-        self, new_files, schema, metrics, replaced, **kw
-    ) -> int:
-        """Publish staged ``new_files`` in place of ``replaced``, then
-        RETIRE the replaced files (not delete: rollback below this
-        commit must stay readable; expire_snapshots reclaims them once
-        unreferenced).  retries=1: a bucketed log is SINGLE-WRITER by
-        contract — the staged-rename scheme assumes no concurrent
+    def _commit(self, df, mode, partition_cols, metrics) -> int:
+        """Publish ``df``'s staged files; an overwrite replaces every
+        live file and then RETIRES them (not delete: rollback below
+        this commit must stay readable; expire_snapshots reclaims them
+        once unreferenced).  retries=1: a bucketed log is SINGLE-WRITER
+        by contract — the staged-rename scheme assumes no concurrent
         writer is renaming files into data_dir, so a lost claim means
         another writer exists and the commit must fail loudly."""
+        assert not partition_cols, "bucketed log: no dir partitions"
+        # the live files are retired only after the manifest claim
+        # succeeds: a crash in between leaves the current snapshot's
+        # files in place
+        replaced = self._data_files() if mode != "append" else set()
+        new_files = self._stage(df)
         try:
             v = self._publish(
-                metrics, new_files, schema, None,
+                metrics, new_files, df.schema, None,
                 {"__all__": self._set_rows(new_files)},
-                replaced=replaced, retries=1, **kw,
+                replaced=replaced, retries=1, overwrite=mode != "append",
             )
         except Exception:
             # claim lost/failed: roll the renames back so the directory
@@ -874,71 +879,11 @@ class BucketedLog(Table):
                 except OSError:
                     pass
             raise
-        self._retire(set(replaced) - set(new_files))
+        self._retire(replaced - set(new_files))
         # register with the first commit, as a later read would: keeps
         # the catalog DDL off the read path of the next round
-        self._register(schema)
+        self._register(df.schema)
         return v
-
-    def _commit(self, df, mode, partition_cols, metrics) -> int:
-        assert not partition_cols, "bucketed log: no dir partitions"
-        # an overwrite replaces every live file, but only after the
-        # manifest claim succeeds: a crash in between leaves the current
-        # snapshot's files in place
-        old = self._data_files() if mode != "append" else set()
-        return self._publish_files(
-            self._stage(df), df.schema, metrics, old,
-            overwrite=mode != "append",
-        )
-
-    def merge_upsert(
-        self, src: DataFrame, metrics: dict[str, Any] | None = None
-    ) -> int:
-        """MERGE keyed on the bucket column, with BUCKET-level pruning.
-
-        Rows whose ``bucket_col`` appears in ``src`` are replaced by the
-        ``src`` row; unmatched ``src`` rows are inserted (caller
-        contract: ``src`` distinct on the bucket column).
-
-        Scale shape: no probe scan at all — matched keys can only live
-        in the buckets of the source keys (:meth:`_bucket_id`, the
-        function the staged file names use), so the affected-bucket set
-        comes from one O(|src|)→O(n_buckets) aggregation, and ONLY files
-        of affected buckets are read and rewritten; every other file
-        moves into the new manifest untouched.  Buckets hash the key,
-        so a source of k keys touches at most min(k, n_buckets)
-        buckets, and nearly all of them once k is a few times
-        n_buckets, whatever hosts the keys belong to: the pruning pays
-        off for merges of far fewer keys than the log has buckets.
-        Replaced files are RETIRED once the claim succeeds (see
-        ``_publish_files``).
-        """
-        snap = self.snapshot()
-        if snap is None or not snap.file_sets:
-            return self.append(src, metrics=metrics)
-        key = self.bucket_col
-        affected = {
-            r["b"]
-            for r in src.select(self._bucket_id().alias("b"))
-            .distinct()
-            .collect()
-        }
-
-        def bucket_of(fname: str) -> int:
-            return int(fname.partition(".")[0].rsplit("_", 1)[1])
-
-        touched = [f for f in snap.file_sets if bucket_of(f) in affected]
-        merged = src
-        if touched:
-            merged = (
-                self._scan(snap, touched)
-                .join(src.select(key).distinct(), [key], "left_anti")
-                .unionByName(src, allowMissingColumns=True)
-            )
-        return self._publish_files(
-            self._stage(merged), merged.schema, metrics, touched,
-            base=snap,
-        )
 
     def read(self, version: int | None = None) -> DataFrame | None:
         snap = self.snapshot(version)
@@ -978,8 +923,8 @@ class BucketedLog(Table):
         if snap is not None:
             keep = set(snap.file_sets)
         # restore files the target snapshot references that a later
-        # overwrite/compaction/merge retired (crash-resume across a
-        # rewrite: the checkpointed version must read again)
+        # overwrite/compaction retired (crash-resume across a rewrite:
+        # the checkpointed version must read again)
         for f in keep:
             live = os.path.join(self.data_dir, f)
             retired = os.path.join(self.retired_dir, f)
@@ -987,6 +932,11 @@ class BucketedLog(Table):
                 os.replace(retired, live)
         for f in self._data_files() - keep:
             os.remove(os.path.join(self.data_dir, f))
+        # a writer killed inside _stage leaves its staging dir behind;
+        # rollback runs only from resume, and the log is single-writer
+        for d in os.listdir(self.dir):
+            if d.startswith("_staging_"):
+                shutil.rmtree(os.path.join(self.dir, d), ignore_errors=True)
         super().rollback(version)
         if self._registered:
             self.spark.sql(f"REFRESH TABLE {self.cat_name}")

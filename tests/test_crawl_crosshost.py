@@ -246,6 +246,43 @@ def _search_html(*links: str) -> str:
     )
 
 
+def _hand_engine(spark, root, pages, seeds, robots, policy):
+    """A CrawlEngine over a hand-built web: ``pages`` url -> html,
+    ``seeds`` seed-list dicts, ``robots`` host -> max_parallel."""
+    return CrawlEngine(
+        spark, Catalog(spark, root),
+        spark.createDataFrame(
+            [(u, h.encode("utf-8")) for u, h in pages.items()],
+            "url string, html binary",
+        ).select(
+            "url",
+            F.to_timestamp(F.lit("2024-03-01 00:00:00")).alias("warc_ts"),
+            "html",
+        ),
+        spark.createDataFrame(
+            [tuple(s.values()) for s in seeds],
+            "seed_url string, source string, priority int",
+        ),
+        spark.createDataFrame(
+            [(h, True, 1, n) for h, n in robots.items()],
+            "host string, allow boolean, crawl_delay_ms long, "
+            "max_parallel int",
+        ),
+        CrawlConfig(n_shards=4, fetch_partitions=4, policy=policy),
+    )
+
+
+def _simulate(pages, seeds, robots, policy, max_rounds):
+    return simulate(
+        SimWorld(
+            {u: h.encode("utf-8") for u, h in pages.items()},
+            {h: {"allow": True, "max_parallel": n} for h, n in robots.items()},
+            seeds,
+        ),
+        policy=policy, max_rounds=max_rounds,
+    )
+
+
 @pytest.fixture(scope="module")
 def first_found(spark, tmp_path_factory):
     """Round 0 visits a priority-5 search page on a.example and a
@@ -261,36 +298,14 @@ def first_found(spark, tmp_path_factory):
         {"seed_url": SEARCH_A, "source": "a", "priority": 5},
         {"seed_url": SEARCH_B, "source": "b", "priority": 1},
     ]
-    robots = {"c.example": {"allow": True, "max_parallel": 1}}
+    robots = {"c.example": 1}
     policy = FetchPolicy(permanent_mod=1)  # no simulated 5xx
-    eng = CrawlEngine(
-        spark, Catalog(spark, str(tmp_path_factory.mktemp("first"))),
-        spark.createDataFrame(
-            [(u, h.encode("utf-8")) for u, h in pages.items()],
-            "url string, html binary",
-        ).select(
-            "url",
-            F.to_timestamp(F.lit("2024-03-01 00:00:00")).alias("warc_ts"),
-            "html",
-        ),
-        spark.createDataFrame(
-            [tuple(s.values()) for s in seeds],
-            "seed_url string, source string, priority int",
-        ),
-        spark.createDataFrame(
-            [("c.example", True, 1, 1)],
-            "host string, allow boolean, crawl_delay_ms long, "
-            "max_parallel int",
-        ),
-        CrawlConfig(n_shards=4, fetch_partitions=4, policy=policy),
+    eng = _hand_engine(
+        spark, str(tmp_path_factory.mktemp("first")), pages, seeds, robots,
+        policy,
     )
     eng.run(max_rounds=4)
-    sim = simulate(
-        SimWorld({u: h.encode("utf-8") for u, h in pages.items()}, robots,
-                 seeds),
-        policy=policy, max_rounds=4,
-    )
-    return eng, sim
+    return eng, _simulate(pages, seeds, robots, policy, 4)
 
 
 def test_first_discovery_wins_as_in_simulator(first_found):
@@ -310,3 +325,78 @@ def test_first_discovery_wins_as_in_simulator(first_found):
         for r in eng.frontier_state().collect()
     }
     assert prio[C_DOC1] == 5 and prio[C_DOC2] == 1
+
+
+# --- the frontier admits each URL once ------------------------------------
+
+S_PAGES = [f"https://s.example/busca?page={i}" for i in range(3)]
+D_DOC1 = "https://d.example/norma/1"
+D_DOC2 = "https://d.example/norma/2"
+
+
+def _next_html(nxt: str | None, *links: str) -> str:
+    page = _search_html(*links)
+    if nxt is None:
+        return page
+    return page.replace(
+        "</body>", f'<a class="next" href="{nxt}">Próxima</a></body>'
+    )
+
+
+@pytest.fixture(scope="module")
+def admitted_once(spark, tmp_path_factory):
+    """Round 0 visits the seed, listed under two spellings of one
+    canonical URL; it links c.example's /norma/1 and /norma/2 (budget
+    1), d.example's /norma/1 and the next search page.  Round 1's
+    search page re-links c.example's /norma/2, still pending, and
+    round 2's re-links d.example's /norma/1, crawled in round 1."""
+    pages = {
+        S_PAGES[0]: _next_html(S_PAGES[1], C_DOC1, C_DOC2, D_DOC1),
+        S_PAGES[1]: _next_html(S_PAGES[2], C_DOC2, D_DOC2),
+        S_PAGES[2]: _next_html(None, D_DOC1),
+    } | {
+        u: _doc_html("Norma", f"texto da norma {u[-1]}. " * 20)
+        for u in (C_DOC1, C_DOC2, D_DOC1, D_DOC2)
+    }
+    seed = {"source": "s", "priority": 0}
+    seeds = [
+        {"seed_url": S_PAGES[0], **seed},
+        {"seed_url": "https://S.Example:443/busca?page=0", **seed},
+    ]
+    robots = {"c.example": 1}
+    policy = FetchPolicy(permanent_mod=1)  # no simulated 5xx
+    eng = _hand_engine(
+        spark, str(tmp_path_factory.mktemp("once")), pages, seeds, robots,
+        policy,
+    )
+    rounds = eng.run(max_rounds=6)
+    # the simulator keys seeds by raw URL: one spelling
+    return eng, rounds, _simulate(pages, seeds[:1], robots, policy, 6)
+
+
+def test_frontier_log_holds_each_url_once(admitted_once):
+    eng, _, _ = admitted_once
+    urls = [r["canon_url"] for r in eng.frontier.read().collect()]
+    assert sorted(urls) == sorted(
+        set(S_PAGES) | {C_DOC1, C_DOC2, D_DOC1, D_DOC2}
+    )
+
+
+def test_new_urls_exclude_relinked_docs(admitted_once):
+    """Round 1 finds /norma/2 of c.example again (pending) beside two
+    new URLs; round 2 finds only d.example's /norma/1 again (crawled)."""
+    _, rounds, _ = admitted_once
+    assert [m["new_urls"] for m in rounds[:3]] == [4, 2, 0]
+
+
+def test_admit_once_crawl_log_matches_simulator(admitted_once):
+    eng, _, sim = admitted_once
+    got = sorted(
+        (r["round"], r["host"], r["host_rank"], r["canon_url"], r["fetched"])
+        for r in eng.crawl_log.read().collect()
+    )
+    assert got == sorted(sim.visit_log)
+    # the seed's two spellings are one URL, fetched once
+    assert [g for g in got if g[3] == S_PAGES[0]] == [
+        (0, "s.example", 1, S_PAGES[0], True)
+    ]

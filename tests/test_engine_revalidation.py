@@ -272,3 +272,34 @@ def test_all_304_round_checkpoints_its_rows(spark, world, drained):
         for row in eng.frontier_state().collect()
     }
     assert {state[row["canon_url"]] for row in rows.collect()} == {"fetched"}
+
+
+def test_refetched_counts_changed_picks_only(spark, world,
+                                             tmp_path_factory):
+    """A revalidation round over a crawl with URLs still pending also
+    crawls them; ``refetched`` counts only the changed picks admitted
+    for refetch, not the round's other fetches."""
+    eng = CrawlEngine(
+        spark, Catalog(spark, str(tmp_path_factory.mktemp("pending"))),
+        world["pages_raw"], world["seeds"], world["robots"],
+        CrawlConfig(n_shards=8, fetch_partitions=4),
+    )
+    eng.bootstrap()
+    assert eng.round(0)["new_urls"] > 0
+    budget = 2
+    (changed,) = [
+        r["canon_url"]
+        for r in eng.url_state().orderBy("last_round", "canon_url")
+        .limit(budget).collect()
+    ][:1]
+    eng.pages_raw = world["pages_raw"].withColumn(
+        "html",
+        F.when(
+            F.col("url") == changed,
+            F.concat(F.col("html"), F.lit(b"<!--rev-->")),
+        ).otherwise(F.col("html")),
+    )
+    m = eng.revalidation_round(1, budget)
+    assert m["not_modified"] == budget - 1
+    assert m["refetched"] == 1
+    assert m["round_metrics"]["fetched"] > 1

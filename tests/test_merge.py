@@ -1,9 +1,9 @@
 """Row-level table changes: Iceberg-style copy-on-write MERGE / DELETE.
 
 Covers `Table.merge_upsert` / `Table.delete_where` (file-SET-level
-pruning: only sets containing matched rows are rewritten) and
-`BucketedLog.merge_upsert` (BUCKET-level pruning: affected buckets are
-computed from the source keys' murmur3 hash, no probe scan at all).
+pruning: only sets containing matched rows are rewritten), and the
+rewrites of the append-only `BucketedLog`: snapshot reads, bucket-aligned
+files, and compaction with rollback, time travel and expiry.
 """
 
 from __future__ import annotations
@@ -231,51 +231,6 @@ def test_rewrites_keep_partitioning(spark, tmp_path):
     assert _rows(df) == [(1, "x", "a"), (2, "y", "b"), (3, "z", "a")]
 
 
-def test_blog_merge_updates_and_inserts(spark, blog):
-    src = spark.createDataFrame(
-        [("https://h0.leg.br/doc/0", 0, "FETCHED"),
-         ("https://hx.leg.br/new", 999, "NEW")],
-        "url string, n int, st string")
-    total0 = blog.approx_rows()
-    blog.merge_upsert(src)
-    d = {r["url"]: r["st"] for r in blog.read().collect()}
-    assert d["https://h0.leg.br/doc/0"] == "FETCHED"
-    assert d["https://hx.leg.br/new"] == "NEW"
-    assert d["https://h1.leg.br/doc/1"] == "seen"
-    assert blog.approx_rows() == total0 + 1 == blog.read().count()
-
-
-def test_blog_merge_rewrites_only_affected_buckets(spark, blog):
-    src = spark.createDataFrame([("https://h0.leg.br/doc/0", 0, "F")],
-                                "url string, n int, st string")
-    n_bucket = spark.createDataFrame([("https://h0.leg.br/doc/0",)],
-                                     "url string").select(
-        F.pmod(F.hash("url"), F.lit(8)).alias("b")).collect()[0]["b"]
-    before = set(blog.snapshot().file_sets)
-    blog.merge_upsert(src)
-    after = set(blog.snapshot().file_sets)
-    replaced, added = before - after, after - before
-    # exactly the one affected bucket's file is rewritten
-    assert len(replaced) == 1 and len(added) == 1
-
-    def bucket_of(f):
-        return int(f.partition(".")[0].rsplit("_", 1)[1])
-
-    assert {bucket_of(f) for f in replaced} == {n_bucket}
-    assert {bucket_of(f) for f in added} == {n_bucket}
-    # replaced files are gone from disk (bucketed-read contract)
-    assert after == blog._data_files()
-
-
-def test_blog_merge_read_stays_bucketed(spark, blog):
-    src = spark.createDataFrame([("https://h1.leg.br/doc/1", 1, "F")],
-                                "url string, n int, st string")
-    blog.merge_upsert(src)
-    plan = (blog.read().groupBy("url").count()
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan
-
-
 def test_blog_files_hold_their_buckets_rows(spark, tmp_path):
     """A bucket file's name comes from its rows.  An append of a frame
     already hash-partitioned on the bucket column at n_buckets
@@ -371,8 +326,8 @@ def test_randomized_merge_delete_matches_model(spark, tmp_path):
 
 def test_blog_rewrites_keep_rollback_and_time_travel(spark, tmp_path):
     """Crash-resume across a rewrite (round-4 fix): BucketedLog
-    overwrite/compaction/merge RETIRE replaced files instead of
-    deleting them, so (a) a historical read below the rewrite still
+    overwrite/compaction RETIRE replaced files instead of deleting
+    them, so (a) a historical read below the rewrite still
     works, (b) rollback to a checkpointed version restores the retired
     files, and (c) expire_snapshots reclaims them once no surviving
     manifest references them.  Before the fix, a crash between a
@@ -389,12 +344,6 @@ def test_blog_rewrites_keep_rollback_and_time_travel(spark, tmp_path):
     # (b) rollback below the compaction (crash-resume path)
     log.rollback(pre)
     assert log.read().count() == 30
-    # merge then rollback below the merge: replaced bucket restored
-    v2 = log.current_version()
-    log.merge_upsert(spark.createDataFrame([("u0-0", 99)], "k string, r int"))
-    assert {r["r"] for r in log.read().filter("k = 'u0-0'").collect()} == {99}
-    log.rollback(v2)
-    assert {r["r"] for r in log.read().filter("k = 'u0-0'").collect()} == {0}
     # (c) a fresh rewrite boundary lets expiry drop old manifests AND
     # the retired files they referenced
     log.compact()
@@ -405,3 +354,18 @@ def test_blog_rewrites_keep_rollback_and_time_travel(spark, tmp_path):
     left = set(_os.listdir(log.retired_dir))
     assert left < retired  # unreferenced retired files reclaimed
     assert log.read().count() == 30
+
+
+def test_blog_rollback_removes_staging_dirs(spark, blog):
+    """A writer killed inside ``_stage`` leaves its ``_staging_*`` dir in
+    the table dir; rollback (run by resume) removes it and reads the
+    same rows."""
+    v = blog.current_version()
+    before = _rows(blog.read())
+    staging = os.path.join(blog.dir, "_staging_x")
+    spark.createDataFrame([("https://h9.leg.br/x", 1, "seen")],
+                          "url string, n int, st string").write.parquet(staging)
+    assert any(f.endswith(".parquet") for f in os.listdir(staging))
+    blog.rollback(v)
+    assert not os.path.exists(staging)
+    assert _rows(blog.read()) == before

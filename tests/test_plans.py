@@ -186,10 +186,9 @@ def test_ivf_centroid_pick_is_partial_topk(spark):
 
 def test_bucketed_frontier_pending_has_no_exchange(spark, tmp_path):
     """VERDICT r1 item 5: with the frontier log stored as a bucketed
-    table (tables.BucketedLog), pending()'s dedup groupBy must satisfy
-    its ClusteredDistribution straight off the scan — the whole
-    pending() plan (groupBy + bloom probe + anti-join build side prep)
-    contains NO Exchange over the log relation."""
+    table (tables.BucketedLog), the whole pending() plan contains NO
+    Exchange over the log relation.  The log admits each URL once, so
+    the plan has no aggregate keyed on canon_url either."""
     import re
 
     from legislation_scraper_spark.plans.crawl import (
@@ -208,6 +207,8 @@ def test_bucketed_frontier_pending_has_no_exchange(spark, tmp_path):
     eng.bootstrap()
     plan = _explain(eng.pending())
     assert not re.findall(r"\bExchange\b", plan), plan
+    simple = _explain(eng.pending(), "simple")
+    assert not re.findall(r"Aggregate\(key=\[canon_url#", simple), simple
 
 
 def test_pending_exact_side_reads_bucketed_crawl_log(spark, tmp_path):
@@ -264,11 +265,27 @@ def test_pending_exact_side_reads_bucketed_crawl_log(spark, tmp_path):
         assert not [op for op in ops[:j] if op.startswith("Exchange")], text
 
 
+def _broadcasts_outside_caches(df) -> int:
+    """BroadcastExchange nodes of ``df``'s physical plan, not counting
+    those inside a cached input's own plan."""
+    def walk(node) -> int:
+        name = node.nodeName()
+        if name == "InMemoryTableScan":
+            return 0
+        kids = node.children()
+        return int(name == "BroadcastExchange") + sum(
+            walk(kids.apply(i)) for i in range(kids.size())
+        )
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
 def test_frontier_sink_shuffles_canon_url_once(spark, tmp_path, monkeypatch):
     """A round's new links reach the bucketed frontier_log through ONE
     canon_url Exchange: the first-discovery grouping runs on the
-    bucket partitioning, so the append's own repartition
-    (tables.BucketedLog._stage) is dropped.  8 shuffle partitions and
+    bucket partitioning, so the admission anti-join against the log
+    and the append's own repartition (tables.BucketedLog._stage) add
+    none, and the log is not broadcast.  8 shuffle partitions and
     32 buckets, planned inside the round, where AQE is off.  The plan
     checked is the one the frontier append hands to the parquet
     writer."""
@@ -291,12 +308,13 @@ def test_frontier_sink_shuffles_canon_url_once(spark, tmp_path, monkeypatch):
                     frontier_buckets=32),
     )
     eng.bootstrap()
-    plans = []
+    plans, broadcasts = [], []
     real_parquet = DataFrameWriter.parquet
 
     def parquet(writer, path, *a, **kw):
         if path.startswith(os.path.join(eng.frontier.dir, "")):
             plans.append(_explain(writer._df, "simple"))
+            broadcasts.append(_broadcasts_outside_caches(writer._df))
         return real_parquet(writer, path, *a, **kw)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
@@ -308,6 +326,8 @@ def test_frontier_sink_shuffles_canon_url_once(spark, tmp_path, monkeypatch):
     found = re.findall(r"Exchange hashpartitioning\(canon_url#\d+, (\d+)\)",
                        plan)
     assert found == ["32"], plan
+    # a cached input keeps its own broadcasts; the sink's plan has none
+    assert broadcasts == [0], plan
 
 
 def test_seen_filter_plans_have_no_python_stage(spark, tmp_path):

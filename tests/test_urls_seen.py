@@ -102,10 +102,14 @@ def test_salted_host_preserves_host_prefix(spark):
 
 @pytest.mark.parametrize("fpp", [0.01, 0.5])
 def test_seen_set_exactness_under_bloom_fp(spark, tmp_path, fpp):
-    """fpp=0.5 forces many bloom false positives → the exact anti-join
-    backstop must still pass every truly-unseen URL through."""
+    """A filter log over-filled past its capacity (and fpp=0.5) makes
+    the Bloom probe report unseen URLs as maybe-seen → the exact
+    anti-join backstop must still pass every truly-unseen URL through."""
     cat = Catalog(spark, str(tmp_path / f"s{fpp}"))
-    seen = SeenSet(cat.table("seen"), n_shards=4, fpp=fpp)
+    seen = SeenSet(
+        cat.table("seen"), n_shards=4, fpp=fpp,
+        filters_table=cat.table("seen_filters"), keys_per_shard=16,
+    )
     seen_urls = spark.createDataFrame(
         [(f"https://a.br/doc/{i}",) for i in range(0, 1000, 2)], "url string"
     )
@@ -113,7 +117,14 @@ def test_seen_set_exactness_under_bloom_fp(spark, tmp_path, fpp):
     cand = spark.createDataFrame(
         [(f"https://a.br/doc/{i}",) for i in range(1000)], "url string"
     )
-    out = seen.filter_unseen(with_url_key(cand, "url", seen.n_shards))
+    keyed = with_url_key(cand, "url", seen.n_shards)
+    probed = bloom_probe(keyed, seen.merged_filters(), seen._params())
+    false_pos = probed.filter(
+        F.col("maybe_seen")
+        & (F.regexp_extract("url", r"(\d+)$", 1).cast("int") % 2 == 1)
+    )
+    assert false_pos.count() > 0  # the backstop is exercised
+    out = seen.filter_unseen(keyed)
     got = sorted(r["url"] for r in out.collect())
     want = sorted(f"https://a.br/doc/{i}" for i in range(1, 1000, 2))
     assert got == want
@@ -145,8 +156,9 @@ def test_with_url_key_shards_stable(spark):
 def test_incremental_filter_state_equivalent(spark, tmp_path):
     """Incremental delta-bitmap path: multiple adds, probe from the
     OR-merged filter log, never rescanning the seen table — results
-    identical to the stateless rebuild path, before and after folding
-    the delta log."""
+    identical to the exact oracle (``ref``: no filter log, so every
+    candidate takes the exact anti-join), before and after folding the
+    delta log."""
     from pyspark.sql import functions as F
 
     from legislation_scraper_spark.operators.seen import SeenSet
@@ -237,11 +249,12 @@ def test_bloom_has_no_false_negatives(spark, keys, cut, keys_per_shard):
     assert not missed, missed
 
 
-def test_empty_filter_log_falls_back_to_rebuild(spark, tmp_path):
+def test_empty_filter_log_falls_back_to_exact_join(spark, tmp_path):
     """filters_table configured but its delta log empty while the exact
     seen table is NOT (store predates the incremental path, or rows were
-    appended bypassing add()): filter_unseen must fall back to the
-    stateless Bloom rebuild, not return every candidate as unseen."""
+    appended bypassing add()): filter_unseen must run the exact
+    anti-join on every candidate, not return every candidate as
+    unseen."""
     from pyspark.sql import functions as F
 
     from legislation_scraper_spark.operators.seen import (
