@@ -124,7 +124,7 @@ def rank_per_host_range(
     off_map = F.create_map(
         *[F.lit(v) for k in sorted(offs) for v in (k, offs[k])]
     )
-    g = s.withColumn("_pos", off_map.getItem(pid) + lidx)
+    g = s.withColumn("_pos", off_map[pid] + lidx)
     base = g.groupBy("host").agg(F.min("_pos").alias("_base"))
     return (
         g.join(F.broadcast(base), "host")

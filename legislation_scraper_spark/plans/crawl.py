@@ -69,6 +69,10 @@ from ..tables import Catalog
 
 # off for the duration of a round (session.py explains why)
 AQE = "spark.sql.adaptive.enabled"
+# a table holding more commit sets than this is compacted at the start
+# of the next round (_maintain); a bucketed log's snapshot then lists
+# few enough dirs to read without a Spark job
+MAX_SETS = 12
 
 FRONTIER_COLS = (
     "url", "canon_url", "url_hash", "shard", "host", "source",
@@ -605,17 +609,16 @@ class CrawlEngine:
 
     def _maintain(self) -> None:
         """Compact many-commit tables (Iceberg rewrite_data_files
-        analogue) so read fan-in stays bounded as rounds accumulate.
-        The trigger threshold is per-table: a bucketed log legitimately
-        holds one file per bucket per commit, so its fan-in budget is
-        buckets × 12, not 12."""
+        analogue) so read fan-in stays bounded as rounds accumulate:
+        a table holding more than ``MAX_SETS`` commit sets is folded
+        into one."""
         for t in (self.frontier, self.crawl_log):
             snap = t.snapshot()
-            if snap and len(snap.file_sets) > 12 * t.n_buckets:
+            if snap and len(snap.file_sets) > MAX_SETS:
                 t.compact()
         if self.seen.filters_table is not None:
             snap = self.seen.filters_table.snapshot()
-            if snap and len(snap.file_sets) > 12:
+            if snap and len(snap.file_sets) > MAX_SETS:
                 # fold delta bitmaps row-wise (plain compact would keep
                 # one row per round; this ORs them to one per shard)
                 self.seen.compact_filters()
@@ -673,9 +676,6 @@ class CrawlEngine:
             self._maintain()
             self._maybe_expire(r)
             t = _mark("maintain", t)
-            # read before any round cache exists: a read refreshes the
-            # table, which un-caches every plan over it
-            known = self.frontier.read()
             pending = self.pending()
             metrics = {"round": r, "selected": 0, "fetched": 0, "errors": 0,
                        "new_urls": 0, "pages": 0, "timings": timings}
@@ -842,6 +842,7 @@ class CrawlEngine:
                 ).repartition(self.cfg.frontier_buckets, "canon_url"),
                 "found",
             )
+            known = self.frontier.read()
             if known is not None:
                 # admit new URLs only: a sort-merge anti-join on the log's
                 # buckets (a broadcast would add a job a round)

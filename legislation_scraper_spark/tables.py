@@ -15,7 +15,9 @@ minimal, swappable stand-in with the same *semantics*:
   isolation and time travel.  A snapshot reads as one parquet scan per
   schema vintage with the recorded schema supplied, its commit dirs as
   ``set=`` partitions of one ``data/`` root: no schema-inference job,
-  and one ``FileScan`` for a table that never evolved;
+  and one ``FileScan`` for a table that never evolved.  A
+  ``BucketedLog`` is stored the same way and differs only in that its
+  scan carries a bucket spec;
 - each manifest carries per-partition row-count lineage, the
   cumulative row count and free-form metrics, mirroring Iceberg
   snapshot summaries.
@@ -240,6 +242,13 @@ class Table:
                 f"table {self.name}: manifest {path} records no schema "
                 "(written by an older store format); rebuild the store"
             )
+        if any(not os.path.basename(s).startswith("set=")
+               for vin in d["vintages"] for s in vin["sets"]):
+            raise ValueError(
+                f"table {self.name}: manifest {path} names files, not "
+                "commit dirs (written by an older store format); rebuild "
+                "the store"
+            )
         return Snapshot(
             d["version"], d["lineage"], d["metrics"], d["total_rows"],
             d.get("schema_ops"), d["vintages"],
@@ -410,8 +419,8 @@ class Table:
     ) -> int:
         new_set, lineage = self._write_set(df, partition_cols)
         return self._publish(
-            metrics, [new_set], df.schema, partition_cols, lineage,
-            overwrite=mode != "append",
+            metrics, [new_set] if new_set else [], df.schema,
+            partition_cols, lineage, overwrite=mode != "append",
         )
 
     def append(
@@ -638,10 +647,8 @@ class Table:
         removed_sets = 0
         for entry in sorted(os.listdir(self.data_dir)):
             p = os.path.join(self.data_dir, entry)
-            if p in live or entry in live:
-                continue  # Table refs abs dirs; BucketedLog refs names
-            if entry.startswith(("_", ".")):
-                continue  # catalog markers (_SUCCESS, _bucket_spec…)
+            if p in live:
+                continue
             if os.path.isdir(p):
                 shutil.rmtree(p)
             else:
@@ -658,42 +665,38 @@ BUCKET_DIR = "lss_bucket"
 
 
 class BucketedLog(Table):
-    """Append-only log stored as a BUCKETED external parquet table
-    (Iceberg bucket-partitioning analogue, VERDICT r1 item 5).
+    """Append-only log whose commits are BUCKETED by one column
+    (Iceberg's ``bucket(N, col)`` partition transform analogue).
 
     Why: a crawl round joins its logs on ``canon_url`` (pending()'s
     exact anti-join against ``crawl_log``, the admission anti-join
     against ``frontier_log``); over a plain parquet scan each is a
     full-log Exchange even when the round touches a fraction of the
-    frontier.  A bucketed table satisfies the join's (or a ``groupBy``'s)
-    ClusteredDistribution at scan time — it runs with NO Exchange over
-    the log, so the per-round cost is a co-located scan, never a
-    10^10-row shuffle.  (At cluster scale this is
-    Iceberg's ``bucket(N, canon_url)`` partition transform; here it is
-    Spark native bucketing over an external table.)
+    frontier.  A bucketed scan satisfies the join's (or a ``groupBy``'s)
+    ClusteredDistribution by itself — it runs with NO Exchange over the
+    log, so the per-round cost is a co-located scan, never a 10^10-row
+    shuffle.
 
-    Mechanics: the table is registered in the session catalog
-    (``CREATE TABLE ... CLUSTERED BY ... LOCATION ...``, typed from the
-    committed schema, never inferred) pointing at this Table's data
-    dir; commits write bucket-aligned files (see ``_stage``); the
-    snapshot manifest records the FILE NAMES each commit added
-    (bucketed files live flat in one location), which keeps atomic
-    snapshots, time travel, and rollback working exactly as for
-    ``Table``.  A ``_bucket_spec.json`` marker
-    makes the storage self-describing — ``Catalog.table`` returns a
-    ``BucketedLog`` for any table dir that carries one, so resume in a
-    fresh session re-registers the catalog table automatically.
+    Storage is a ``Table``'s: each commit writes one file per bucket
+    into a fresh ``data/set=<id>/`` (see ``_stage``), and the manifest
+    names set dirs.  Only the read differs: every snapshot, current or
+    historical, reads its set dirs as ONE bucketed scan (``_parquet``),
+    so snapshots, time travel, rollback, compaction and expiry are
+    ``Table``'s own and the manifest is the log's only state: reading
+    or appending un-caches no plan over the log.  A ``_bucket_spec.json``
+    marker makes the storage self-describing — ``Catalog.table``
+    returns a ``BucketedLog`` for any table dir that carries one.
     """
 
     SPEC_FILE = "_bucket_spec.json"
 
     def evolve_schema(self, ops, metrics=None) -> int:
-        """Not supported: the bucketed log's schema is pinned by its
-        catalog DDL (CREATE TABLE ... CLUSTERED BY).  Evolve by
-        rewriting into a new log (the Iceberg equivalent of changing a
-        partition transform — also a new table)."""
+        """Not supported: a snapshot of several schema vintages reads as
+        a union of scans, which is not bucketed.  Evolve by rewriting
+        into a new log (the Iceberg equivalent of changing a partition
+        transform — also a new table)."""
         raise NotImplementedError(
-            "BucketedLog schema is pinned by its bucket DDL; "
+            "a BucketedLog reads as one bucketed scan of one schema; "
             "rewrite into a new log to change it"
         )
 
@@ -718,98 +721,52 @@ class BucketedLog(Table):
             with open(spec_path) as f:
                 d = json.load(f)
             self.bucket_col, self.n_buckets = d["bucket_col"], d["n_buckets"]
-        # catalog identity is derived from the store path — unique per
-        # store, stable across sessions (resume re-registers it)
-        import hashlib as _hl
 
-        self.cat_name = (
-            f"lss_{name}_{_hl.md5(self.dir.encode()).hexdigest()[:10]}"
-        )
-        self._registered = False
-
-    @property
-    def retired_dir(self) -> str:
-        """Retention area for files replaced by overwrite or compaction.
-        The catalog scan reads ``data_dir`` wholesale, so
-        replaced files cannot stay there (the Exchange-free fast path
-        requires data_dir == current snapshot) — but deleting them
-        outright broke crash-resume: a rollback to a checkpoint BELOW a
-        compaction pointed at deleted files (found by direct repro in
-        round 4).  Retired files are restored by :meth:`rollback`,
-        resolved by historical reads, and purged by
-        :meth:`expire_snapshots` once no surviving manifest references
-        them."""
-        return os.path.join(self.dir, "_retired")
-
-    def _retire(self, names) -> None:
-        names = sorted(names)
-        if not names:
-            return
-        os.makedirs(self.retired_dir, exist_ok=True)
-        for f in names:
-            os.replace(
-                os.path.join(self.data_dir, f),
-                os.path.join(self.retired_dir, f),
-            )
-
-    def _resolve(self, fname: str) -> str:
-        """Path of a manifest-referenced file: live dir, else retired."""
-        p = os.path.join(self.data_dir, fname)
-        return p if os.path.exists(p) else os.path.join(
-            self.retired_dir, fname
-        )
-
-    def _data_files(self) -> set[str]:
-        return {
-            f
-            for f in os.listdir(self.data_dir)
-            if not f.startswith(("_", "."))
-        }
-
-    def _register(self, schema: StructType) -> None:
-        """The catalog table over ``data_dir`` with the bucket DDL, once
-        per session; typed from the schema given, never inferred."""
-        if self._registered:
-            return
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema
-        )
-        self.spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {self.cat_name} ({cols}) "
-            f"USING PARQUET CLUSTERED BY ({self.bucket_col}) "
-            f"INTO {self.n_buckets} BUCKETS LOCATION '{self.data_dir}'"
-        )
-        self._registered = True
-
-    def _parquet(self, schema: StructType, files: list[str]) -> DataFrame:
-        # flat bucket files, live or retired: nothing to discover
-        return self.spark.read.schema(schema).parquet(
-            *[self._resolve(f) for f in files]
-        )
-
-    def _set_rows(self, files: list[str]) -> int:
-        import pyarrow.parquet as pq
-
-        return sum(pq.read_metadata(self._resolve(f)).num_rows for f in files)
+    def _parquet(self, schema: StructType, sets: list[str]) -> DataFrame:
+        """The set dirs as one BUCKETED scan: a file relation given the
+        bucket spec, as a catalog table would give it, with ``set`` as
+        the partition column of ``data/``.  The public reader takes no
+        bucket spec, so this is the store's one use of Spark's private
+        API.  Listing up to 32 dirs launches no Spark job (Spark lists
+        more in parallel, as a job); compaction keeps snapshots below."""
+        jvm, js = self.spark._jvm, self.spark._jsparkSession
+        seq, opt = jvm.PythonUtils.toSeq, jvm.scala.Option
+        relation = jvm.org.apache.spark.sql.execution.datasources.DataSource(
+            js, "parquet", seq(list(sets)),
+            opt.apply(js.parseDataType(schema.add("set", "string").json())),
+            seq([]),
+            opt.apply(jvm.org.apache.spark.sql.catalyst.catalog.BucketSpec(
+                self.n_buckets, seq([self.bucket_col]), seq([])
+            )),
+            jvm.PythonUtils.toScalaMap({"basePath": self.data_dir}),
+            opt.empty(),
+        ).resolveRelation(True, False)
+        return DataFrame(js.baseRelationToDataFrame(relation), self.spark)
 
     def _bucket_id(self):
         """Each row's bucket: pmod(murmur3(bucket_col), n_buckets), the
         function of the bucket spec and of ``repartition(n, col)``."""
         return F.pmod(F.hash(F.col(self.bucket_col)), F.lit(self.n_buckets))
 
-    def _stage(self, df: DataFrame) -> list[str]:
-        """Write ``df`` as bucket files and rename them into
-        ``data_dir``; returns the new file names.
+    def _write_set(
+        self, df: DataFrame, partition_cols: list[str] | None
+    ) -> tuple[str | None, dict[str, int]]:
+        """As ``Table._write_set``, but an empty frame writes no set:
+        its commit adds none, so it neither lengthens the listing of
+        every later read nor brings the next compaction closer."""
+        assert not partition_cols, "bucketed log: no dir partitions"
+        new_set = self._stage(df)
+        return new_set, _footer_lineage(new_set, None) if new_set else {}
 
-        The files are written OUTSIDE the catalog write path.  Two
-        reasons, both measured:
-        - ``insertInto`` ends with an automatic refreshByPath, which
-          invalidates EVERY cached plan scanning this table — a crawl
-          round's parsed cache reads the frontier, so each frontier
-          append silently forced later sinks to recompute the whole
-          fetch+parse chain (≈77 s/round at local[4]).
-        - an unaligned insert writes (input partitions × buckets)
-          files per commit, tripping the compactor every round.
+    def _stage(self, df: DataFrame) -> str | None:
+        """Write ``df`` as one file per bucket into a fresh set dir;
+        returns the dir, or None when ``df`` has no rows.
+
+        Why staging: Spark writes bucket files only through
+        ``saveAsTable``, into a catalog table, and a plain write
+        partitioned by bucket leaves one subdir per bucket, which a
+        bucketed scan does not read as buckets.
+
         Mechanics: the staging write is partitioned by each row's
         bucket (:meth:`_bucket_id`), so a file's bucket comes from its
         rows, not from the task that wrote it (Spark drops the
@@ -817,12 +774,11 @@ class BucketedLog(Table):
         the column at ``n`` partitions, and AQE may then coalesce the
         shuffle left into fewer tasks than buckets).  The bucket id is
         carried in the file NAME (Spark's BucketingUtils parses the
-        trailing ``_NNNNN`` group), so a rename turns plain parquet
-        output into valid bucket files.  Stray renamed files are
-        invisible until a manifest names them: every read path goes
-        through file_sets."""
+        trailing ``_NNNNN`` group), so renaming the files into one set
+        dir turns plain parquet output into valid bucket files.  A set
+        dir is invisible until a manifest names it."""
         staging = os.path.join(self.dir, f"_staging_{uuid.uuid4().hex}")
-        new_files: list[str] = []
+        new_set = os.path.join(self.data_dir, f"set={uuid.uuid4().hex}")
         try:
             (
                 # one task, so one file, per bucket
@@ -840,122 +796,22 @@ class BucketedLog(Table):
                     if not f.startswith("part-"):
                         continue
                     stem, dot, ext = f.partition(".")
-                    dst = f"{stem}_{b:05d}{dot}{ext}"
+                    os.makedirs(new_set, exist_ok=True)
                     os.rename(
                         os.path.join(staging, d, f),
-                        os.path.join(self.data_dir, dst),
+                        os.path.join(new_set, f"{stem}_{b:05d}{dot}{ext}"),
                     )
-                    new_files.append(dst)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        return sorted(new_files)
-
-    def _commit(self, df, mode, partition_cols, metrics) -> int:
-        """Publish ``df``'s staged files; an overwrite replaces every
-        live file and then RETIRES them (not delete: rollback below
-        this commit must stay readable; expire_snapshots reclaims them
-        once unreferenced).  retries=1: a bucketed log is SINGLE-WRITER
-        by contract — the staged-rename scheme assumes no concurrent
-        writer is renaming files into data_dir, so a lost claim means
-        another writer exists and the commit must fail loudly."""
-        assert not partition_cols, "bucketed log: no dir partitions"
-        # the live files are retired only after the manifest claim
-        # succeeds: a crash in between leaves the current snapshot's
-        # files in place
-        replaced = self._data_files() if mode != "append" else set()
-        new_files = self._stage(df)
-        try:
-            v = self._publish(
-                metrics, new_files, df.schema, None,
-                {"__all__": self._set_rows(new_files)},
-                replaced=replaced, retries=1, overwrite=mode != "append",
-            )
-        except Exception:
-            # claim lost/failed: roll the renames back so the directory
-            # matches the (still-current) previous snapshot exactly
-            for f in new_files:
-                try:
-                    os.remove(os.path.join(self.data_dir, f))
-                except OSError:
-                    pass
-            raise
-        self._retire(replaced - set(new_files))
-        # register with the first commit, as a later read would: keeps
-        # the catalog DDL off the read path of the next round
-        self._register(df.schema)
-        return v
-
-    def read(self, version: int | None = None) -> DataFrame | None:
-        snap = self.snapshot(version)
-        if snap is None or not snap.file_sets:
-            return None
-        if set(snap.file_sets) != self._data_files():
-            # historical read (time travel): the file-list scan — correct
-            # rows, no bucket metadata (Iceberg keeps it; acceptable
-            # here).  Files replaced since ``version`` live in the
-            # retired dir.
-            return self._scan(snap)
-        # current state == snapshot → the BUCKETED catalog scan
-        # (groupBy/join on bucket_col runs without Exchange); a fresh
-        # session registers it from the manifest's schema
-        self._register(StructType.fromJson(snap.vintages[-1]["schema"]))
-        # REFRESH happens here, at read time — NOT at commit: a refresh
-        # invalidates every cached plan that scans this table, and a
-        # crawl round's parsed cache reads the frontier, so a
-        # post-append refresh silently forced later sinks to recompute
-        # the whole fetch+parse chain (measured 77 s/round at local[4]).
-        self.spark.sql(f"REFRESH TABLE {self.cat_name}")
-        return self.spark.table(self.cat_name)
-
-    def compact(self) -> int | None:
-        snap = self.snapshot()
-        if snap is None or len(snap.file_sets) <= self.n_buckets:
-            return None
-        # the staging write in _stage reads every replaced file before
-        # any new one is renamed in or an old one retired, so the log
-        # can be rewritten from its own scan; the repartition there
-        # re-aligns it to exactly one file per bucket
-        return self.overwrite(self.read(), metrics={"compaction": True})
+        return new_set if os.path.isdir(new_set) else None
 
     def rollback(self, version: int) -> None:
-        keep = set()
-        snap = self.snapshot(version) if version > 0 else None
-        if snap is not None:
-            keep = set(snap.file_sets)
-        # restore files the target snapshot references that a later
-        # overwrite/compaction retired (crash-resume across a rewrite:
-        # the checkpointed version must read again)
-        for f in keep:
-            live = os.path.join(self.data_dir, f)
-            retired = os.path.join(self.retired_dir, f)
-            if not os.path.exists(live) and os.path.exists(retired):
-                os.replace(retired, live)
-        for f in self._data_files() - keep:
-            os.remove(os.path.join(self.data_dir, f))
         # a writer killed inside _stage leaves its staging dir behind;
-        # rollback runs only from resume, and the log is single-writer
+        # rollback runs only from resume
         for d in os.listdir(self.dir):
             if d.startswith("_staging_"):
                 shutil.rmtree(os.path.join(self.dir, d), ignore_errors=True)
         super().rollback(version)
-        if self._registered:
-            self.spark.sql(f"REFRESH TABLE {self.cat_name}")
-
-    def expire_snapshots(
-        self, keep_last: int = 2, protect: tuple[int, ...] = ()
-    ) -> dict[str, int]:
-        out = super().expire_snapshots(keep_last, protect)
-        # reclaim retired files once no surviving manifest references
-        # them — the storage-leak backstop for the retention dir
-        if os.path.isdir(self.retired_dir):
-            live: set[str] = set()
-            for v in self.versions():
-                live.update(self.snapshot(v).file_sets)
-            for f in sorted(os.listdir(self.retired_dir)):
-                if f not in live:
-                    os.remove(os.path.join(self.retired_dir, f))
-                    out["file_sets_removed"] += 1
-        return out
 
 
 class Catalog:

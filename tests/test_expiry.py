@@ -118,21 +118,22 @@ def test_bucketed_expiry_trims_manifests_keeps_data(spark, tmp_path):
     log = cat.bucketed_log("log", "x", 4)
     log.append(spark.range(8).selectExpr("id AS x"))
     log.append(spark.range(8, 16).selectExpr("id AS x"))
+    replaced = log.snapshot().file_sets
     assert log.compact() is not None
-    # compaction RETIRES the replaced files (rollback below it must
-    # stay readable — round-4 crash-resume fix); expiry trims the
-    # pre-compaction manifests AND reclaims their now-unreferenced
-    # retired files
+    # compaction leaves the replaced commit dirs in place (rollback
+    # below it must stay readable); expiry trims the pre-compaction
+    # manifests AND removes the dirs no surviving manifest names
     import os as _os
 
-    n_retired = len(_os.listdir(log.retired_dir))
-    assert n_retired > 0
+    assert all(_os.path.isdir(d) for d in replaced)
     stats = log.expire_snapshots(keep_last=1)
     assert stats["snapshots_removed"] == 2
-    assert stats["file_sets_removed"] == n_retired
-    assert _os.listdir(log.retired_dir) == []
+    assert stats["file_sets_removed"] == len(replaced)
+    assert not [d for d in replaced if _os.path.exists(d)]
     assert log.versions() == [3]
-    assert set(log.snapshot().file_sets) == log._data_files()
+    assert sorted(
+        _os.path.join(log.data_dir, d) for d in _os.listdir(log.data_dir)
+    ) == log.snapshot().file_sets
     assert _rows(log.read()) == list(range(16))
 
 

@@ -161,12 +161,12 @@ def blog(spark, tmp_path):
     return lg
 
 
-def test_blog_registered_read_launches_no_job(spark, blog):
-    """A second read of a log registered in the catalog infers no
-    schema: it launches no Spark job."""
+def test_blog_read_launches_no_job(spark, blog):
+    """A second read of a log, its bucketed scan over the snapshot's
+    commit dirs, infers no schema: it launches no Spark job."""
     blog.read()
     sc = spark.sparkContext
-    sc.setJobGroup("blog-second-read", "read of a registered log")
+    sc.setJobGroup("blog-second-read", "second read of a log")
     try:
         df = blog.read()
     finally:
@@ -254,11 +254,14 @@ def test_blog_files_hold_their_buckets_rows(spark, tmp_path):
     finally:
         for k, v in prior.items():
             spark.conf.set(k, v)
-    files = sorted(log._data_files())
+    files = sorted(
+        os.path.join(d, f) for d in log.snapshot().file_sets
+        for f in os.listdir(d) if f.endswith(".parquet")
+    )
     assert len(files) > 1
     for f in files:
-        want = int(f.partition(".")[0].rsplit("_", 1)[1])
-        got = spark.read.parquet(os.path.join(log.data_dir, f)).select(
+        want = int(os.path.basename(f).partition(".")[0].rsplit("_", 1)[1])
+        got = spark.read.parquet(f).select(
             F.pmod(F.hash("k"), F.lit(n)).alias("b")).distinct().collect()
         assert {r["b"] for r in got} == {want}, f
     grouped = log.read().groupBy("k").agg(F.sum("n").alias("n")).collect()
@@ -325,14 +328,14 @@ def test_randomized_merge_delete_matches_model(spark, tmp_path):
 
 
 def test_blog_rewrites_keep_rollback_and_time_travel(spark, tmp_path):
-    """Crash-resume across a rewrite (round-4 fix): BucketedLog
-    overwrite/compaction RETIRE replaced files instead of deleting
-    them, so (a) a historical read below the rewrite still
-    works, (b) rollback to a checkpointed version restores the retired
-    files, and (c) expire_snapshots reclaims them once no surviving
-    manifest references them.  Before the fix, a crash between a
-    round's compaction and its checkpoint left resume pointing at
-    deleted files (PATH_NOT_FOUND) — reproduced directly."""
+    """Crash-resume across a rewrite: a BucketedLog compaction writes a
+    new commit dir and leaves the replaced ones in place, so (a) a
+    historical read below the rewrite still works, (b) rollback to a
+    checkpointed version reads its rows again, and (c)
+    expire_snapshots reclaims the replaced dirs once no surviving
+    manifest references them.  A crash between a round's compaction
+    and its checkpoint must not leave resume pointing at deleted
+    files (PATH_NOT_FOUND)."""
     log = BucketedLog(spark, str(tmp_path), "log", "k", 4)
     for i in range(3):
         log.append(spark.createDataFrame(
@@ -345,15 +348,97 @@ def test_blog_rewrites_keep_rollback_and_time_travel(spark, tmp_path):
     log.rollback(pre)
     assert log.read().count() == 30
     # (c) a fresh rewrite boundary lets expiry drop old manifests AND
-    # the retired files they referenced
+    # the commit dirs they referenced
+    replaced = set(log.snapshot().file_sets)
     log.compact()
-    import os as _os
-    retired = set(_os.listdir(log.retired_dir))
-    assert retired, "compaction should retire the replaced files"
+    assert all(os.path.isdir(d) for d in replaced)
     log.expire_snapshots(keep_last=1)
-    left = set(_os.listdir(log.retired_dir))
-    assert left < retired  # unreferenced retired files reclaimed
+    assert not [d for d in replaced if os.path.exists(d)]
+    assert sorted(os.path.join(log.data_dir, d)
+                  for d in os.listdir(log.data_dir)) == log.snapshot().file_sets
     assert log.read().count() == 30
+
+
+def test_blog_historical_read_joins_without_exchange(spark, tmp_path):
+    """A snapshot below a compaction reads as a bucketed scan like the
+    current one: its anti-join with another bucketed log on the bucket
+    column plans no Exchange, with broadcasts and AQE off."""
+    import re
+
+    a = BucketedLog(spark, str(tmp_path), "a", "k", 4)
+    b = BucketedLog(spark, str(tmp_path), "b", "k", 4)
+    for i in range(3):
+        a.append(spark.createDataFrame(
+            [(f"u{i}-{j}", i) for j in range(10)], "k string, r int"))
+    b.append(spark.createDataFrame(
+        [(f"u0-{j}",) for j in range(10)], "k string"))
+    pre = a.current_version()
+    a.compact()
+    conf = {"spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.enabled": "false"}
+    prior = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        df = a.read(pre).join(b.read(), "k", "left_anti")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        n = df.count()
+    finally:
+        for k, v in prior.items():
+            spark.conf.set(k, v)
+    assert plan.count("Bucketed: true") == 2, plan
+    assert not re.findall(r"\bExchange\b", plan), plan
+    assert n == 20
+
+
+def test_blog_cached_read_survives_reads_and_appends(spark, blog):
+    """Reading or appending to a log does not un-cache a frame cached
+    over an earlier read of it."""
+    df = blog.read().cache()
+    try:
+        assert df.count() == 64
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        assert cm.lookupCachedData(df._jdf).isDefined()
+        blog.read()
+        blog.append(spark.createDataFrame(
+            [("https://h9.leg.br/x", 1, "seen")],
+            "url string, n int, st string"))
+        assert cm.lookupCachedData(df._jdf).isDefined()
+        assert df.count() == 64 and blog.read().count() == 65
+    finally:
+        df.unpersist()
+
+
+def test_blog_empty_append_adds_no_set(spark, blog):
+    """An append of no rows commits a version that names no new commit
+    dir, so it leaves the read and the compaction trigger as they
+    were."""
+    before = blog.snapshot()
+    v = blog.append(spark.createDataFrame([], "url string, n int, st string"))
+    assert v == before.version + 1
+    assert blog.snapshot().file_sets == before.file_sets
+    assert sorted(os.listdir(blog.data_dir)) == sorted(
+        os.path.basename(d) for d in before.file_sets)
+    assert blog.read().count() == 64
+
+
+def test_blog_manifest_naming_files_is_refused(spark, tmp_path):
+    """A bucketed-log manifest whose sets are bare bucket-file names
+    (the layout before logs wrote commit dirs) is refused, naming the
+    table, instead of read from the wrong paths."""
+    import json
+
+    log = BucketedLog(spark, str(tmp_path), "old", "k", 4)
+    with open(os.path.join(log.snap_dir, "v00001.json"), "w") as f:
+        json.dump({"version": 1, "lineage": {"__all__": 1}, "metrics": {},
+                   "total_rows": 1, "vintages": [{
+                       "ops": 0, "partition_cols": [],
+                       "sets": ["part-00000-x_00001.parquet"],
+                       "schema": {"type": "struct", "fields": [
+                           {"name": "k", "type": "string",
+                            "nullable": True, "metadata": {}}]}}]}, f)
+    with pytest.raises(ValueError, match="table old: .*rebuild"):
+        log.read()
 
 
 def test_blog_rollback_removes_staging_dirs(spark, blog):

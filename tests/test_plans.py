@@ -230,16 +230,21 @@ def test_pending_exact_side_reads_bucketed_crawl_log(spark, tmp_path):
         w["seeds"], w["robots"],
         CrawlConfig(n_shards=4, fetch_partitions=4, salt_buckets=2),
     )
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
+    # no broadcasts; scan locations printed in full, so the log's scan
+    # is found by its data path
+    conf = {"spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.maxMetadataStringLength": "4096"}
+    prior = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     try:
         eng.bootstrap()
         for r in range(2):
             eng.round(r)
         text = _explain(eng.pending(), "simple")
     finally:
-        spark.conf.set(key, old)
+        for k, v in prior.items():
+            spark.conf.set(k, v)
 
     def indent(ln):
         return len(ln) - len(ln.lstrip(" :+-"))
@@ -247,7 +252,7 @@ def test_pending_exact_side_reads_bucketed_crawl_log(spark, tmp_path):
     lines = text.splitlines()
     scans = [
         i for i, ln in enumerate(lines)
-        if "FileScan" in ln and eng.crawl_log.cat_name in ln
+        if "FileScan" in ln and eng.crawl_log.data_dir + "/set=" in ln
     ]
     assert scans, text
     for i in scans:

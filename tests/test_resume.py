@@ -5,15 +5,17 @@ uninterrupted run's (SURVEY.md §5 test 3)."""
 from __future__ import annotations
 
 import collections
+import dataclasses
 import os
 import threading
 
 import pyspark.sql.functions as F
 import pytest
 
+from legislation_scraper_spark.plans import crawl
 from legislation_scraper_spark.plans.crawl import CrawlConfig, CrawlEngine
 from legislation_scraper_spark.synth import synth_world
-from legislation_scraper_spark.tables import Catalog
+from legislation_scraper_spark.tables import Catalog, Table
 
 CFG = CrawlConfig(n_shards=8, fetch_partitions=4)
 
@@ -67,10 +69,10 @@ def _codegen_classes(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def _mk_engine(spark, world, root):
+def _mk_engine(spark, world, root, cfg=CFG):
     return CrawlEngine(
         spark, Catalog(spark, root),
-        world["pages_raw"], world["seeds"], world["robots"], CFG,
+        world["pages_raw"], world["seeds"], world["robots"], cfg,
     )
 
 
@@ -123,11 +125,10 @@ def test_resume_equals_uninterrupted(spark, world, reference, tmp_path):
 
 
 def test_bucketed_overwrite_crash_safety(spark, tmp_path):
-    """BucketedLog.overwrite orders rename-in BEFORE delete-old (r3
-    ADVICE): a lost manifest claim rolls the renames back and leaves
-    the previous snapshot byte-identical; stray un-manifested files
-    (the crash-between-rename-and-claim window) are invisible to
-    read()."""
+    """A BucketedLog overwrite whose manifest claim is lost raises and
+    leaves reads equal to the previous snapshot; a stray commit dir or
+    bucket file no manifest names (the crash-between-write-and-claim
+    window) is invisible to read()."""
     import os
 
     from legislation_scraper_spark.tables import Catalog
@@ -138,7 +139,7 @@ def test_bucketed_overwrite_crash_safety(spark, tmp_path):
         F.col("id").cast("string").alias("k"), F.lit("v1").alias("val")
     )
     log.append(df1)
-    before_files = sorted(log._data_files())
+    before_sets = log.snapshot().file_sets
     before_rows = sorted(
         (r.k, r.val) for r in log.read().collect()
     )
@@ -147,7 +148,7 @@ def test_bucketed_overwrite_crash_safety(spark, tmp_path):
         F.col("id").cast("string").alias("k"), F.lit("v2").alias("val")
     )
 
-    # lost claim → overwrite must raise AND roll its renames back
+    # lost claim → overwrite must raise; the snapshot stays the prior one
     real_claim = log._claim_version
     log._claim_version = lambda *a, **kw: (_ for _ in ()).throw(
         RuntimeError("claim lost")
@@ -156,27 +157,33 @@ def test_bucketed_overwrite_crash_safety(spark, tmp_path):
         log.overwrite(df2)
     log._claim_version = real_claim
 
-    assert sorted(log._data_files()) == before_files, "renames not rolled back"
+    assert log.snapshot().file_sets == before_sets, "snapshot moved"
     assert sorted((r.k, r.val) for r in log.read().collect()) == before_rows
 
-    # crash window: files renamed in, claim never happened — simulate
-    # by dropping a stray parquet into data_dir; read() must ignore it
-    stray = os.path.join(log.data_dir, "part-99999-deadbeef_00001.parquet")
+    # crash window: a commit dir written, claim never happened, and a
+    # stray bucket file in data_dir; read() must ignore both
     df2.limit(1).write.mode("overwrite").parquet(str(tmp_path / "stray"))
     src = next(
         f for f in os.listdir(str(tmp_path / "stray"))
         if f.startswith("part-")
     )
-    os.rename(str(tmp_path / "stray" / src), stray)
+    stray_set = os.path.join(log.data_dir, "set=deadbeef")
+    stray = os.path.join(log.data_dir, "part-99999-deadbeef_00001.parquet")
+    os.makedirs(stray_set)
+    os.link(str(tmp_path / "stray" / src), os.path.join(
+        stray_set, "part-99999-deadbeef_00001.parquet"))
+    os.link(str(tmp_path / "stray" / src), stray)
     assert sorted((r.k, r.val) for r in log.read().collect()) == before_rows
-    os.remove(stray)
 
-    # successful overwrite replaces content and prunes replaced files
+    # successful overwrite replaces content; expiry prunes replaced dirs
     log.overwrite(df2)
     assert sorted((r.k, r.val) for r in log.read().collect()) == sorted(
         (str(i), "v2") for i in range(50)
     )
-    assert not (set(before_files) & log._data_files()), "old files not pruned"
+    log.expire_snapshots(keep_last=1)
+    assert not [d for d in before_sets if os.path.exists(d)], \
+        "old dirs not pruned"
+    assert not os.path.exists(stray_set) and not os.path.exists(stray)
 
 
 # --- crash anywhere in a round, then resume -----------------------------
@@ -225,7 +232,27 @@ def _arm_crash(monkeypatch, eng, point):
       committing (they wait for it, so the torn state is exactly one
       table);
     - ``"before_checkpoint"``: every sink commits, the checkpoint is
-      never written."""
+      never written;
+    - ``"compact"``: the round-start compaction of ``frontier_log``
+      commits, then the round dies;
+    - ``"compact_filters"``: ``SeenSet.compact_filters`` commits its
+      folded bitmaps, then dies before returning;
+    - ``"expire_all"``: ``Catalog.expire_all`` trims the checkpoints
+      and expires its first table, then dies."""
+    maintenance = {
+        "compact": (eng.frontier, "compact"),
+        "compact_filters": (eng.seen.filters_table, "overwrite"),
+        "expire_all": (Table, "expire_snapshots"),
+    }
+    if point in maintenance:
+        owner, attr = maintenance[point]
+
+        def commit_then_crash(*a, _real=getattr(owner, attr), **kw):
+            _real(*a, **kw)
+            raise _Crash(point)
+
+        monkeypatch.setattr(owner, attr, commit_then_crash)
+        return
     if point == "before_checkpoint":
         def save_checkpoint(*a, **kw):
             raise _Crash(point)
@@ -386,3 +413,57 @@ def test_crash_anywhere_then_resume_equals_uninterrupted(
             assert _rows_at(eng, tag, name, cols) == want[name], (point, name)
         # un-finish the round so the next point crashes it again
         os.remove(os.path.join(eng.catalog.ckpt_dir, f"c{tag:06d}.json"))
+
+
+def test_crash_in_maintenance_then_resume_equals_uninterrupted(
+    spark, world, reference, tmp_path, monkeypatch
+):
+    """Round 2 crashes inside its round-start maintenance: after the
+    compaction of a bucketed log commits, inside the Bloom filter fold,
+    and inside snapshot expiry.  Each time resume() rolls back to
+    checkpoint 2 by dropping manifests alone (no file moves back), and
+    redoing the round gives the tables of the same crawl run straight
+    through, whose rows equal the reference crawl's (maintenance
+    changes no row; the folded filter log is compared to the straight
+    run's).  Compaction here fires at more than one commit set."""
+    ref, _ = reference
+    monkeypatch.setattr(crawl, "MAX_SETS", 1)
+    cfg = dataclasses.replace(CFG, expire_every_rounds=2,
+                              expire_keep_snapshots=1)
+    root = str(tmp_path / "store")
+    eng = _mk_engine(spark, world, root, cfg)
+    eng.bootstrap()
+    for r in range(3):
+        eng.round(r)
+    # round 2 rewrote every commit set checkpoint 2 named in each log
+    for name in ("frontier_log", "crawl_log", "seen_filters"):
+        t = eng.catalog.table(name)
+        v2, v3 = (eng.catalog.load_checkpoint(c)["versions"][name]
+                  for c in (2, 3))
+        assert not set(t.snapshot(v2).file_sets) & set(
+            t.snapshot(v3).file_sets), name
+    want = {name: _rows_at(eng, 3, name, cols) for name, cols in COMPARED}
+    for name, cols in COMPARED:
+        if name != "seen_filters":
+            assert want[name] == _rows_at(ref, 3, name, cols), name
+    for point in ("compact", "compact_filters", "expire_all"):
+        # un-finish round 2 so this point crashes it again
+        os.remove(os.path.join(eng.catalog.ckpt_dir, f"c{3:06d}.json"))
+        crashed = _mk_engine(spark, world, root, cfg)
+        assert crashed.resume() == 2, point
+        with pytest.MonkeyPatch.context() as mp:
+            _arm_crash(mp, crashed, point)
+            with pytest.raises(_Crash):
+                crashed.round(2)
+        eng = _mk_engine(spark, world, root, cfg)
+        assert eng.resume() == 2, point
+        eng.round(2)
+        for name, cols in COMPARED:
+            assert _rows_at(eng, 3, name, cols) == want[name], (point, name)
+
+
+def test_crawl_registers_no_catalog_table(spark, reference):
+    """The bucketed logs are read from their manifests alone: a crawl
+    leaves no table in the session catalog."""
+    assert not [t.name for t in spark.catalog.listTables()
+                if t.name.startswith("lss_")]
