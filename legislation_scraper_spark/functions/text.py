@@ -17,6 +17,8 @@ token counting, document fingerprinting.
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -412,6 +414,19 @@ def ascii_slug(text: Column) -> Column:
     t = F.lower(ascii_fold(text))
     t = F.regexp_replace(t, r"[^a-z0-9]+", "_")
     return F.regexp_replace(t, r"^_+|_+$", "")
+
+
+@functools.cache
+def slug_of(name: str) -> Column:
+    """:func:`ascii_slug` of the column ``name``, built once per process.
+
+    Memoized because the fold's replace chain (one ``F.replace`` per
+    multi-character expansion, ~70) costs ~650 py4j round trips, about
+    60 ms, each time it is built, and the crawl round slugs two columns
+    every round.  A Column is an unresolved expression tree that
+    belongs to no DataFrame and no session, so one tree serves every
+    plan."""
+    return ascii_slug(F.col(name))
 
 
 def fingerprint(text: Column) -> Column:

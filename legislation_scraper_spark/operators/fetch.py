@@ -29,6 +29,7 @@ unchanged.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import time
 from dataclasses import dataclass
@@ -40,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-@dataclass
+@dataclass(frozen=True)
 class FetchPolicy:
     max_retries: int = 5
     base_delay_s: float = 0.0  # exp backoff base; 0 disables sleeping
@@ -84,21 +85,33 @@ def resolve_against_web(selected: DataFrame, pages_raw: DataFrame) -> DataFrame:
     for a shuffle-free co-located join; the broadcast form is right
     whenever one round's selection fits the broadcast threshold.
     """
+    web_cols, miss_cols = _resolve_columns()
     sel = F.broadcast(selected)
-    web = pages_raw.select(
-        F.col("url").alias("canon_url"),
-        F.col("html").alias("body"),
-        F.col("warc_ts"),
+    hits = pages_raw.select(*web_cols).join(sel, "canon_url", "inner")
+    misses = selected.join(
+        F.broadcast(hits.select("canon_url")), "canon_url", "left_anti"
+    ).withColumns(miss_cols)
+    # both sides carry the same columns; unionByName aligns them
+    return hits.unionByName(misses)
+
+
+@functools.cache
+def _resolve_columns() -> tuple[tuple, dict]:
+    """The web-side projection and the miss path's NULL body columns of
+    :func:`resolve_against_web`.  Memoized: a Column is an unresolved
+    expression tree bound to no DataFrame, so the crawl round reuses
+    these instead of rebuilding them a py4j call per node."""
+    return (
+        (
+            F.col("url").alias("canon_url"),
+            F.col("html").alias("body"),
+            F.col("warc_ts"),
+        ),
+        {
+            "body": F.lit(None).cast("binary"),
+            "warc_ts": F.lit(None).cast("timestamp"),
+        },
     )
-    hits = web.join(sel, "canon_url", "inner")
-    misses = (
-        selected.join(
-            F.broadcast(hits.select("canon_url")), "canon_url", "left_anti"
-        )
-        .withColumn("body", F.lit(None).cast("binary"))
-        .withColumn("warc_ts", F.lit(None).cast("timestamp"))
-    )
-    return hits.unionByName(misses.select(*hits.columns))
 
 
 _FETCH_EXTRA = (
@@ -154,7 +167,17 @@ def simulate_transport(resolved: DataFrame, policy: FetchPolicy) -> DataFrame:
 
 def transport_columns(resolved: DataFrame, policy: FetchPolicy) -> DataFrame:
     """JVM-expression twin of :func:`simulate_transport` (identical
-    outcomes; verified by tests/test_fetch.py).
+    outcomes; verified by tests/test_fetch.py): the columns of
+    :func:`_transport_exprs`, added in one projection."""
+    return resolved.withColumns(_transport_exprs(policy))
+
+
+@functools.cache
+def _transport_exprs(policy: FetchPolicy) -> dict:
+    """``status``, ``attempts``, ``fetched`` and ``fetch_error`` of a
+    resolved row under ``policy``.  Memoized on the (frozen) policy: a
+    Column belongs to no DataFrame, and the crawl round would otherwise
+    rebuild these expressions every round, a py4j round trip per node.
 
     Keeps the page body OUT of the Python boundary — at bench scale the
     extra Arrow round-trip of raw html through the transport UDF tripled
@@ -172,29 +195,20 @@ def transport_columns(resolved: DataFrame, policy: FetchPolicy) -> DataFrame:
     transient = (h % p.transient_mod == 0) & has_body
     permanent = (h % p.permanent_mod == 3) & has_body
     fetched = has_body & ~permanent
-    return (
-        resolved.withColumn(
-            "status",
-            F.when(~has_body, 404)
-            .when(permanent, 503)
-            .otherwise(200)
-            .cast("int"),
-        )
-        .withColumn(
-            "attempts",
-            F.when(permanent, p.max_retries)
-            .when(transient, 2)
-            .otherwise(1)
-            .cast("int"),
-        )
-        .withColumn("fetched", fetched)
-        .withColumn(
-            "fetch_error",
-            F.when(fetched, F.lit(None).cast("string"))
-            .when(has_body, F.lit("503 server error (retries exhausted)"))
-            .otherwise(F.lit("404 not found")),
-        )
-    )
+    return {
+        "status": F.when(~has_body, 404)
+        .when(permanent, 503)
+        .otherwise(200)
+        .cast("int"),
+        "attempts": F.when(permanent, p.max_retries)
+        .when(transient, 2)
+        .otherwise(1)
+        .cast("int"),
+        "fetched": fetched,
+        "fetch_error": F.when(fetched, F.lit(None).cast("string"))
+        .when(has_body, F.lit("503 server error (retries exhausted)"))
+        .otherwise(F.lit("404 not found")),
+    }
 
 
 def fetch(

@@ -23,9 +23,12 @@ Spark-first equivalents:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import functools
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import cols
 from ..functions.urls import salted_host
 
 ORDER_COLS = ("priority", "discovered_round", "canon_url")
@@ -45,11 +48,23 @@ def apply_robots(
     a 60 s round no matter how many parallel slots exist (the reference
     analogue is its 5 s inter-request sleeps, parana.py:457-459).
     """
-    r = robots.select("host", "allow", "crawl_delay_ms", "max_parallel")
+    robot_cols, allowed, budget = _robots_columns(round_window_ms)
     out = (
-        candidates.join(F.broadcast(r), "host", "left")
-        .filter(F.coalesce(F.col("allow"), F.lit(True)))
+        candidates.join(F.broadcast(robots.select(*robot_cols)), "host", "left")
+        .filter(allowed)
     )
+    keep = tuple(c for c in out.columns if c not in ("allow", "max_parallel"))
+    return out.select(*cols(keep), budget)
+
+
+@functools.cache
+def _robots_columns(
+    round_window_ms: int | None,
+) -> tuple[tuple[Column, ...], Column, Column]:
+    """The robots projection, the allow test and the ``budget`` column of
+    :func:`apply_robots`.  Memoized: a Column is an unresolved
+    expression tree bound to no DataFrame, so every crawl round reuses
+    these instead of rebuilding them, a py4j round trip per node."""
     budget = F.coalesce(F.col("max_parallel"), F.lit(4))
     if round_window_ms is not None:
         delay_cap = F.greatest(
@@ -60,15 +75,33 @@ def apply_robots(
             ).cast("int"),
         )
         budget = F.least(budget, delay_cap)
-    return out.withColumn("budget", budget).drop("allow", "max_parallel")
+    return (
+        cols(("host", "allow", "crawl_delay_ms", "max_parallel")),
+        F.coalesce(F.col("allow"), F.lit(True)),
+        budget.alias("budget"),
+    )
+
+
+@functools.cache
+def _salted_key(salt_buckets: int) -> Column:
+    """The fetch stage's salted host key (memoized, as
+    :func:`_robots_columns`)."""
+    return salted_host(F.col("host"), F.col("canon_url"), salt_buckets)
+
+
+@functools.cache
+def _rank_columns() -> tuple[Column, Column]:
+    """The per-host rank by (priority, discovery, url) and the budget
+    test on it (memoized, as :func:`_robots_columns`)."""
+    w = Window.partitionBy("host").orderBy(
+        *[F.asc(c) for c in ORDER_COLS]
+    )
+    return F.row_number().over(w), F.col("host_rank") <= F.col("budget")
 
 
 def rank_per_host(candidates: DataFrame) -> DataFrame:
     """Deterministic per-host ranking by (priority, discovery, url)."""
-    w = Window.partitionBy("host").orderBy(
-        *[F.asc(c) for c in ORDER_COLS]
-    )
-    return candidates.withColumn("host_rank", F.row_number().over(w))
+    return candidates.withColumn("host_rank", _rank_columns()[0])
 
 
 def rank_per_host_range(
@@ -137,7 +170,7 @@ def rank_per_host_range(
 
 def select_budget(ranked: DataFrame) -> DataFrame:
     """Keep at most `budget` URLs per host this round."""
-    return ranked.filter(F.col("host_rank") <= F.col("budget"))
+    return ranked.filter(_rank_columns()[1])
 
 
 def schedule_round(
@@ -181,7 +214,7 @@ def schedule_round(
         else rank_per_host(gated)
     )
     sel = select_budget(ranked)
-    key = salted_host(F.col("host"), F.col("canon_url"), salt_buckets)
+    key = _salted_key(salt_buckets)
     if fetch_partitions:
         return sel.repartition(fetch_partitions, key)
     return sel.repartition(key)

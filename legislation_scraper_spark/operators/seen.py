@@ -36,6 +36,7 @@ candidate batch are shuffled to the probe side.
 
 from __future__ import annotations
 
+import functools
 import math
 from dataclasses import dataclass
 
@@ -48,20 +49,36 @@ from ..functions.urls import canonicalize_url, url_hash
 FILTER_FILE_BYTES = 128 << 20
 
 
+# Memoized column builders (functools.cache, keyed on their hashable
+# parameters): a Column is an unresolved expression tree that belongs to
+# no DataFrame and no session, so one built once serves every round.
+# Building it again costs a py4j round trip per node, and the crawl
+# round is mostly such fixed driver cost.
+
+
+@functools.cache
+def url_key_columns(url_col: str, n_shards: int) -> dict[str, Column]:
+    """``canon_url``, ``url_hash`` and ``shard`` of ``url_col``; the
+    shard is computed from the hash expression, so the three columns
+    are added in one projection."""
+    c = F.col(url_col)
+    h = url_hash(c)
+    return {
+        "canon_url": canonicalize_url(c),
+        "url_hash": h,
+        "shard": F.pmod(h, F.lit(n_shards)).cast("int"),
+    }
+
+
 def with_url_key(df: DataFrame, url_col: str = "url", n_shards: int = 64) -> DataFrame:
     """Attach canonical url, 64-bit key, and shard columns."""
-    c = F.col(url_col)
-    return (
-        df.withColumn("canon_url", canonicalize_url(c))
-        .withColumn("url_hash", url_hash(c))
-        .withColumn("shard", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int"))
-    )
+    return df.withColumns(url_key_columns(url_col, n_shards))
 
 
 # --- Bloom bitmaps: array<bigint> words, bit p in word p >> 6 at p & 63 ----
 
 
-@dataclass
+@dataclass(frozen=True)
 class BloomParams:
     m_bits: int
     k: int
@@ -78,11 +95,13 @@ class BloomParams:
         return (self.m_bits + 63) // 64
 
 
-def _positions(url_hash: Column, params: BloomParams) -> Column:
-    """The key's k bit positions h1 + i*h2 mod m (Kirsch-Mitzenmacher).
-    h1 and h2 are below m, so the sum fits a long (ANSI mode throws on
-    overflow); both rehash the key, whose residue mod n_shards is fixed
-    within a shard."""
+@functools.cache
+def _positions(params: BloomParams) -> Column:
+    """The k bit positions h1 + i*h2 mod m (Kirsch-Mitzenmacher) of the
+    ``url_hash`` column.  h1 and h2 are below m, so the sum fits a long
+    (ANSI mode throws on overflow); both rehash the key, whose residue
+    mod n_shards is fixed within a shard.  Memoized (see above)."""
+    url_hash = F.col("url_hash")
     m = F.lit(params.m_bits)
     h1 = F.pmod(F.xxhash64(url_hash), m)
     h2 = F.pmod(F.xxhash64(url_hash, F.lit(1)), m - 1) + 1
@@ -116,6 +135,39 @@ def _densify(entries: Column, n_words: int) -> Column:
     )
 
 
+@functools.cache
+def _build_columns(params: BloomParams) -> dict[str, tuple[Column, ...]]:
+    """The projections and aggregates of :func:`build_bloom_shards`, by
+    step.  Memoized (see above): with the probe's, the bit-position and
+    densify lambdas were ~280 py4j commands a round, and the round
+    builds its filter delta on the sink thread that finished last."""
+    return {
+        "pos": (
+            F.col("shard"),
+            F.explode(_positions(params)).alias("pos"),
+        ),
+        "word_keys": (
+            F.col("shard"), F.shiftright("pos", 6).cast("int").alias("word"),
+        ),
+        "word_aggs": (
+            F.bit_or(_bit(F.col("pos"))).alias("bits"),
+            F.count("*").alias("n"),
+        ),
+        "shard_aggs": (
+            F.array_sort(F.collect_list(F.struct("word", "bits"))).alias("e"),
+            # every key sets exactly k positions
+            (F.sum("n") / params.k).cast("long").alias("n_keys"),
+        ),
+        # a column, not the expression: the densify lambda reads it per
+        # entry, and an expression would be re-evaluated each time
+        "out": (
+            F.col("shard"),
+            _densify(F.col("e"), params.n_words).alias("bitmap"),
+            F.col("n_keys"),
+        ),
+    }
+
+
 def build_bloom_shards(
     seen: DataFrame, params: BloomParams, n_shards: int = 64
 ) -> DataFrame:
@@ -125,27 +177,37 @@ def build_bloom_shards(
     ``seen`` must carry ``shard`` and ``url_hash`` (see with_url_key).
     ``n_keys`` counts rows, duplicates included.
     """
+    c = _build_columns(params)
     # one shuffle: clustering by shard also serves the (shard, word) agg
-    pos = seen.repartition("shard").select(
-        "shard", F.explode(_positions(F.col("url_hash"), params)).alias("pos")
-    )
-    words = pos.groupBy(
-        "shard", F.shiftright("pos", 6).cast("int").alias("word")
-    ).agg(F.bit_or(_bit(F.col("pos"))).alias("bits"), F.count("*").alias("n"))
+    pos = seen.repartition("shard").select(*c["pos"])
+    words = pos.groupBy(*c["word_keys"]).agg(*c["word_aggs"])
+    return words.groupBy("shard").agg(*c["shard_aggs"]).select(*c["out"])
+
+
+@functools.cache
+def _maybe_seen(params: BloomParams) -> Column:
+    """Whether all k bits of the row's key are set in its shard's
+    ``bitmap``; False when the shard has no bitmap.  Memoized (see
+    above)."""
+    def is_set(pos: Column) -> Column:
+        word = F.element_at("bitmap", F.shiftright(pos, 6).cast("int") + 1)
+        return word.bitwiseAND(_bit(pos)) != 0
+
+    return F.coalesce(F.forall(_positions(params), is_set), F.lit(False))
+
+
+@functools.cache
+def _or_merge(n_words: int) -> tuple[Column, ...]:
+    """The aggregates that fold a shard's delta bitmaps (all
+    ``n_words`` long) into one by bitwise OR.  Memoized (see above)."""
+    zero = F.array_repeat(F.lit(0).cast("long"), n_words)
     return (
-        words.groupBy("shard")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("word", "bits"))).alias("e"),
-            # every key sets exactly k positions
-            (F.sum("n") / params.k).cast("long").alias("n_keys"),
-        )
-        # a column, not the expression: the densify lambda reads it per
-        # entry, and an expression would be re-evaluated each time
-        .select(
-            "shard",
-            _densify(F.col("e"), params.n_words).alias("bitmap"),
-            "n_keys",
-        )
+        F.aggregate(
+            F.collect_list("bitmap"),
+            zero,
+            lambda acc, b: F.zip_with(acc, b, lambda x, y: x.bitwiseOR(y)),
+        ).alias("bitmap"),
+        F.sum("n_keys").alias("n_keys"),
     )
 
 
@@ -160,19 +222,9 @@ def bloom_probe(
     small and few) and tests its k bits: O(k) word lookups per row.  A
     shard without a bitmap has seen nothing.
     """
-    def is_set(pos: Column) -> Column:
-        word = F.element_at("bitmap", F.shiftright(pos, 6).cast("int") + 1)
-        return word.bitwiseAND(_bit(pos)) != 0
-
     return (
         candidates.join(F.broadcast(bloom_shards), "shard", "left")
-        .withColumn(
-            "maybe_seen",
-            F.coalesce(
-                F.forall(_positions(F.col("url_hash"), params), is_set),
-                F.lit(False),
-            ),
-        )
+        .withColumn("maybe_seen", _maybe_seen(params))
         .drop("bitmap", "n_keys")
     )
 
@@ -263,16 +315,8 @@ class SeenSet:
         if log is None:
             return None
 
-        zero = F.array_repeat(F.lit(0).cast("long"), self._params().n_words)
-        return log.groupBy("shard").agg(
-            # fixed params ⇒ every delta of a shard has the same length
-            F.aggregate(
-                F.collect_list("bitmap"),
-                zero,
-                lambda acc, b: F.zip_with(acc, b, lambda x, y: x.bitwiseOR(y)),
-            ).alias("bitmap"),
-            F.sum("n_keys").alias("n_keys"),
-        )
+        # fixed params ⇒ every delta of a shard has the same length
+        return log.groupBy("shard").agg(*_or_merge(self._params().n_words))
 
     def compact_filters(self) -> None:
         """Fold the delta log to one row per shard (maintenance)."""

@@ -54,12 +54,14 @@ test_seen_set_matches_simulator).
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import ascii_slug
+from ..functions import cols
+from ..functions.text import slug_of
 from ..functions.urls import url_host
 from ..operators import politeness
 from ..operators.extract import PARSE_ERROR, make_parse_page
@@ -114,16 +116,133 @@ def _build_cached(spark: SparkSession, *dfs: DataFrame | None) -> None:
             builder.cachedColumnBuffers()
 
 
-def _first_per_url(df: DataFrame, *order) -> DataFrame:
+@functools.cache
+def _first_per_url_columns(order: tuple[str, ...]) -> tuple[Column, tuple]:
+    """The aggregate and the projection of :func:`_first_per_url`
+    (memoized, as :func:`_round_columns`)."""
+    rest = [c for c in FRONTIER_COLS if c != "canon_url"]
+    best = F.min(F.struct(F.struct(*order).alias("o"), *rest)).alias("b")
+    row = tuple(
+        F.col(c) if c == "canon_url" else F.col(f"b.{c}").alias(c)
+        for c in FRONTIER_COLS
+    )
+    return best, row
+
+
+def _first_per_url(df: DataFrame, *order: str) -> DataFrame:
     """One frontier row per ``canon_url``: the one whose ``order``
     columns sort first."""
-    rest = [c for c in FRONTIER_COLS if c != "canon_url"]
+    best, row = _first_per_url_columns(order)
+    return df.groupBy("canon_url").agg(best).select(*row)
+
+
+@functools.cache
+def _parse_columns(search_marker: str, sc) -> tuple[Column, Column]:
+    """The body's digest and the parse UDF's output, the first step of
+    ``parsed``.  Memoized as :func:`_round_columns`, but per
+    SparkContext ``sc`` as well: the UDF's JVM function carries its
+    context's Python accumulator, whose server a stopped context shuts
+    down (a task of the next context then fails to report to it)."""
+    fetched = F.col("fetched")
+    # ONE pass over the fetch output: a single combined parse UDF
+    # (docs + search pages) so the body bytes cross the Python
+    # boundary exactly once per round
+    parse_page = make_parse_page(search_marker)
     return (
-        df.groupBy("canon_url")
-        .agg(F.min(F.struct(F.struct(*order).alias("o"), *rest)).alias("b"))
-        .select("canon_url", "b.*")
-        .select(*FRONTIER_COLS)
+        # the validators of a fetched body (url_state's view): its
+        # digest, taken in the pass that parses it
+        F.when(fetched, F.md5(F.col("body"))).alias("digest"),
+        F.when(fetched, parse_page("canon_url", "body")).alias("p"),
     )
+
+
+@functools.cache
+def _round_columns(search_marker: str) -> dict[str, Column | tuple]:
+    """Every column of a round's plans that depends only on
+    configuration, by use: the outcome columns of ``parsed``, the
+    round's counts, and the page, link, frontier and log projections
+    (the parse UDF is :func:`_parse_columns`).  A round adds only its
+    ``F.lit(r)``.
+
+    Memoized per process (``functools.cache``): a Column is an
+    unresolved expression tree that belongs to no DataFrame and no
+    session, so the same tree serves every round's fresh plans, while
+    building it again costs a py4j round trip per node (the two page
+    slugs alone were ~1,300 a round).  ``SparkContext.stop()`` keeps
+    the py4j gateway, so the trees outlive a session that a process
+    stops and starts again."""
+    is_search = F.col("canon_url").contains(search_marker)
+    # each attempt's outcome, stated once for the counts and every
+    # sink: a fetched document whose record is missing or an error
+    # is a parse error, every other fetched document a page
+    doc_ok = ~F.coalesce(F.col("p.rec.is_error"), F.lit(True))
+    fetched = F.col("fetched")
+    return {
+        "outcome": (
+            F.col("digest"),
+            F.col("p.rec").alias("rec"),
+            F.col("p.l").alias("l"),
+            (fetched & ~is_search & doc_ok).alias("is_page"),
+            F.when(~fetched, F.col("fetch_error"))
+            .when(~is_search & ~doc_ok, F.lit(PARSE_ERROR))
+            .alias("error"),
+        ),
+        # one aggregation pass for every round metric (vs one job each)
+        "counts": (
+            F.count("*").alias("n_sel"),
+            F.sum(fetched.cast("long")).alias("n_fetched"),
+            F.sum(F.col("is_page").cast("long")).alias("n_pages"),
+            F.count("error").alias("n_err"),
+        ),
+        "is_page": F.col("is_page"),
+        # the pages projection around its fetched_round; the ASCII
+        # partition twins (saver.py:119-125 parity; non-ASCII partition
+        # dirs break on non-UTF-8 JVM file encodings) follow it
+        "page": (
+            F.col("canon_url").alias("document_url"),
+            F.col("source"),
+            F.col("rec.title").alias("title"),
+            F.col("rec.year").alias("year"),
+            F.col("rec.type").alias("type"),
+            F.col("rec.situation").alias("situation"),
+            F.col("rec.summary").alias("summary"),
+            F.col("rec.text").alias("text_markdown"),
+            # J2 enrichment payload (ficha metadata arrays + overflow map)
+            F.col("rec.themes").alias("themes"),
+            F.col("rec.keywords").alias("keywords"),
+            F.col("rec.extras").alias("extras"),
+        ),
+        "page_slugs": (
+            slug_of("rec.type").alias("type_slug"),
+            slug_of("rec.situation").alias("situation_slug"),
+        ),
+        "is_link_page": fetched & is_search,
+        "links": (
+            *map(F.col, ("host", "host_rank", "source", "priority", "depth")),
+            F.posexplode(
+                F.concat(
+                    F.col("l.doc_links"),
+                    F.when(
+                        F.col("l.next_link").isNotNull(),
+                        F.array(F.col("l.next_link")),
+                    ).otherwise(F.array().cast("array<string>")),
+                )
+            ).alias("pos", "url"),
+        ),
+        # the new frontier rows around their discovered_round
+        "front": (
+            F.col("url"),
+            # the CHILD's own host, not the linking page's — a
+            # cross-host link scheduled under the parent's host would
+            # evade the target host's politeness budget (links.host
+            # stays the parent host for the src side of host_edges)
+            url_host(F.col("url")).alias("host"),
+            F.col("source"),
+            F.col("priority"),
+            (F.col("depth") + 1).alias("depth"),
+        ),
+        "found": F.struct(F.col("host"), "host_rank", "pos").alias("found"),
+    }
 
 
 @dataclass
@@ -719,40 +838,20 @@ class CrawlEngine:
             raw = fetch(
                 selected, self.pages_raw, self.cfg.policy, self.cfg.transport
             )
-            is_search = F.col("canon_url").contains(self.cfg.search_marker)
-            # ONE pass over the fetch output: a single combined parse UDF
-            # (docs + search pages) so the body bytes cross the Python
-            # boundary exactly once per round; cache WITHOUT the body —
+            # the round's config-only columns, built once per process
+            c = _round_columns(self.cfg.search_marker)
+            parse = _parse_columns(
+                self.cfg.search_marker, self.spark.sparkContext
+            )
+            # parsed once (see _parse_columns); cache WITHOUT the body —
             # the cached working set is metadata + text, not raw html.
-            parse_page = make_parse_page(self.cfg.search_marker)
-            # each attempt's outcome, stated once for the counts and every
-            # sink: a fetched document whose record is missing or an error
-            # is a parse error, every other fetched document a page
-            doc_ok = ~F.coalesce(F.col("p.rec.is_error"), F.lit(True))
-            parsed = raw.select(
-                *[c for c in raw.columns if c != "body"],
-                # the validators of a fetched body (url_state's view):
-                # its digest, taken in the pass that parses it
-                F.when(F.col("fetched"), F.md5(F.col("body"))).alias(
-                    "digest"
-                ),
-                F.when(
-                    F.col("fetched"), parse_page("canon_url", "body")
-                ).alias("p"),
-            ).select(
-                "*", F.col("p.rec").alias("rec"), F.col("p.l").alias("l"),
-                (F.col("fetched") & ~is_search & doc_ok).alias("is_page"),
-                F.when(~F.col("fetched"), F.col("fetch_error"))
-                .when(~is_search & ~doc_ok, F.lit(PARSE_ERROR))
-                .alias("error"),
-            ).drop("p").cache()
-            # one aggregation pass for every round metric (vs one job each)
-            counts = parsed.agg(
-                F.count("*").alias("n_sel"),
-                F.sum(F.col("fetched").cast("long")).alias("n_fetched"),
-                F.sum(F.col("is_page").cast("long")).alias("n_pages"),
-                F.count("error").alias("n_err"),
-            ).collect()[0]
+            keep = cols(tuple(n for n in raw.columns if n != "body"))
+            parsed = (
+                raw.select(*keep, *parse)
+                .select(*keep, *c["outcome"])
+                .cache()
+            )
+            counts = parsed.agg(*c["counts"]).collect()[0]
             n_sel = counts["n_sel"]
             t = _mark("schedule_fetch", t)
             if n_sel == 0:
@@ -761,42 +860,12 @@ class CrawlEngine:
             n_err = int(counts["n_err"])
 
             # --- extracted documents → pages ---
-            pages_df = parsed.filter(F.col("is_page")).select(
-                F.col("canon_url").alias("document_url"),
-                "source",
-                F.col("rec.title").alias("title"),
-                F.col("rec.year").alias("year"),
-                F.col("rec.type").alias("type"),
-                F.col("rec.situation").alias("situation"),
-                F.col("rec.summary").alias("summary"),
-                F.col("rec.text").alias("text_markdown"),
-                # J2 enrichment payload (ficha metadata arrays + overflow map)
-                F.col("rec.themes").alias("themes"),
-                F.col("rec.keywords").alias("keywords"),
-                F.col("rec.extras").alias("extras"),
-                F.lit(r).alias("fetched_round"),
-            ).withColumns(
-                {
-                    # ASCII partition twins (saver.py:119-125 parity; non-ASCII
-                    # partition dirs break on non-UTF-8 JVM file encodings)
-                    "type_slug": ascii_slug(F.col("type")),
-                    "situation_slug": ascii_slug(F.col("situation")),
-                }
+            pages_df = parsed.filter(c["is_page"]).select(
+                *c["page"], F.lit(r).alias("fetched_round"), *c["page_slugs"]
             )
             t = _mark("extract", t)
 
-            links = parsed.filter(F.col("fetched") & is_search).select(
-                "host", "host_rank", "source", "priority", "depth",
-                F.posexplode(
-                    F.concat(
-                        F.col("l.doc_links"),
-                        F.when(
-                            F.col("l.next_link").isNotNull(),
-                            F.array(F.col("l.next_link")),
-                        ).otherwise(F.array().cast("array<string>")),
-                    )
-                ).alias("pos", "url"),
-            )
+            links = parsed.filter(c["is_link_page"]).select(*c["links"])
             if self.cfg.scope_rules:
                 from ..sources.cdx import scope_filter
 
@@ -823,19 +892,9 @@ class CrawlEngine:
             new_front = _first_per_url(
                 with_url_key(
                     links.select(
-                        "url",
-                        # the CHILD's own host, not the linking page's — a
-                        # cross-host link scheduled under the parent's host
-                        # would evade the target host's politeness budget
-                        # (links.host stays the parent host for the src side
-                        # of host_edges below)
-                        url_host(F.col("url")).alias("host"),
-                        "source", "priority",
-                        (F.col("depth") + 1).alias("depth"),
+                        *c["front"],
                         F.lit(r + 1).alias("discovered_round"),
-                        F.struct(F.col("host"), "host_rank", "pos").alias(
-                            "found"
-                        ),
+                        c["found"],
                     ),
                     "url",
                     self.cfg.n_shards,
@@ -888,7 +947,9 @@ class CrawlEngine:
                 # (keys carried from frontier_log; the bucketed append
                 # aligns rows to canon_url buckets)
                 self.crawl_log.append(
-                    parsed.withColumn("round", F.lit(r)).select(*LOG_COLS)
+                    parsed.select(
+                        F.lit(r).alias("round"), *cols(LOG_COLS[1:])
+                    )
                 )
 
             def w_filters():

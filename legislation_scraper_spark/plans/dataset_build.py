@@ -55,7 +55,7 @@ def build_dataset(pages: DataFrame) -> DataFrame:
         "title",
         "year",
         "type",
-        T.ascii_slug(F.col("type")).alias("type_slug"),
+        T.slug_of("type").alias("type_slug"),
         "situation",
         "summary",
         "text",

@@ -31,12 +31,14 @@ maps, never rows.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import uuid
 from dataclasses import dataclass
 from functools import reduce
+from types import SimpleNamespace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -729,24 +731,23 @@ class BucketedLog(Table):
         bucket spec, so this is the store's one use of Spark's private
         API.  Listing up to 32 dirs launches no Spark job (Spark lists
         more in parallel, as a job); compaction keeps snapshots below."""
-        jvm, js = self.spark._jvm, self.spark._jsparkSession
-        seq, opt = jvm.PythonUtils.toSeq, jvm.scala.Option
-        relation = jvm.org.apache.spark.sql.execution.datasources.DataSource(
-            js, "parquet", seq(list(sets)),
-            opt.apply(js.parseDataType(schema.add("set", "string").json())),
-            seq([]),
-            opt.apply(jvm.org.apache.spark.sql.catalyst.catalog.BucketSpec(
-                self.n_buckets, seq([self.bucket_col]), seq([])
+        js, j = self.spark._jsparkSession, _jvm_members(self.spark._jvm)
+        relation = j.DataSource(
+            js, "parquet", j.toSeq(list(sets)),
+            j.some(js.parseDataType(schema.add("set", "string").json())),
+            j.toSeq([]),
+            j.some(j.BucketSpec(
+                self.n_buckets, j.toSeq([self.bucket_col]), j.toSeq([])
             )),
-            jvm.PythonUtils.toScalaMap({"basePath": self.data_dir}),
-            opt.empty(),
+            j.toScalaMap({"basePath": self.data_dir}),
+            j.none(),
         ).resolveRelation(True, False)
         return DataFrame(js.baseRelationToDataFrame(relation), self.spark)
 
     def _bucket_id(self):
         """Each row's bucket: pmod(murmur3(bucket_col), n_buckets), the
         function of the bucket spec and of ``repartition(n, col)``."""
-        return F.pmod(F.hash(F.col(self.bucket_col)), F.lit(self.n_buckets))
+        return _bucket_expr(self.bucket_col, self.n_buckets)
 
     def _write_set(
         self, df: DataFrame, partition_cols: list[str] | None
@@ -812,6 +813,32 @@ class BucketedLog(Table):
             if d.startswith("_staging_"):
                 shutil.rmtree(os.path.join(self.dir, d), ignore_errors=True)
         super().rollback(version)
+
+
+@functools.cache
+def _jvm_members(jvm) -> SimpleNamespace:
+    """The JVM classes and static methods ``BucketedLog._parquet``
+    calls, looked up once per gateway: each step of a path like
+    ``jvm.org.apache.spark...DataSource`` is a py4j reflection round
+    trip, and every read of a log goes through here.  The gateway
+    outlives a stopped SparkContext, so the handles stay valid."""
+    utils, option = jvm.PythonUtils, jvm.scala.Option
+    return SimpleNamespace(
+        DataSource=jvm.org.apache.spark.sql.execution.datasources.DataSource,
+        BucketSpec=jvm.org.apache.spark.sql.catalyst.catalog.BucketSpec,
+        toSeq=utils.toSeq,
+        toScalaMap=utils.toScalaMap,
+        some=option.apply,
+        none=option.empty,
+    )
+
+
+@functools.cache
+def _bucket_expr(col: str, n_buckets: int):
+    """``pmod(hash(col), n_buckets)``, memoized: a Column is an
+    unresolved expression tree bound to no DataFrame, so every append
+    reuses it."""
+    return F.pmod(F.hash(F.col(col)), F.lit(n_buckets))
 
 
 class Catalog:

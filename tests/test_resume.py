@@ -5,6 +5,7 @@ uninterrupted run's (SURVEY.md §5 test 3)."""
 from __future__ import annotations
 
 import collections
+import contextlib
 import dataclasses
 import os
 import threading
@@ -51,15 +52,38 @@ def reference(spark, world, tmp_path_factory):
     for r in range(40):
         before = _manifests(root)
         classes = _codegen_classes(spark)
-        m = eng.round(r)
+        with _py4j_commands() as sent:
+            m = eng.round(r)
         if m["selected"] == 0:
             return eng, rounds
         m["commits"] = collections.Counter(
             t for t, _ in _manifests(root) - before
         )
         m["codegen_classes"] = _codegen_classes(spark) - classes
+        m["py4j_commands"] = sent
         rounds.append(m)
     pytest.fail("reference crawl did not drain in 40 rounds")
+
+
+@contextlib.contextmanager
+def _py4j_commands():
+    """Count the py4j commands this process sends the JVM inside the
+    block, from any thread, by kind: the command's first letter (``c``
+    call, ``r`` reflection, ``i`` constructor, ``m`` memory)."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent: collections.Counter = collections.Counter()
+    lock = threading.Lock()
+    real = ClientServerConnection.send_command
+
+    def send_command(conn, command):
+        with lock:
+            sent[command[:1]] += 1
+        return real(conn, command)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ClientServerConnection, "send_command", send_command)
+        yield sent
 
 
 def _codegen_classes(spark) -> int:
@@ -218,6 +242,77 @@ def test_round_commits_each_table_once(reference):
     for tag in eng.catalog.checkpoints():
         versions = eng.catalog.load_checkpoint(tag)["versions"]
         assert set(versions) == set(ROUND_TABLES), tag
+
+
+# py4j commands other than "m" sent by each reference round from round 1
+# on (the fewest of them) when a round rebuilt all of its column
+# expressions and PySpark captured the Python call site of each
+ROUND_COMMANDS_REBUILT = 4942
+
+
+def test_round_sends_few_py4j_commands(reference):
+    """A round reuses the columns that depend only on configuration and
+    captures no call sites, so it sends at most 40% of the synchronous
+    py4j commands a round sent while it rebuilt them.  ``m`` commands
+    (the deletes py4j's finalizer sends) do not block a round and are
+    not counted."""
+    _, rounds = reference
+    sync = [
+        sum(n for k, n in m["py4j_commands"].items() if k != "m")
+        for m in rounds
+    ]
+    assert max(sync[1:]) <= 0.4 * ROUND_COMMANDS_REBUILT, sync
+
+
+def test_column_builders_are_memoized(spark, reference):
+    """Each memoized column builder returns the very same object on a
+    second call, also when its parameters are equal but new instances
+    (frozen dataclasses hash by value)."""
+    from legislation_scraper_spark import functions, tables
+    from legislation_scraper_spark.functions.text import slug_of
+    from legislation_scraper_spark.operators import fetch, politeness, seen
+
+    def params():
+        return seen.BloomParams.for_capacity(
+            CFG.filter_keys_per_shard, crawl.BLOOM_FPP
+        )
+
+    marker = CFG.search_marker
+    builders = {
+        "functions.cols": lambda: functions.cols(("host", "canon_url")),
+        "text.slug_of": lambda: slug_of("rec.type"),
+        "seen.url_key_columns": lambda: seen.url_key_columns(
+            "url", CFG.n_shards
+        ),
+        "seen._positions": lambda: seen._positions(params()),
+        "seen._build_columns": lambda: seen._build_columns(params()),
+        "seen._maybe_seen": lambda: seen._maybe_seen(params()),
+        "seen._or_merge": lambda: seen._or_merge(params().n_words),
+        "fetch._transport_exprs": lambda: fetch._transport_exprs(
+            fetch.FetchPolicy()
+        ),
+        "fetch._resolve_columns": fetch._resolve_columns,
+        "politeness._robots_columns": lambda: politeness._robots_columns(
+            CFG.round_window_ms
+        ),
+        "politeness._salted_key": lambda: politeness._salted_key(
+            CFG.salt_buckets
+        ),
+        "politeness._rank_columns": politeness._rank_columns,
+        "crawl._first_per_url_columns": lambda: (
+            crawl._first_per_url_columns(("found",))
+        ),
+        "crawl._parse_columns": lambda: crawl._parse_columns(
+            marker, spark.sparkContext
+        ),
+        "crawl._round_columns": lambda: crawl._round_columns(marker),
+        "tables._jvm_members": lambda: tables._jvm_members(spark._jvm),
+        "tables._bucket_expr": lambda: tables._bucket_expr(
+            "canon_url", CFG.frontier_buckets
+        ),
+    }
+    for name, build in builders.items():
+        assert build() is build(), name
 
 
 class _Crash(RuntimeError):
