@@ -855,16 +855,6 @@ def main() -> None:
         return
     queries, queries_ext, queries_runs = run_headline_queries()
     crawl = run_crawl_scaling()
-    if os.environ.get("SPARK_GRAFT_BENCH_CLUSTER", "1") == "1":
-        best16 = (
-            {"urls_per_sec": crawl["urls_per_sec_N16"]}
-            if "urls_per_sec_N16" in crawl
-            else None
-        )
-        try:
-            crawl["cluster"] = run_cluster_scaling(best16)
-        except Exception as exc:  # probe must not sink the bench line
-            crawl["cluster"] = {"error": str(exc)[:200]}
     full = {
         "metric": "headline_query_total_plus_crawl_throughput",
         "value": round(sum(queries.values()), 3),
@@ -877,6 +867,25 @@ def main() -> None:
         "hw_baseline": hw_baseline(),
         "pinned_cpusets": PIN_CPUS,
     }
+    # the line first without the cluster stage: a time limit hit inside
+    # that stage still leaves a parseable last line
+    _report(full)
+    if os.environ.get("SPARK_GRAFT_BENCH_CLUSTER", "1") == "1":
+        best16 = (
+            {"urls_per_sec": crawl["urls_per_sec_N16"]}
+            if "urls_per_sec_N16" in crawl
+            else None
+        )
+        try:
+            crawl["cluster"] = run_cluster_scaling(best16)
+        except Exception as exc:  # probe must not sink the bench line
+            crawl["cluster"] = {"error": str(exc)[:200]}
+        _report(full)
+
+
+def _report(full: dict) -> None:
+    """Write ``full`` to BENCH_DETAILS.json and print the compact
+    result line."""
     # Full results (per-run times for every query + every crawl run) go
     # to a sibling file; the PRINTED line is kept compact (<2000 chars)
     # because the driver records only a 2000-char tail of stdout — the
@@ -885,6 +894,7 @@ def main() -> None:
                            "BENCH_DETAILS.json")
     with open(details, "w") as f:
         json.dump(full, f, indent=1)
+    crawl, queries = full["crawl"], full["queries"]
     compact_crawl = {
         k: v for k, v in crawl.items()
         if not k.startswith(("runs_", "spin"))
@@ -903,8 +913,8 @@ def main() -> None:
         "value": full["value"],
         "unit": "sec",
         "queries": queries,
-        "queries_ext_total": round(sum(queries_ext.values()), 3),
-        "queries_ext_n": len(queries_ext),
+        "queries_ext_total": round(sum(full["queries_ext"].values()), 3),
+        "queries_ext_n": len(full["queries_ext"]),
         "sf": full["sf"],
         "crawl": compact_crawl,
         "hw_baseline": full["hw_baseline"],
@@ -915,7 +925,7 @@ def main() -> None:
     if len(line) > 1900:  # belt-and-braces: drop per-query detail first
         out["queries"] = {"total": full["value"]}
         line = json.dumps(out)
-    print(line)
+    print(line, flush=True)
 
 
 if __name__ == "__main__":

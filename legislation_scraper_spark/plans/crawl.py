@@ -55,6 +55,7 @@ test_seen_set_matches_simulator).
 from __future__ import annotations
 
 import functools
+from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -364,6 +365,9 @@ class CrawlEngine:
             filters_table=catalog.table("seen_filters"),
             keys_per_shard=self.cfg.filter_keys_per_shard,
         )
+        # the round's sink threads, kept from round to round: a new
+        # Python thread opens its own py4j connection and JVM thread
+        self._sink_pool = ThreadPoolExecutor(max_workers=6)
 
     @property
     def errors(self):
@@ -795,7 +799,10 @@ class CrawlEngine:
             self._maintain()
             self._maybe_expire(r)
             t = _mark("maintain", t)
-            pending = self.pending()
+            # one read of the frontier log: pending()'s input here, the
+            # admission anti-join's below
+            known = self.frontier.read()
+            pending = None if known is None else self.seen.filter_unseen(known)
             metrics = {"round": r, "selected": 0, "fetched": 0, "errors": 0,
                        "new_urls": 0, "pages": 0, "timings": timings}
             if extra_pending is not None:
@@ -901,7 +908,6 @@ class CrawlEngine:
                 ).repartition(self.cfg.frontier_buckets, "canon_url"),
                 "found",
             )
-            known = self.frontier.read()
             if known is not None:
                 # admit new URLs only: a sort-merge anti-join on the log's
                 # buckets (a broadcast would add a job a round)
@@ -917,8 +923,6 @@ class CrawlEngine:
             # jobs from one session; FIFO still fills free task slots).  On a
             # cluster this is the same pattern as concurrent writes to
             # independent Iceberg tables.
-            from concurrent.futures import ThreadPoolExecutor
-
             def _co(df):
                 # bound files-per-commit (see CrawlConfig.sink_coalesce)
                 return (
@@ -979,11 +983,9 @@ class CrawlEngine:
             sinks = [w_pages, w_log, w_filters]
             if self.host_edges is not None:
                 sinks.append(w_edges)
-            with ThreadPoolExecutor(max_workers=6) as pool:
-                futs = [pool.submit(fn) for fn in sinks]
-                n_new = pool.submit(w_links).result()
-                for f in futs:
-                    f.result()  # surface the first failure
+            futs = [self._sink_pool.submit(fn) for fn in (*sinks, w_links)]
+            wait(futs)  # every sink ends before the round returns or raises
+            *_, n_new = [f.result() for f in futs]  # raises the first failure
             t = _mark("appends", t)
 
             metrics.update(

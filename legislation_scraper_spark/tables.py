@@ -17,7 +17,8 @@ minimal, swappable stand-in with the same *semantics*:
   ``set=`` partitions of one ``data/`` root: no schema-inference job,
   and one ``FileScan`` for a table that never evolved.  A
   ``BucketedLog`` is stored the same way and differs only in that its
-  scan carries a bucket spec;
+  scan and its writes carry a bucket spec: one ``DataSource``
+  construction, used to read and to write;
 - each manifest carries per-partition row-count lineage, the
   cumulative row count and free-form metrics, mirroring Iceberg
   snapshot summaries.
@@ -662,10 +663,6 @@ class Table:
         }
 
 
-# staging partition column of a bucketed write: each row's bucket id
-BUCKET_DIR = "lss_bucket"
-
-
 class BucketedLog(Table):
     """Append-only log whose commits are BUCKETED by one column
     (Iceberg's ``bucket(N, col)`` partition transform analogue).
@@ -680,14 +677,15 @@ class BucketedLog(Table):
     shuffle.
 
     Storage is a ``Table``'s: each commit writes one file per bucket
-    into a fresh ``data/set=<id>/`` (see ``_stage``), and the manifest
-    names set dirs.  Only the read differs: every snapshot, current or
-    historical, reads its set dirs as ONE bucketed scan (``_parquet``),
-    so snapshots, time travel, rollback, compaction and expiry are
-    ``Table``'s own and the manifest is the log's only state: reading
-    or appending un-caches no plan over the log.  A ``_bucket_spec.json``
-    marker makes the storage self-describing — ``Catalog.table``
-    returns a ``BucketedLog`` for any table dir that carries one.
+    into a fresh ``data/set=<id>/`` through Spark's bucketed writer
+    (see ``_write_set``), and the manifest names set dirs.  Every
+    snapshot, current or historical, reads its set dirs as ONE bucketed
+    scan (``_parquet``), so snapshots, time travel, rollback,
+    compaction and expiry are ``Table``'s own and the manifest is the
+    log's only state: reading or appending un-caches no plan over the
+    log.  A ``_bucket_spec.json`` marker makes the storage
+    self-describing — ``Catalog.table`` returns a ``BucketedLog`` for
+    any table dir that carries one.
     """
 
     SPEC_FILE = "_bucket_spec.json"
@@ -724,121 +722,86 @@ class BucketedLog(Table):
                 d = json.load(f)
             self.bucket_col, self.n_buckets = d["bucket_col"], d["n_buckets"]
 
-    def _parquet(self, schema: StructType, sets: list[str]) -> DataFrame:
-        """The set dirs as one BUCKETED scan: a file relation given the
-        bucket spec, as a catalog table would give it, with ``set`` as
-        the partition column of ``data/``.  The public reader takes no
-        bucket spec, so this is the store's one use of Spark's private
-        API.  Listing up to 32 dirs launches no Spark job (Spark lists
-        more in parallel, as a job); compaction keeps snapshots below."""
+    def _source(self, paths: list[str], schema: StructType | None = None):
+        """A parquet ``DataSource`` over ``paths`` that carries the log's
+        bucket spec, as a catalog table's would.  The public reader and
+        writer take no bucket spec, so this is the store's one
+        ``DataSource`` construction, used to read and to write.
+        ``basePath`` makes ``set`` the partition column of ``data/``."""
         js, j = self.spark._jsparkSession, _jvm_members(self.spark._jvm)
-        relation = j.DataSource(
-            js, "parquet", j.toSeq(list(sets)),
-            j.some(js.parseDataType(schema.add("set", "string").json())),
+        return j.DataSource(
+            js, "parquet", j.toSeq(list(paths)),
+            j.some(js.parseDataType(schema.json())) if schema else j.none(),
             j.toSeq([]),
             j.some(j.BucketSpec(
                 self.n_buckets, j.toSeq([self.bucket_col]), j.toSeq([])
             )),
             j.toScalaMap({"basePath": self.data_dir}),
             j.none(),
-        ).resolveRelation(True, False)
-        return DataFrame(js.baseRelationToDataFrame(relation), self.spark)
+        )
 
-    def _bucket_id(self):
-        """Each row's bucket: pmod(murmur3(bucket_col), n_buckets), the
-        function of the bucket spec and of ``repartition(n, col)``."""
-        return _bucket_expr(self.bucket_col, self.n_buckets)
+    def _parquet(self, schema: StructType, sets: list[str]) -> DataFrame:
+        """The set dirs as one BUCKETED scan, with ``set`` as the
+        partition column of ``data/``.  Listing up to 32 dirs launches
+        no Spark job (Spark lists more in parallel, as a job);
+        compaction keeps snapshots below."""
+        relation = self._source(
+            sets, schema.add("set", "string")
+        ).resolveRelation(True, False)
+        js = self.spark._jsparkSession
+        return DataFrame(js.baseRelationToDataFrame(relation), self.spark)
 
     def _write_set(
         self, df: DataFrame, partition_cols: list[str] | None
     ) -> tuple[str | None, dict[str, int]]:
-        """As ``Table._write_set``, but an empty frame writes no set:
-        its commit adds none, so it neither lengthens the listing of
-        every later read nor brings the next compaction closer."""
+        """As ``Table._write_set``, through Spark's bucketed writer: it
+        names each file by its bucket (``part-…_<bucket>.c000…``) and
+        puts in it only that bucket's rows, whichever task wrote it.
+        An empty frame writes no set: its commit adds none, so it
+        neither lengthens the listing of every later read nor brings
+        the next compaction closer."""
         assert not partition_cols, "bucketed log: no dir partitions"
-        new_set = self._stage(df)
-        return new_set, _footer_lineage(new_set, None) if new_set else {}
-
-    def _stage(self, df: DataFrame) -> str | None:
-        """Write ``df`` as one file per bucket into a fresh set dir;
-        returns the dir, or None when ``df`` has no rows.
-
-        Why staging: Spark writes bucket files only through
-        ``saveAsTable``, into a catalog table, and a plain write
-        partitioned by bucket leaves one subdir per bucket, which a
-        bucketed scan does not read as buckets.
-
-        Mechanics: the staging write is partitioned by each row's
-        bucket (:meth:`_bucket_id`), so a file's bucket comes from its
-        rows, not from the task that wrote it (Spark drops the
-        ``repartition`` below for a frame already hash-partitioned on
-        the column at ``n`` partitions, and AQE may then coalesce the
-        shuffle left into fewer tasks than buckets).  The bucket id is
-        carried in the file NAME (Spark's BucketingUtils parses the
-        trailing ``_NNNNN`` group), so renaming the files into one set
-        dir turns plain parquet output into valid bucket files.  A set
-        dir is invisible until a manifest names it."""
-        staging = os.path.join(self.dir, f"_staging_{uuid.uuid4().hex}")
         new_set = os.path.join(self.data_dir, f"set={uuid.uuid4().hex}")
-        try:
-            (
-                # one task, so one file, per bucket
-                df.repartition(self.n_buckets, F.col(self.bucket_col))
-                .withColumn(BUCKET_DIR, self._bucket_id())
-                .write.partitionBy(BUCKET_DIR)
-                .mode("overwrite")
-                .parquet(staging)
-            )
-            for d in sorted(os.listdir(staging)):
-                if not d.startswith(f"{BUCKET_DIR}="):
-                    continue
-                b = int(d.partition("=")[2])
-                for f in sorted(os.listdir(os.path.join(staging, d))):
-                    if not f.startswith("part-"):
-                        continue
-                    stem, dot, ext = f.partition(".")
-                    os.makedirs(new_set, exist_ok=True)
-                    os.rename(
-                        os.path.join(staging, d, f),
-                        os.path.join(new_set, f"{stem}_{b:05d}{dot}{ext}"),
-                    )
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        return new_set if os.path.isdir(new_set) else None
+        # one task, so one file, per bucket
+        self._save(
+            df.repartition(self.n_buckets, F.col(self.bucket_col)), new_set
+        )
+        lineage = _footer_lineage(new_set, None)
+        if not lineage:
+            shutil.rmtree(new_set, ignore_errors=True)
+            return None, {}
+        return new_set, lineage
 
-    def rollback(self, version: int) -> None:
-        # a writer killed inside _stage leaves its staging dir behind;
-        # rollback runs only from resume
-        for d in os.listdir(self.dir):
-            if d.startswith("_staging_"):
-                shutil.rmtree(os.path.join(self.dir, d), ignore_errors=True)
-        super().rollback(version)
+    def _save(self, df: DataFrame, path: str) -> None:
+        """Write ``df`` into the new dir ``path`` as the log's bucket
+        files: the write ``DataFrameWriter.parquet`` would plan, given
+        the bucket spec, in one job.  A set dir is invisible until a
+        manifest names it."""
+        js, j = self.spark._jsparkSession, _jvm_members(self.spark._jvm)
+        j.ofRows(js, self._source([path]).planForWriting(
+            j.ErrorIfExists, df._jdf.logicalPlan()
+        ))
 
 
 @functools.cache
 def _jvm_members(jvm) -> SimpleNamespace:
-    """The JVM classes and static methods ``BucketedLog._parquet``
+    """The JVM classes, static methods and constants ``BucketedLog``
     calls, looked up once per gateway: each step of a path like
     ``jvm.org.apache.spark...DataSource`` is a py4j reflection round
-    trip, and every read of a log goes through here.  The gateway
-    outlives a stopped SparkContext, so the handles stay valid."""
+    trip, and every read and append of a log goes through here.  The
+    gateway outlives a stopped SparkContext, so the handles stay
+    valid."""
     utils, option = jvm.PythonUtils, jvm.scala.Option
     return SimpleNamespace(
         DataSource=jvm.org.apache.spark.sql.execution.datasources.DataSource,
         BucketSpec=jvm.org.apache.spark.sql.catalyst.catalog.BucketSpec,
+        ofRows=jvm.org.apache.spark.sql.classic.Dataset.ofRows,
+        ErrorIfExists=jvm.org.apache.spark.sql.SaveMode.ErrorIfExists,
         toSeq=utils.toSeq,
         toScalaMap=utils.toScalaMap,
         some=option.apply,
         none=option.empty,
     )
-
-
-@functools.cache
-def _bucket_expr(col: str, n_buckets: int):
-    """``pmod(hash(col), n_buckets)``, memoized: a Column is an
-    unresolved expression tree bound to no DataFrame, so every append
-    reuses it."""
-    return F.pmod(F.hash(F.col(col)), F.lit(n_buckets))
 
 
 class Catalog:

@@ -235,10 +235,11 @@ def test_blog_files_hold_their_buckets_rows(spark, tmp_path):
     """A bucket file's name comes from its rows.  An append of a frame
     already hash-partitioned on the bucket column at n_buckets
     partitions (a groupBy on it, with as many shuffle partitions as
-    buckets) lets Spark drop the staging repartition, and AQE may then
-    coalesce the shuffle left into fewer tasks than buckets.  Every
-    file still holds only its bucket's rows, and a bucketed groupBy
-    over this and an earlier append counts each key once."""
+    buckets) lets Spark drop the append's own repartition, and AQE may
+    then coalesce the shuffle left into fewer tasks than buckets.  The
+    bucketed writer still puts only its bucket's rows in each file, and
+    a bucketed groupBy over this and an earlier append counts each key
+    once."""
     n = 4
     conf = {"spark.sql.adaptive.enabled": "true",
             "spark.sql.shuffle.partitions": str(n)}
@@ -439,18 +440,3 @@ def test_blog_manifest_naming_files_is_refused(spark, tmp_path):
                             "nullable": True, "metadata": {}}]}}]}, f)
     with pytest.raises(ValueError, match="table old: .*rebuild"):
         log.read()
-
-
-def test_blog_rollback_removes_staging_dirs(spark, blog):
-    """A writer killed inside ``_stage`` leaves its ``_staging_*`` dir in
-    the table dir; rollback (run by resume) removes it and reads the
-    same rows."""
-    v = blog.current_version()
-    before = _rows(blog.read())
-    staging = os.path.join(blog.dir, "_staging_x")
-    spark.createDataFrame([("https://h9.leg.br/x", 1, "seen")],
-                          "url string, n int, st string").write.parquet(staging)
-    assert any(f.endswith(".parquet") for f in os.listdir(staging))
-    blog.rollback(v)
-    assert not os.path.exists(staging)
-    assert _rows(blog.read()) == before

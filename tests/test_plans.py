@@ -289,20 +289,18 @@ def test_frontier_sink_shuffles_canon_url_once(spark, tmp_path, monkeypatch):
     """A round's new links reach the bucketed frontier_log through ONE
     canon_url Exchange: the first-discovery grouping runs on the
     bucket partitioning, so the admission anti-join against the log
-    and the append's own repartition (tables.BucketedLog._stage) add
-    none, and the log is not broadcast.  8 shuffle partitions and
+    and the append's own repartition (tables.BucketedLog._write_set)
+    add none, and the log is not broadcast.  8 shuffle partitions and
     32 buckets, planned inside the round, where AQE is off.  The plan
-    checked is the one the frontier append hands to the parquet
+    checked is the one the frontier append hands to the bucketed
     writer."""
     import os
     import re
 
-    from pyspark.sql.readwriter import DataFrameWriter
-
     from legislation_scraper_spark.plans.crawl import (
         CrawlConfig, CrawlEngine,
     )
-    from legislation_scraper_spark.tables import Catalog
+    from legislation_scraper_spark.tables import BucketedLog, Catalog
 
     w = synth_world(spark, seed=9, docs_per_source=6, n_sources=2,
                     partitions=2)
@@ -314,15 +312,15 @@ def test_frontier_sink_shuffles_canon_url_once(spark, tmp_path, monkeypatch):
     )
     eng.bootstrap()
     plans, broadcasts = [], []
-    real_parquet = DataFrameWriter.parquet
+    real_save = BucketedLog._save
 
-    def parquet(writer, path, *a, **kw):
+    def save(log, df, path):
         if path.startswith(os.path.join(eng.frontier.dir, "")):
-            plans.append(_explain(writer._df, "simple"))
-            broadcasts.append(_broadcasts_outside_caches(writer._df))
-        return real_parquet(writer, path, *a, **kw)
+            plans.append(_explain(df, "simple"))
+            broadcasts.append(_broadcasts_outside_caches(df))
+        return real_save(log, df, path)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(BucketedLog, "_save", save)
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     assert eng.round(0)["new_urls"] > 0
     (plan,) = plans

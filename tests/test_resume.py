@@ -307,9 +307,6 @@ def test_column_builders_are_memoized(spark, reference):
         ),
         "crawl._round_columns": lambda: crawl._round_columns(marker),
         "tables._jvm_members": lambda: tables._jvm_members(spark._jvm),
-        "tables._bucket_expr": lambda: tables._bucket_expr(
-            "canon_url", CFG.frontier_buckets
-        ),
     }
     for name, build in builders.items():
         assert build() is build(), name
@@ -388,18 +385,18 @@ def test_round_plans_are_static(spark, world, reference, tmp_path):
     eng = _mk_engine(spark, world, str(tmp_path / "store"))
     eng.bootstrap()
     during = []
-    real_pending = eng.pending
+    real_filter = eng.seen.filter_unseen
 
-    def pending():
+    def filter_unseen(*a, **kw):
         during.append(spark.conf.get(key))
-        return real_pending()
+        return real_filter(*a, **kw)
 
     try:
         for prior in ("true", "false"):
             spark.conf.set(key, prior)
             assert eng.resume() == 0
             with pytest.MonkeyPatch.context() as mp:
-                mp.setattr(eng, "pending", pending)
+                mp.setattr(eng.seen, "filter_unseen", filter_unseen)
                 _arm_crash(mp, eng, "before_checkpoint")
                 with pytest.raises(_Crash):
                     eng.round(0)
@@ -410,6 +407,43 @@ def test_round_plans_are_static(spark, world, reference, tmp_path):
     finally:
         spark.conf.set(key, "true")
     assert during == ["false", "false"]
+
+
+def test_rounds_share_sink_threads_and_read_frontier_once(
+    spark, world, tmp_path
+):
+    """Consecutive rounds run their sinks on the engine's kept threads
+    (a new thread opens its own py4j connection and JVM thread): a pool
+    that keeps its threads starts one only when none is idle, so two
+    rounds together append from no more threads than one round has
+    sinks (one per owned table).  Each round reads ``frontier_log``
+    once: pending() and the admission anti-join share the read."""
+    eng = _mk_engine(spark, world, str(tmp_path / "store"))
+    eng.bootstrap()
+    threads, reads = set(), []
+    real_read = eng.frontier.read
+
+    def read(*a, **kw):
+        reads[-1] += 1
+        return real_read(*a, **kw)
+
+    def on_thread(real):
+        def append(*a, **kw):
+            threads.add(threading.current_thread())
+            return real(*a, **kw)
+
+        return append
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(eng.frontier, "read", read)
+        for table in eng.owned_tables().values():
+            mp.setattr(table, "append", on_thread(table.append))
+        for r in range(2):
+            reads.append(0)
+            assert eng.round(r)["selected"] > 0
+    assert reads == [1, 1]
+    assert threading.current_thread() not in threads
+    assert 0 < len(threads) <= len(eng.owned_tables()), threads
 
 
 def test_round_raises_on_task_failure(spark, world, tmp_path):
