@@ -1,4 +1,4 @@
-"""URL-seen set: partitioned Bloom pre-filter + exact anti-join.
+"""URL-seen set: partitioned Bloom probe gating one exact anti-join.
 
 The reference has no online dedup — it re-enumerates everything and
 deduplicates at dataset-build time (/root/reference/src/datasets/
@@ -14,14 +14,15 @@ variant):
    ``array<bigint>`` of 64-bit words, built, OR-merged and probed with
    built-in Spark expressions (no Python stage, nothing collected).
    Candidates probe only their shard's bitmap.  A Bloom *miss* proves
-   the URL is new (no false negatives) — those rows skip the expensive
-   exact join entirely.  At steady state most frontier candidates are
-   duplicates of already-seen URLs, so the pre-filter eliminates the
-   bulk of the anti-join's probe side.
-2. **Exact anti-join backstop** — Bloom *hits* (possible false
-   positives) are verified with a ``left_anti`` join against the exact
-   seen log on ``canon_url``; without bitmaps every candidate takes
-   it.  Correctness never depends on the filter (tests/test_urls_seen.py
+   the URL is new (no false negatives), so it can never be dropped.
+2. **Exact anti-join backstop** — every candidate goes through ONE
+   ``left_anti`` join against the exact seen log whose condition is
+   ``canon_url`` equality AND the probe's ``maybe_seen``: a miss
+   matches nothing and is kept, and a *hit* (possibly a false
+   positive) is kept only when the exact log lacks it.  The candidates
+   are read and probed once; there is no second branch to union.
+   Without bitmaps the join is the plain ``canon_url`` anti-join.
+   Correctness never depends on the filter (tests/test_urls_seen.py
    property-checks this).
 
 The crawl engine's exact log is its ``crawl_log`` (every attempted URL,
@@ -43,6 +44,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import cols
 from ..functions.urls import canonicalize_url, url_hash
 
 # bitmap bytes one filter-log file is sized for
@@ -186,14 +188,16 @@ def build_bloom_shards(
 
 @functools.cache
 def _maybe_seen(params: BloomParams) -> Column:
-    """Whether all k bits of the row's key are set in its shard's
-    ``bitmap``; False when the shard has no bitmap.  Memoized (see
-    above)."""
+    """``maybe_seen``: whether all k bits of the row's key are set in
+    its shard's ``bitmap``; False when the shard has no bitmap.
+    Memoized (see above)."""
     def is_set(pos: Column) -> Column:
         word = F.element_at("bitmap", F.shiftright(pos, 6).cast("int") + 1)
         return word.bitwiseAND(_bit(pos)) != 0
 
-    return F.coalesce(F.forall(_positions(params), is_set), F.lit(False))
+    return F.coalesce(
+        F.forall(_positions(params), is_set), F.lit(False)
+    ).alias("maybe_seen")
 
 
 @functools.cache
@@ -211,6 +215,18 @@ def _or_merge(n_words: int) -> tuple[Column, ...]:
     )
 
 
+@functools.cache
+def _seen_gate() -> tuple[Column, Column]:
+    """The exact side's key under its own name, which keeps the join
+    condition unambiguous, and :meth:`SeenSet.filter_unseen`'s
+    anti-join condition: that key equals ``canon_url`` AND the probe
+    flagged the row.  Memoized (see above)."""
+    return (
+        F.col("canon_url").alias("_seen_url"),
+        F.col("maybe_seen") & (F.col("canon_url") == F.col("_seen_url")),
+    )
+
+
 def bloom_probe(
     candidates: DataFrame,
     bloom_shards: DataFrame,
@@ -222,10 +238,11 @@ def bloom_probe(
     small and few) and tests its k bits: O(k) word lookups per row.  A
     shard without a bitmap has seen nothing.
     """
-    return (
-        candidates.join(F.broadcast(bloom_shards), "shard", "left")
-        .withColumn("maybe_seen", _maybe_seen(params))
-        .drop("bitmap", "n_keys")
+    keep = cols(("shard", *(c for c in candidates.columns if c != "shard")))
+    # one projection: the join's leading ``shard``, the candidates'
+    # other columns, the flag; the bitmap and its key count go
+    return candidates.join(F.broadcast(bloom_shards), "shard", "left").select(
+        *keep, _maybe_seen(params)
     )
 
 
@@ -236,8 +253,8 @@ class SeenSet:
     url_hash, shard)``.  The crawl engine passes its ``crawl_log`` (one
     row per attempt, bucketed by ``canon_url``), so the seen set is a
     projection of the attempts log rather than a table of its own.  A
-    pre-filter MISS proves the URL is new; HITS verify against the
-    exact log.
+    Bloom MISS proves the URL is new; only HITS can match in the exact
+    anti-join.
     """
 
     def __init__(
@@ -335,24 +352,26 @@ class SeenSet:
         wrong bitmap.  Keys are never recomputed here; ``url_col`` only
         keeps callers that still pass ``"canon_url"`` working.
 
-        Bloom pre-filter first (provably-new rows bypass the join), then
-        an exact ``left_anti`` on ``canon_url`` — the canonical URL
-        determines the other two keys — for the maybe-seen remainder.
-        With no bitmaps (no filter log, or an empty one) every candidate
-        takes the exact join.  With a bucketed exact log the join reads
-        it without an Exchange; only the candidates shuffle.
+        One pass: the Bloom probe adds ``maybe_seen``, then one
+        ``left_anti`` join on ``canon_url`` — the canonical URL
+        determines the other two keys — whose condition also requires
+        ``maybe_seen``, so a provably-new row matches nothing and is
+        kept, and a maybe-seen row is kept only if the exact log lacks
+        it.  With no bitmaps (no filter log, or an empty one) the join
+        is the plain anti-join, the exact oracle of the probed one.
+        With a bucketed exact log the join reads it without an
+        Exchange; only the candidates shuffle.
         """
         seen = self.df()
         if seen is None:
             return cand
-        exact = seen.select("canon_url")
         # OR-merge the persisted delta bitmaps: no rescan of the exact
         # seen table to build filters
         shards = self.merged_filters()
         if shards is None:
-            return cand.join(exact, "canon_url", "left_anti")
+            return cand.join(seen.select("canon_url"), "canon_url", "left_anti")
         probed = bloom_probe(cand, shards, self._params())
-        surely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-        verified_new = maybe.join(exact, "canon_url", "left_anti")
-        return surely_new.unionByName(verified_new)
+        seen_url, hit = _seen_gate()
+        return probed.join(seen.select(seen_url), hit, "left_anti").drop(
+            "maybe_seen"
+        )

@@ -6,9 +6,12 @@ database/saver.py:63-87) with a Spark-first incremental-batch loop
 (SURVEY.md §3 "Spark rebuild lifecycle"):
 
   round r:
-    pending    = frontier_log ⟂ crawl_log   (bloom pre-filter + anti-join)
+    pending    = frontier_log ⟂ crawl_log   (one anti-join gated by the
+                                             Bloom probe)
     selected   = robots ⋈ pending → window rank ≤ budget → salted repartition
-    results    = fetch(selected)            (mapInPandas transport)
+    results    = fetch(selected)            (JVM column expressions;
+                                             mapInPandas is the python
+                                             transport, their oracle)
     parsed     = parse_page(fetched bodies)  (one Arrow UDF: a document
                                              record or a search page's links)
     pages        += the documents                 (byte-parity)

@@ -270,19 +270,27 @@ def test_pending_exact_side_reads_bucketed_crawl_log(spark, tmp_path):
         assert not [op for op in ops[:j] if op.startswith("Exchange")], text
 
 
+def _plan_nodes(df):
+    """The nodes of ``df``'s physical plan (the current plan, under
+    AQE), not counting those inside a cached input's own plan."""
+    def walk(node):
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            yield from walk(node.executedPlan())
+            return
+        yield node
+        if name != "InMemoryTableScan":
+            kids = node.children()
+            for i in range(kids.size()):
+                yield from walk(kids.apply(i))
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
 def _broadcasts_outside_caches(df) -> int:
     """BroadcastExchange nodes of ``df``'s physical plan, not counting
     those inside a cached input's own plan."""
-    def walk(node) -> int:
-        name = node.nodeName()
-        if name == "InMemoryTableScan":
-            return 0
-        kids = node.children()
-        return int(name == "BroadcastExchange") + sum(
-            walk(kids.apply(i)) for i in range(kids.size())
-        )
-
-    return walk(df._jdf.queryExecution().executedPlan())
+    return sum(n.nodeName() == "BroadcastExchange" for n in _plan_nodes(df))
 
 
 def test_frontier_sink_shuffles_canon_url_once(spark, tmp_path, monkeypatch):
@@ -336,7 +344,9 @@ def test_frontier_sink_shuffles_canon_url_once(spark, tmp_path, monkeypatch):
 def test_seen_filter_plans_have_no_python_stage(spark, tmp_path):
     """The Bloom pre-filter is built, OR-merged and probed with Spark
     expressions: neither pending() over a multi-delta filter log nor the
-    delta build that add_filters appends runs a Python node."""
+    delta build that add_filters appends runs a Python node.  pending()
+    is one pass: it scans frontier_log once, and the probe gates one
+    anti-join instead of a union of two branches."""
     from legislation_scraper_spark.plans.crawl import (
         CrawlConfig, CrawlEngine,
     )
@@ -353,7 +363,16 @@ def test_seen_filter_plans_have_no_python_stage(spark, tmp_path):
     for r in range(2):
         eng.round(r)
     assert len(eng.seen.filters_table.snapshot().file_sets) == 2
-    plans = {"pending": _explain(eng.pending())}
+    pending = eng.pending()
+    plans = {"pending": _explain(pending)}
+    nodes = list(_plan_nodes(pending))
+    frontier_scans = [
+        n for n in nodes if n.getClass().getSimpleName() == "FileSourceScanExec"
+        and eng.frontier.data_dir + "/"
+        in n.relation().location().rootPaths().mkString(" ")
+    ]
+    assert len(frontier_scans) == 1, plans["pending"]
+    assert not [n for n in nodes if n.nodeName() == "Union"], plans["pending"]
 
     class Capture:
         def append(self, df):

@@ -188,6 +188,14 @@ def test_incremental_filter_state_equivalent(spark, tmp_path):
             r["url"] for r in ss.filter_unseen(keyed).select("url").collect()
         )
 
+    # both sides of the probe-gated anti-join are taken: misses that
+    # never meet the exact log and hits that it must verify
+    probed = bloom_probe(
+        with_url_key(df, "url", inc.n_shards), inc.merged_filters(),
+        inc._params(),
+    )
+    flags = {r["maybe_seen"] for r in probed.select("maybe_seen").collect()}
+    assert flags == {True, False}, flags
     expect = unseen(ref)
     assert unseen(inc) == expect
     # fold the delta log; results must not change
